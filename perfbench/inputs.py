@@ -132,9 +132,11 @@ def row_hash(df: DataFrame) -> tuple[int, int]:
     return int(r["n"]), int(r["h"])
 
 
-def state_digest(df: DataFrame, content_sha: str) -> tuple[int, int]:
-    """(rows, hash) over (key, lsn, sha256(content)) — the ingest check."""
-    return row_hash(df.select(*KEY_COLS, "lsn", F.col(content_sha).alias("content_sha")))
+def state_digest(df: DataFrame) -> tuple[int, int]:
+    """(rows, hash) of a CDC state — the ingest check: key, lsn and every
+    payload column, with ``content`` hashed (sha256) from ``df`` itself."""
+    return row_hash(df.select(*KEY_COLS, "lsn", "lang", "n_tokens", "quality", "content_sha",
+                              F.sha2(F.coalesce(F.col("content"), F.lit("")), 256).alias("content")))
 
 
 # Timed board leaves -> the layer rollup each belongs to. A subset of the

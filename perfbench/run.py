@@ -30,7 +30,7 @@ from contextlib import contextmanager, nullcontext  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-WORKLOADS = ("mor_update_heavy", "cow_update_heavy", "query_board")
+WORKLOADS = ("mor_update_heavy", "query_board")
 DRIVER_MEM = "4g"  # well below the 15 GB of RAM of the 4-core reference box
 # Host-speed probe: PROBE_ITERS sha256 passes over 1 MB on one thread take
 # PROBE_REF_S on the reference box (4 vCPUs, idle). End-to-end metrics are
@@ -364,7 +364,7 @@ def main() -> int:
         if args.workload == "query_board":
             result = workloads.run_board(ctx)
         else:
-            result = workloads.run_ingest(ctx, args.workload.split("_")[0])
+            result = workloads.run_mor(ctx)
     except Exception as e:  # noqa: BLE001 - report the run as failed, never hang
         import traceback
 
@@ -400,7 +400,7 @@ def main() -> int:
         speed = ctx.host_speed()
         raw = {"ingest_eps": result["ingest_eps"], "read_total_s": result["read_total_s"],
                "read_geomean_s": result["read_geomean_s"], "setup_s": setup_s}
-        e2e = {k: v / speed if k == "ingest_eps" else v * speed for k, v in raw.items()}
+        e2e = {k: _at_reference(k, v, speed) for k, v in raw.items()}
         print(f"  host speed {speed:.4f} x reference; metrics at reference speed (as measured)")
         for k, v in e2e.items():
             print(f"  {k:<28} {v:.4f} {END_TO_END[k]}  ({raw[k]:.4f})")
@@ -416,7 +416,7 @@ def main() -> int:
               f"ops_failed_frac={ctx.failed / attempted:.4f}")
         if args.trace:
             try:
-                metrics = _per_layer(ctx, result, load_before, out_dir, tag)
+                metrics = _per_layer(ctx, result, e2e, load_before, out_dir, tag)
             except Exception as e:  # noqa: BLE001 - a broken trace fails the run, never leaks files
                 import traceback
 
@@ -437,7 +437,7 @@ def main() -> int:
     return 0 if correct else 1
 
 
-def _per_layer(ctx, result: dict, load_before, out_dir: str, tag: str) -> dict:
+def _per_layer(ctx, result: dict, e2e: dict, load_before, out_dir: str, tag: str) -> dict:
     """The traced run's per-layer metrics; also writes spans and a summary."""
     import statistics
 
@@ -497,7 +497,7 @@ def _per_layer(ctx, result: dict, load_before, out_dir: str, tag: str) -> dict:
     v["env.tpch_q1_canary_s"] = det["tpch_q1_canary_s"]
 
     tr.dump(os.path.join(out_dir, f"{tag}-spans.jsonl"))
-    overhead = _overhead(result, out_dir, tag)
+    overhead = _overhead(e2e, result["detail"], ctx.host_speed(), out_dir, tag)
     print(f"  trace: {len(tr.spans)} spans; commit path covers {charged:.3f} of {wall:.3f} s replay wall")
     for name, s in sorted(names.items()):
         print(f"  span {name:<40} calls={s['calls']:<5} busy={s['busy_s']:.3f} s  self={s['self_s']:.3f} s")
@@ -508,15 +508,27 @@ def _per_layer(ctx, result: dict, load_before, out_dir: str, tag: str) -> dict:
     return {k: {"value": v[k], "unit": units[k]} for k in units}
 
 
-def _overhead(result: dict, out_dir: str, tag: str) -> str:
-    """Traced vs untraced ingest_eps and read_total_s, when the untraced
-    run of the same workload and seed left its result in ``out_dir``."""
+def _at_reference(name: str, value: float, speed: float) -> float:
+    """A measured metric at the reference host speed: rates divided by
+    the speed, times multiplied by it."""
+    return value / speed if name.endswith("_eps") else value * speed
+
+
+def _overhead(e2e: dict, detail: dict, speed: float, out_dir: str, tag: str) -> str:
+    """Traced vs untraced ingest_eps, read_total_s and (on the board)
+    board_total_s, all at the reference host speed, when the untraced run
+    of the same workload and seed left its result in ``out_dir``."""
     path = os.path.join(out_dir, f"{tag}-t0.json")
     if not os.path.exists(path):
         return "n/a (run the same workload and seed with --trace 0 first)"
     with open(path) as f:
-        base = json.load(f)["e2e"]
-    return ", ".join(f"{k} {result[k] / base[k] - 1:+.1%}" for k in ("ingest_eps", "read_total_s"))
+        base = json.load(f)
+    pairs = {k: (e2e[k], base["e2e"][k]) for k in ("ingest_eps", "read_total_s")}
+    if "board_total_s" in detail:
+        pairs["board_total_s"] = (_at_reference("board_total_s", detail["board_total_s"], speed),
+                                  _at_reference("board_total_s", base["detail"]["board_total_s"],
+                                                base["host_speed"]))
+    return ", ".join(f"{k} {traced / untraced - 1:+.1%}" for k, (traced, untraced) in pairs.items())
 
 
 if __name__ == "__main__":

@@ -31,6 +31,9 @@ PROBES = 4          # read_keys probe sets, half of them per read-back round
 MIN_ROUNDS = 2      # read-back / board rounds per run, at the least
 COMPACT_RESERVE_S = 3.0  # --seconds share kept for the MOR compaction
 SETUP_REPS = 3      # input preparation repeats; setup_s takes the median
+# Board runs per round of each ingest leaf: ingest_eps on the board rests on
+# that one streaming leaf, whose run time swings more than the others'.
+INGEST_LEAF_REPS = 2
 BOARD_SF = "sf0.001"
 
 
@@ -62,7 +65,7 @@ def _canary(ctx) -> float:
     return time.perf_counter() - t
 
 
-# -- ingest workloads -------------------------------------------------------
+# -- MOR ingest -------------------------------------------------------------
 
 def _gen_binlog(ctx, path: str, n_events: int, batch_events: int, seed: int) -> None:
     inputs.gen_change_events(
@@ -83,7 +86,7 @@ def _probe_sets(ctx, events, seed: int) -> list[list[tuple]]:
     return [[rng.choice(b) for b in bands] for _ in range(PROBES)]
 
 
-def _warm_up(ctx, events, mode: str) -> None:
+def _warm_up(ctx, events) -> None:
     """Untimed: replay the first two batches into a scratch table, so JIT
     compilation and Python-worker start-up are paid before the timed
     replay. The read paths warm up in the checks, which run on the real
@@ -92,10 +95,10 @@ def _warm_up(ctx, events, mode: str) -> None:
 
     table = create_cdc_table(os.path.join(ctx.work, "warm_table"), list(inputs.KEY_COLS),
                              num_buckets=N_BUCKETS)
-    replay_events(ctx.spark, table, events, winner_stages=[inputs.map_stage()], batch_ids=[0, 1], mode=mode)
+    replay_events(ctx.spark, table, events, winner_stages=[inputs.map_stage()], batch_ids=[0, 1], mode="mor")
 
 
-def run_ingest(ctx, mode: str) -> dict:
+def run_mor(ctx) -> dict:
     from docetl_spark.cdc import compact_state, create_cdc_table, read_changes, read_keys, read_state, replay_events
     from docetl_spark.lake.table import LakeTable
 
@@ -115,7 +118,7 @@ def run_ingest(ctx, mode: str) -> dict:
             # the first preparation runs cold; warm up before the others
             ctx.log("warm-up")
             t = time.perf_counter()
-            _warm_up(ctx, spark.read.parquet(binlog), mode)
+            _warm_up(ctx, spark.read.parquet(binlog))
             ctx.setup["warmup_s"] = time.perf_counter() - t
         else:
             shutil.rmtree(binlog)
@@ -134,7 +137,7 @@ def run_ingest(ctx, mode: str) -> dict:
     with ctx.phase("ingest"):
         t = time.perf_counter()
         metrics = replay_events(spark, table, events, winner_stages=[inputs.map_stage()],
-                                batch_ids=list(range(N_BATCHES)), mode=mode)
+                                batch_ids=list(range(N_BATCHES)), mode="mor")
         replay_s = time.perf_counter() - t
     ctx.stop_timed()
     if len([m for m in metrics if not m.skipped]) != N_BATCHES:
@@ -143,31 +146,29 @@ def run_ingest(ctx, mode: str) -> dict:
     # ---- untimed checks on the uncompacted table; they also warm the read
     # paths on this table before the timed reads ---------------------------
     ctx.log("checks")
-    oracle = inputs.final_state_oracle(events).withColumn(
-        "content_sha", F.sha2(F.coalesce(F.col("content"), F.lit("")), 256))
-    want = inputs.state_digest(oracle, "content_sha")
-    before = inputs.state_digest(read_state(spark, table), "content_sha")
+    oracle = inputs.map_stage()(inputs.final_state_oracle(events)).cache()
+    want = inputs.state_digest(oracle)
+    before = inputs.state_digest(read_state(spark, table))
     ctx.check(before == want, f"state {before} != oracle {want}")
     probed = spark.createDataFrame([k for p in probes for k in p], list(inputs.KEY_COLS)).distinct()
-    got = inputs.state_digest(read_keys(spark, table, probed), "content_sha")
-    exp = inputs.state_digest(oracle.join(probed, list(inputs.KEY_COLS), "left_semi"), "content_sha")
+    got = inputs.state_digest(read_keys(spark, table, probed))
+    exp = inputs.state_digest(oracle.join(probed, list(inputs.KEY_COLS), "left_semi"))
     ctx.check(got == exp, f"read_keys over every probe key: {got} != oracle {exp}")
+    oracle.unpersist()
     live_files = len(table.snapshot().all_files)
-    feed_rows = None
-    if mode == "mor":
-        feed = read_changes(spark, table, 1).select(*inputs.KEY_COLS, "lsn")
-        feed_rows, feed_h = inputs.row_hash(feed)
-        win_rows, win_h = inputs.row_hash(inputs.change_winners(events).select(*inputs.KEY_COLS, "lsn"))
-        committed = sum(m.upserts + m.deletes for m in metrics)
-        ctx.check(feed_rows == committed == win_rows and feed_h == win_h,
-                  f"feed rows {feed_rows} / committed {committed} / winners {win_rows}")
+    feed = read_changes(spark, table, 1).select(*inputs.KEY_COLS, "lsn")
+    feed_rows, feed_h = inputs.row_hash(feed)
+    win_rows, win_h = inputs.row_hash(inputs.change_winners(events).select(*inputs.KEY_COLS, "lsn"))
+    committed = sum(m.upserts + m.deletes for m in metrics)
+    ctx.check(feed_rows == committed == win_rows and feed_h == win_h,
+              f"feed rows {feed_rows} / committed {committed} / winners {win_rows}")
 
     # ---- timed: read-back rounds against the (uncompacted) table ------------
     # A round is one scan, one feed read and half of the probe sets; at
     # least MIN_ROUNDS run, more while the next one still fits --seconds
     # (less the compaction still to come).
     scans, lookups, feeds = [], [], []
-    budget = ctx.seconds - (COMPACT_RESERVE_S if mode == "mor" else 0.0)
+    budget = ctx.seconds - COMPACT_RESERVE_S
     ctx.start_timed(resume=True)
     rounds, rounds_start = 0, time.perf_counter()
     while rounds < MIN_ROUNDS or ctx.fits_another(rounds, rounds_start, budget):
@@ -177,21 +178,17 @@ def run_ingest(ctx, mode: str) -> dict:
             ctx.timed_op(scans, "cdc.replay.read_state", lambda: _noop(read_state(spark, table)))
             for pf in half:
                 ctx.timed_op(lookups, "cdc.replay.read_keys", lambda: _noop(read_keys(spark, table, pf)))
-            if mode == "mor":
-                ctx.timed_op(feeds, "cdc.changes.read_changes", lambda: _noop(read_changes(spark, table, 1)))
+            ctx.timed_op(feeds, "cdc.changes.read_changes", lambda: _noop(read_changes(spark, table, 1)))
 
     # ---- timed: compaction (MOR pays its deferred dedup here) ----------------
-    compact_s = 0.0
-    if mode == "mor":
-        ctx.attempt(1)
-        with ctx.phase("ingest"):
-            t = time.perf_counter()
-            compact_state(spark, table)
-            compact_s = time.perf_counter() - t
+    ctx.attempt(1)
+    with ctx.phase("ingest"):
+        t = time.perf_counter()
+        compact_state(spark, table)
+        compact_s = time.perf_counter() - t
     ctx.stop_timed()
-    if mode == "mor":
-        after = inputs.state_digest(read_state(spark, table), "content_sha")
-        ctx.check(after == before, f"state changed by compaction: {before} -> {after}")
+    after = inputs.state_digest(read_state(spark, table))
+    ctx.check(after == before, f"state changed by compaction: {before} -> {after}")
 
     ctx.log("history, canary")
     hist = table.history()
@@ -200,9 +197,7 @@ def run_ingest(ctx, mode: str) -> dict:
     write_amp = _dir_bytes(os.path.join(table.path, "data")) / _dir_bytes(binlog)
     canary = _canary(ctx)
 
-    kinds = {"scan_s": _median(scans), "lookup_p50_s": _median(lookups)}
-    if feeds:
-        kinds["feed_read_s"] = _median(feeds)
+    kinds = {"scan_s": _median(scans), "lookup_p50_s": _median(lookups), "feed_read_s": _median(feeds)}
     ctx.samples.update({"scan_s": scans, "lookup_s": lookups, "feed_read_s": feeds,
                         "commit_gap_s": gaps,
                         "batch_s": [m.duration_sec for m in metrics]})
@@ -259,9 +254,10 @@ def run_board(ctx) -> dict:
     while rounds < MIN_ROUNDS or ctx.fits_another(rounds, ctx.timed_start, ctx.seconds):
         rounds += 1
         for name in rng.sample(leaves, len(leaves)):
-            phase = "ingest" if name in inputs.BOARD_INGEST_LEAVES else "read"
-            with ctx.phase(phase):
-                ctx.timed_op(samples[name], f"board.{name}", lambda: _noop(qs[name](spark, data)))
+            ingest = name in inputs.BOARD_INGEST_LEAVES
+            with ctx.phase("ingest" if ingest else "read"):
+                for _ in range(INGEST_LEAF_REPS if ingest else 1):
+                    ctx.timed_op(samples[name], f"board.{name}", lambda: _noop(qs[name](spark, data)))
     ctx.stop_timed()
 
     med = {n: _median(s) for n, s in samples.items()}
