@@ -4,8 +4,9 @@ Everything a workload feeds the engine is defined here, copied rather than
 imported, so edits to ``docetl_spark/sources/testgen.py`` or ``bench.py``
 cannot move the benchmark:
 
-* ``gen_change_events`` / ``final_state_oracle`` — the binlog generator and
-  its max-LSN-per-key oracle (copies of ``sources/testgen.py``);
+* ``gen_change_events`` — the binlog generator (a copy of
+  ``sources/testgen.py``), and ``final_state_oracle`` / ``change_winners``,
+  its max-LSN oracles, in pandas so they share nothing with the engine;
 * ``map_stage`` — the DocETL-map winner stage of ``bench.py`` (sha256 +
   token count + pandas-UDF quality score);
 * ``BOARD_LEAVES`` — the timed query-board leaves, a subset of ``bench.py``'s
@@ -15,6 +16,9 @@ The engine receives only the generated binlog (a parquet directory).
 """
 
 from __future__ import annotations
+
+import hashlib
+import re
 
 import pandas as pd  # module-level so pandas-UDF type hints resolve
 from pyspark.sql import DataFrame, SparkSession
@@ -67,19 +71,72 @@ def gen_change_events(
     )
 
 
-def final_state_oracle(events: DataFrame) -> DataFrame:
-    """Reference final state: per key the max-LSN event wins; deletes drop
-    the key. A struct-max aggregate, independent of the engine."""
-    payload = [c for c in events.columns if c not in KEY_COLS and c != "lsn"]
-    won = events.groupBy(*KEY_COLS).agg(F.max(F.struct("lsn", *payload)).alias("w"))
-    out = won.select(*KEY_COLS, *[F.col(f"w.{c}").alias(c) for c in ["lsn", *payload]])
-    return out.filter(F.col("op") != "D").drop("op", "batch_id")
+STATE_COLS = (*KEY_COLS, "lsn", "lang", "content", "content_sha", "n_tokens", "quality")
 
 
-def change_winners(events: DataFrame) -> DataFrame:
-    """Per (key, batch) LWW winners: exactly the rows a MOR replay commits
-    as deltas, so exactly the rows of the change feed over those commits."""
-    return events.groupBy(*KEY_COLS, "batch_id").agg(F.max("lsn").alias("lsn"))
+def read_binlog(path: str) -> pd.DataFrame:
+    """The generated binlog (a small parquet directory), read in the driver."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(path).to_pandas()
+
+
+def final_state_oracle(events: pd.DataFrame) -> list[tuple]:
+    """Reference final state, run through the winner stage: per key the
+    max-LSN event wins and deletes drop the key. Computed in the driver with
+    pandas, independently of the engine; rows as ``STATE_COLS`` tuples,
+    sorted."""
+    won = events.sort_values("lsn").drop_duplicates(list(KEY_COLS), keep="last")
+    won = won[won["op"] != "D"]
+    content = won["content"].fillna("")
+    won = won.assign(content_sha=[hashlib.sha256(c.encode()).hexdigest() for c in content],
+                     n_tokens=[token_count(c) for c in content],
+                     quality=quality_score(content))
+    return sorted(won[list(STATE_COLS)].itertuples(index=False, name=None))
+
+
+def change_winners(events: pd.DataFrame) -> list[tuple]:
+    """Per (key, batch) LWW winners as sorted (*key, lsn) tuples: exactly
+    the rows a MOR replay commits as deltas, so exactly the rows of the
+    change feed over those commits."""
+    won = events.groupby([*KEY_COLS, "batch_id"], as_index=False)["lsn"].max()
+    return sorted(won[[*KEY_COLS, "lsn"]].itertuples(index=False, name=None))
+
+
+def collect_rows(df: DataFrame, cols=STATE_COLS) -> list[tuple]:
+    """A frame's rows as sorted tuples of ``cols``, for exact comparison."""
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def token_count(text: str) -> int:
+    """Python twin of the engine's ``token_count`` column function: split on
+    ASCII whitespace after trimming spaces; 0 for an empty string."""
+    t = text.strip(" ")
+    return len(re.split(r"\s+", t, flags=re.ASCII)) if t else 0
+
+
+def quality_score(content: pd.Series) -> pd.Series:
+    """The map stage's quality score, shared by its pandas UDF and the
+    oracle."""
+    s = content.fillna("")
+    n = s.str.len().clip(lower=1)
+    alpha = s.str.count(r"[A-Za-z]")
+    digit = s.str.count(r"[0-9]")
+    ws = s.str.count(r"\s")
+    upper = s.str.count(r"[A-Z]")
+    punct = s.str.count(r"[^\w\s]")
+    hexish = s.str.count(r"[0-9a-f]{8}")
+    repeats = s.str.count(r"(.)\1\1")
+    words = ws + 1
+    return (
+        (alpha / n) * 0.35
+        + (1.0 - digit / n) * 0.2
+        + (ws / n).clip(upper=0.2)
+        + (1.0 - upper / alpha.clip(lower=1)) * 0.1
+        + (1.0 - punct / words) * 0.1
+        + (1.0 - hexish / words).clip(lower=0.0) * 0.03
+        + (1.0 - repeats / n) * 0.02
+    )
 
 
 def map_stage():
@@ -87,35 +144,17 @@ def map_stage():
     expressions, a quality score as an Arrow-vectorized pandas UDF."""
     from pyspark.sql.functions import pandas_udf
 
-    from docetl_spark.functions.text import token_count
+    from docetl_spark.functions import text
 
     @pandas_udf("double")
     def quality(content: pd.Series) -> pd.Series:
-        s = content.fillna("")
-        n = s.str.len().clip(lower=1)
-        alpha = s.str.count(r"[A-Za-z]")
-        digit = s.str.count(r"[0-9]")
-        ws = s.str.count(r"\s")
-        upper = s.str.count(r"[A-Z]")
-        punct = s.str.count(r"[^\w\s]")
-        hexish = s.str.count(r"[0-9a-f]{8}")
-        repeats = s.str.count(r"(.)\1\1")
-        words = ws + 1
-        return (
-            (alpha / n) * 0.35
-            + (1.0 - digit / n) * 0.2
-            + (ws / n).clip(upper=0.2)
-            + (1.0 - upper / alpha.clip(lower=1)) * 0.1
-            + (1.0 - punct / words) * 0.1
-            + (1.0 - hexish / words).clip(lower=0.0) * 0.03
-            + (1.0 - repeats / n) * 0.02
-        )
+        return quality_score(content)
 
     def stage(df: DataFrame) -> DataFrame:
         c = F.coalesce(F.col("content"), F.lit(""))
         return (
             df.withColumn("content_sha", F.sha2(c, 256))
-            .withColumn("n_tokens", token_count(c))
+            .withColumn("n_tokens", text.token_count(c))
             .withColumn("quality", quality(c))
         )
 
@@ -132,13 +171,6 @@ def row_hash(df: DataFrame) -> tuple[int, int]:
     return int(r["n"]), int(r["h"])
 
 
-def state_digest(df: DataFrame) -> tuple[int, int]:
-    """(rows, hash) of a CDC state — the ingest check: key, lsn and every
-    payload column, with ``content`` hashed (sha256) from ``df`` itself."""
-    return row_hash(df.select(*KEY_COLS, "lsn", "lang", "n_tokens", "quality", "content_sha",
-                              F.sha2(F.coalesce(F.col("content"), F.lit("")), 256).alias("content")))
-
-
 # Timed board leaves -> the layer rollup each belongs to. A subset of the
 # 38 bench.py leaves sized so a run fits the benchmark's time budget; every
 # layer the board stands for keeps at least one leaf.
@@ -146,11 +178,8 @@ BOARD_LEAVES = {
     "tpch_q1": "tpch",
     "lang_id_docs": "functions.text",
     "simhash_docs": "functions.dedup",
-    "knn_cosine_top5": "functions.ann",
     "gather_hierarchy_docs": "operators",
-    "resolve_majority_canon": "operators",
     "doc_chunking_macro": "plans",
-    "cascade_filter_docs": "plans",
     "cdc_stream_lww": "streaming",
 }
 # Leaves that ingest the board's events table through the merge engine;
