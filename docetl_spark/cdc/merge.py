@@ -638,7 +638,7 @@ def _merge_apply_once(
             # Nothing to merge, still advance the fence atomically.
             new_snap = table.commit({}, set(), schema=evolved,
                                     properties={fence_prop: str(batch_id)},
-                                    summary={"operation": "merge", **metrics.to_dict()},
+                                    summary={"operation": "merge", "mode": mode, **metrics.to_dict()},
                                     expected_version=snap.version)
             metrics.snapshot_version = new_snap.version
             metrics.duration_sec = time.time() - t0

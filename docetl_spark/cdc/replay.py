@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import warnings
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -100,32 +101,48 @@ def read_keys(spark: SparkSession, table: LakeTable, keys: DataFrame) -> DataFra
     """Point lookup: live rows for the given key tuples, reading ONLY the
     buckets those keys hash into (partition pruning for key-equality
     predicates — an O(|keys|/num_buckets)-of-table scan instead of
-    O(table)). ``keys`` carries exactly the table's key columns; the
-    lookup set is assumed driver-small (it is collected to compute the
-    bucket list and broadcast into the semi-join)."""
+    O(table)). ``keys`` carries the table's key columns (extra columns
+    are ignored; key values are cast to the table's key types, so a
+    32-bit probe still hashes into a 64-bit key's bucket). The lookup
+    set is assumed driver-small.
+
+    The caller's frame is evaluated exactly once: its key columns are
+    collected through Arrow and de-duplicated in the driver. The lookup
+    frame is rebuilt from that result as a local relation, so the bucket
+    ids are computed by projecting ``bucket_expr`` over it in the driver
+    (no Spark job) and the broadcast of the key set ships rows the driver
+    already holds (no build job). Only the shared tail
+    (``read_keys_frame``: bucket scan, semi-join, MOR dedup) runs on the
+    cluster."""
     snap = table.snapshot()
-    key_rows = keys.select(*snap.key_cols).distinct().collect()
-    if not key_rows:
+    probe = keys.select(*[F.col(k).cast(snap.schema[k].dataType).alias(k) for k in snap.key_cols])
+    pdf = probe.toPandas().drop_duplicates()
+    if pdf.empty:
         return read_state(spark, table).limit(0)
-    lookup = spark.createDataFrame(key_rows, keys.select(*snap.key_cols).schema)
-    return read_keys_frame(spark, table, lookup, snap=snap)
+    lookup = spark.createDataFrame(pdf, probe.schema)
+    buckets = sorted({r[0] for r in lookup.select(table.bucket_expr(snap)).collect()})
+    return read_keys_frame(spark, table, lookup, snap=snap, buckets=buckets)
 
 
 def read_keys_frame(spark: SparkSession, table: LakeTable, keys: DataFrame,
-                    snap=None) -> DataFrame:
-    """Bucket-pruned point lookup with a DISTRIBUTED key frame: the
-    shared read-repair tail of every point lookup (``read_keys``, the
-    dedup ingest's candidate fetch, the stored-ANN candidate fetch).
-    Reads only the hash buckets the keys land in, broadcast-semi-joins
-    the (bounded) key set so wide rows never shuffle, LWW-dedups MOR
-    deltas and drops tombstones. Only the distinct bucket ids are
-    collected (≤ num_buckets ints); ``keys`` must carry exactly the
-    table's key columns."""
+                    snap=None, buckets: list[int] | None = None) -> DataFrame:
+    """Bucket-pruned point lookup: the shared read-repair tail of every
+    point lookup (``read_keys``, the dedup ingest's candidate fetch, the
+    stored-ANN candidate fetch). Reads only the hash buckets the keys
+    land in, broadcast-semi-joins the (bounded) key set so wide rows
+    never shuffle, LWW-dedups MOR deltas and drops tombstones; ``keys``
+    must carry exactly the table's key columns.
+
+    ``buckets`` is the precomputed bucket list of ``keys`` (``read_keys``
+    derives it in the driver from its local key relation). Distributed
+    callers leave it None: the distinct bucket ids are then collected
+    from ``keys`` (≤ num_buckets ints)."""
     snap = snap or table.snapshot()
-    buckets = sorted({
-        r["_b"]
-        for r in keys.select(table.bucket_expr(snap).alias("_b")).distinct().collect()
-    })
+    if buckets is None:
+        buckets = sorted({
+            r["_b"]
+            for r in keys.select(table.bucket_expr(snap).alias("_b")).distinct().collect()
+        })
     df = table.read_buckets(spark, [b for b in buckets if b in snap.files], snap)
     df = df.join(F.broadcast(keys), on=snap.key_cols, how="left_semi")
     if snap.properties.get(DELTA_PROP) == "true":
@@ -259,6 +276,16 @@ def replay_events(
     )
 
 
+def _speculation_failed(what: str, batch_id: int, exc: Exception) -> None:
+    """Say that speculative work for ``batch_id`` raised and that the batch
+    falls back to the classic merge (which re-derives everything itself)."""
+    warnings.warn(
+        f"{what} for batch {batch_id} failed with {type(exc).__name__}: {exc}; "
+        "falling back to the classic merge",
+        RuntimeWarning, stacklevel=3,
+    )
+
+
 def _replay_groups(
     spark: SparkSession,
     table: LakeTable,
@@ -276,7 +303,8 @@ def _replay_groups(
     runs in a helper thread WHILE batch i's write job executes, hiding one
     of the two serial jobs per micro-batch. merge_apply validates the
     prefetch against its own snapshot (bucket fingerprint + batch id) and
-    silently recomputes if a compaction/rebucket invalidated it. MOR mode
+    silently recomputes if a compaction/rebucket invalidated it; a prefetch
+    that raises is recomputed too, with a RuntimeWarning. MOR mode
     upgrades to full write pipelining (_replay_mor_pipelined)."""
     from concurrent.futures import ThreadPoolExecutor
 
@@ -297,8 +325,10 @@ def _replay_groups(
             if fut is not None:
                 try:
                     pre = fut.result()
-                except Exception:
-                    pre = None  # prefetch is an optimization, never a failure
+                except Exception as exc:
+                    # prefetch is an optimization, never a failure
+                    _speculation_failed("stats prefetch", bid, exc)
+                    pre = None
             if i < len(groups):
                 nxt = groups[i]
                 fut = pool.submit(compute_batch_stats, table, batch_df(nxt), int(max(nxt)), stages)
@@ -339,7 +369,9 @@ def _replay_mor_pipelined(
     to serial replay. A prepare whose assumptions drift (in-flight schema
     evolution, rebucket) is discarded — its files were never referenced —
     and the batch re-runs through the classic serial merge; later prepares
-    restart from the refreshed snapshot. Disable with
+    restart from the refreshed snapshot. A prepare that RAISES takes the
+    same fallback, with a RuntimeWarning (a genuinely bad batch then fails
+    in the classic merge, before any commit). Disable with
     SPARK_GRAFT_MOR_PIPELINE=0."""
     from collections import deque
     from concurrent.futures import ThreadPoolExecutor
@@ -365,7 +397,11 @@ def _replay_mor_pipelined(
             futs.append(submit(g))
         for i, group in enumerate(groups, start=1):
             bid = int(max(group))
-            prep = futs.popleft().result()
+            try:
+                prep = futs.popleft().result()
+            except Exception as exc:
+                _speculation_failed("speculative prepare", bid, exc)
+                prep = None
             m = commit_prepared_merge(table, prep) if prep is not None else None
             if m is None:
                 # assumptions drifted (or fence already past): classic merge

@@ -266,7 +266,7 @@ def knn_lsh(
 
 
 def _recall_against_brute(
-    c: DataFrame, q: DataFrame, k: int, pairs: DataFrame, q_rows: list | None = None,
+    c: DataFrame, q: DataFrame, k: int, pairs: DataFrame, q_rows: list | None,
 ) -> DataFrame:
     """Per-query recall@k of a candidate-pair blocking against brute force,
     from ONE scored frame: normalize once, score every (query, corpus)
@@ -289,12 +289,15 @@ def _recall_against_brute(
 
     recall@k = hits / |brute top-k|, NOT hits / k: a query with fewer
     than k scored neighbors (tiny corpus, k > corpus-1) must still be
-    able to reach recall 1.0."""
+    able to reach recall 1.0.
+
+    ``q_rows`` is the caller's one bounded collect of the query sample
+    (``_collect_queries_raw``); None means the set is over
+    ``_MQ_COLLECT_BOUND``, so scoring goes straight to the crossJoin
+    without collecting again."""
     from pyspark.sql import types as T
 
-    if q_rows is None:
-        q_rows = _collect_queries(q)
-    scored = _mq_scored(c, q, rows=q_rows)
+    scored = _mq_scored(c, q, rows=q_rows) if q_rows is not None else None
     if scored is None:
         scored = (
             c.crossJoin(F.broadcast(q))

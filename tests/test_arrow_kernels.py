@@ -252,3 +252,34 @@ def test_mq_scored_bit_identical_to_crossjoin_cosine(spark):
     for key, want in cross.items():
         got = kernel_raw[key]
         assert (got is None and want is None) or got.hex() == want.hex(), key
+
+
+def test_recall_over_collect_bound_collects_queries_once(spark, monkeypatch):
+    # over the collect bound the certificate scores through the crossJoin
+    # after ONE bounded query collect, and its recalls equal the kernel path's
+    from docetl_spark.functions import ann
+
+    rng = np.random.RandomState(21)
+    rows = [(i, [float(x) for x in rng.randn(8)]) for i in range(30)]
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+
+    def recalls():
+        rec = ann.lsh_recall_at_k(df, df.filter("id < 6"), "id", "v", dim=8, k=5, planes=4, tables=2)
+        return sorted(tuple(r) for r in rec.collect())
+
+    want = recalls()  # 6 queries: under the default bound, kernel path
+    calls = []
+
+    def counted(name):
+        real = getattr(ann, name)
+
+        def wrapper(*args):
+            calls.append(name)
+            return real(*args)
+        return wrapper
+
+    for name in ("_collect_queries", "_collect_queries_raw"):
+        monkeypatch.setattr(ann, name, counted(name))
+    monkeypatch.setattr(ann, "_MQ_COLLECT_BOUND", 4)
+    assert recalls() == want
+    assert calls == ["_collect_queries_raw"]

@@ -325,22 +325,81 @@ def test_rebucket_with_mor_deltas_then_compact(spark, tmp_path, events):
     assert state_hashes(read_state(spark, table)) == want
 
 
+def _lookup_probe(spark, events):
+    """Probe keys covering every lookup case, duplicates included:
+    tombstoned keys, keys whose newest version sits in a later batch (a
+    later delta on MOR), and keys that never existed."""
+    ev = events.select(*KEYS, "lsn", "op", "batch_id").toPandas()
+    last = ev.sort_values("lsn").groupby(KEYS, as_index=False).tail(1)
+    first_batch = ev.groupby(KEYS)["batch_id"].min().rename("first")
+    last = last.join(first_batch, on=KEYS)
+    tomb = last[last["op"] == "D"][KEYS].head(3)
+    later = last[(last["op"] != "D") & (last["batch_id"] > last["first"])][KEYS].head(4)
+    assert len(tomb) == 3 and len(later) == 4
+    keys = [tuple(r) for r in tomb.itertuples(index=False)]
+    keys += [tuple(r) for r in later.itertuples(index=False)] * 2
+    keys += [("no-such", "k", "v"), ("no-such", "k", "w")]
+    return spark.createDataFrame(keys, "repo string, path string, commit string")
+
+
+def _jobs_in(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_read_keys_bucket_pruned_lookup(spark, tmp_path, events):
+    from docetl_spark.cdc import compact_state, read_keys
+
+    probe = _lookup_probe(spark, events)
+    want = final_state_oracle(events).join(probe.distinct(), on=KEYS, how="left_semi")
+    for layout in ("mor", "mor_compacted", "cow"):
+        table = create_cdc_table(str(tmp_path / layout), KEYS, num_buckets=16)
+        replay_events(spark, table, events, mode="cow" if layout == "cow" else "mor")
+        if layout == "mor_compacted":
+            compact_state(spark, table)
+        assert table.snapshot().properties.get("cdc.has-deltas", "false") == str(layout == "mor").lower()
+
+        got = read_keys(spark, table, probe)
+        assert state_hashes(got) == state_hashes(want), layout
+        assert sorted(got.select(*KEYS, "lsn").collect()) == sorted(want.select(*KEYS, "lsn").collect())
+        assert got.count() == 4  # one row per live key: duplicates, tombstones and ghosts add none
+
+        full = read_state(spark, table)
+        some = full.select(*KEYS).orderBy(*KEYS).limit(5)
+        assert state_hashes(read_keys(spark, table, some)) == state_hashes(
+            full.join(some, on=KEYS, how="left_semi"))
+        # empty lookup
+        assert read_keys(spark, table, probe.limit(0)).count() == 0
+
+        if layout == "mor":
+            # one key collect + the bucket scan and MOR dedup; routing the
+            # buckets and broadcasting the key set start no job
+            n = _jobs_in(spark, "read_keys_mor",
+                         lambda: read_keys(spark, table, probe).write.format("noop").mode("overwrite").save())
+            assert n <= 4, n
+
+
+def test_read_keys_int_keyed_table(spark, tmp_path):
     from docetl_spark.cdc import read_keys
 
-    table = create_cdc_table(str(tmp_path / "t"), KEYS, num_buckets=16)
-    replay_events(spark, table, events)
-    full = read_state(spark, table)
-    some = full.select(*KEYS).orderBy(*KEYS).limit(5)
-    got = read_keys(spark, table, some)
-    assert state_hashes(got) == state_hashes(full.join(some, on=KEYS, how="left_semi"))
-    # a deleted/absent key returns nothing
-    import pyspark.sql.functions as F2
-
-    ghost = spark.createDataFrame([("no-such", "k", "v")], "repo string, path string, commit string")
-    assert read_keys(spark, table, ghost).count() == 0
-    # empty lookup
-    assert read_keys(spark, table, ghost.limit(0)).count() == 0
+    table = create_cdc_table(str(tmp_path / "t"), ["doc_id"], num_buckets=4, key_types={"doc_id": "int"})
+    rows = [(i, 0, "U", i, f"v{i}") for i in range(20)] + [(100 + i, 1, "D", i, None) for i in range(3)]
+    batch = spark.createDataFrame(rows, "lsn long, batch_id long, op string, doc_id long, content string")
+    merge_apply(spark, table, batch.filter("batch_id = 0"), 0, mode="mor")
+    merge_apply(spark, table, batch.filter("batch_id = 1"), 1, mode="mor")
+    # the "int" key type is 64-bit; a 32-bit probe hashes differently, so
+    # it must be cast to the key type before routing (6 and 14 sit in a
+    # bucket that none of the 32-bit probe hashes picks)
+    probe = spark.createDataFrame([(1,), (6,), (6,), (14,), (99,)], "doc_id int")
+    assert dict(read_keys(spark, table, probe).select("doc_id", "content").collect()) == {
+        6: "v6", 14: "v14",
+    }
+    assert read_keys(spark, table, probe.limit(0)).count() == 0
 
 
 def test_replay_mor_periodic_compaction(spark, tmp_path, events):

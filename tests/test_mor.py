@@ -4,6 +4,7 @@ The CoW/MOR pair mirrors Iceberg v2's copy-on-write vs merge-on-read
 table modes; both must produce identical logical state for any stream.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from docetl_spark.cdc import compact_state, create_cdc_table, merge_apply, read_state, replay_events
@@ -152,3 +153,66 @@ def test_mor_pipelined_equals_serial_replay(spark, tmp_path, monkeypatch):
     # fenced redelivery under the pipeline: a second replay is a no-op
     m2 = replay_events(spark, t_pipe, events, mode="mor", winner_stages=stage)
     assert m2 == [] and t_pipe.snapshot().version == sp.version
+
+
+def test_failed_prepare_falls_back_to_classic_merge(spark, tmp_path, monkeypatch):
+    # a speculative prepare that raises must not abort the replay: the
+    # batch runs through the classic merge, with a warning naming it
+    import docetl_spark.cdc.merge as merge_mod
+
+    events = _events(spark)
+    monkeypatch.delenv("SPARK_GRAFT_MOR_PIPELINE", raising=False)
+    t_ok = create_cdc_table(str(tmp_path / "ok"), KEYS, num_buckets=4)
+    replay_events(spark, t_ok, events, mode="mor")
+
+    real = merge_mod.prepare_mor_merge
+
+    def flaky(spark, table, batch, batch_id, *args, **kwargs):
+        if batch_id == 2:
+            raise RuntimeError("injected prepare fault")
+        return real(spark, table, batch, batch_id, *args, **kwargs)
+
+    monkeypatch.setattr(merge_mod, "prepare_mor_merge", flaky)
+    t_bad = create_cdc_table(str(tmp_path / "bad"), KEYS, num_buckets=4)
+    with pytest.warns(RuntimeWarning, match=r"prepare for batch 2 failed with RuntimeError"):
+        m = replay_events(spark, t_bad, events, mode="mor")
+
+    assert [x.batch_id for x in m] == [0, 1, 2, 3] and not any(x.skipped for x in m)
+    cols = [*KEYS, "lsn", "content"]
+    assert df_rows(read_state(spark, t_bad).select(*cols)) == df_rows(read_state(spark, t_ok).select(*cols))
+    sb, so = t_bad.snapshot(), t_ok.snapshot()
+    assert sb.properties["cdc.last-batch-id"] == so.properties["cdc.last-batch-id"] == "3"
+    assert sb.version == so.version
+
+
+def test_failed_stats_prefetch_warns_and_recomputes(spark, tmp_path, monkeypatch):
+    import docetl_spark.cdc.merge as merge_mod
+
+    events = _events(spark)
+
+    def broken(table, batch, batch_id, stages=()):
+        raise OSError("injected prefetch fault")
+
+    monkeypatch.setattr(merge_mod, "compute_batch_stats", broken)
+    table = create_cdc_table(str(tmp_path / "t"), KEYS, num_buckets=4)
+    with pytest.warns(RuntimeWarning, match=r"stats prefetch for batch 1 failed with OSError"):
+        m = replay_events(spark, table, events)
+    assert [x.batch_id for x in m] == [0, 1, 2, 3]
+    got = df_rows(read_state(spark, table).select(*KEYS, "lsn", "content"))
+    assert got == df_rows(final_state_oracle(events).select(*KEYS, "lsn", "content"))
+
+
+def test_empty_batch_history_matches_across_replay_paths(spark, tmp_path, monkeypatch):
+    # batch 2 has no events: both replay paths commit a fence-advance-only
+    # merge, and the history records must not say which path ran it
+    events = _events(spark).filter(F.col("batch_id") != 2)
+    summaries = []
+    for pipeline in ("1", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_MOR_PIPELINE", pipeline)
+        table = create_cdc_table(str(tmp_path / f"p{pipeline}"), KEYS, num_buckets=4)
+        m = replay_events(spark, table, events, batch_ids=[0, 1, 2, 3], mode="mor")
+        assert [x.keys_in_batch == 0 for x in m] == [False, False, True, False]
+        (rec,) = [h for h in table.history() if h["summary"].get("batch_id") == 2]
+        summaries.append(rec["summary"])
+    pipe, ser = summaries
+    assert (pipe["operation"], pipe["mode"]) == (ser["operation"], ser["mode"]) == ("merge", "mor")
