@@ -43,6 +43,7 @@ import glob
 import os
 import time
 import uuid
+import warnings
 from dataclasses import dataclass, field, asdict
 from typing import Callable, Iterable
 
@@ -168,12 +169,10 @@ def _widen_rewrite(spark: SparkSession, table, snap, evolved: T.StructType):
     Carries MOR deltas/tombstones verbatim (rows are cast, never
     collapsed). No fence change: a crash after this commit leaves a
     correct, merely-rewritten table."""
-    import uuid as _uuid
-
     df = _align(table.read(spark), evolved)
     new_spec = Snapshot(**{**snap.__dict__, "schema": evolved})
     df = df.withColumn("_bucket", table.bucket_expr(new_spec))
-    tag = f"widen{snap.version + 1:08d}-{_uuid.uuid4().hex[:8]}"
+    tag = f"widen{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
     new_files = table.write_bucket_files(df, new_spec, tag, repartition=False)
     return table.commit(
         new_files,
@@ -245,14 +244,26 @@ def compute_batch_stats(
     against the CURRENT snapshot's bucket function. Pure batch-side: safe
     to run while an earlier batch is still committing."""
     snap = table.snapshot()
-    for stage in stages:
-        batch = stage(batch)
-    wk = _winning_keys(batch, snap.key_cols)
+    wk = _winning_keys(_staged(batch, stages), snap.key_cols)
     rows = _per_bucket_stats(wk, table, snap).collect()
     return PrecomputedStats(
         batch_id=batch_id, key_cols=tuple(snap.key_cols),
         num_buckets=snap.num_buckets, rows=rows,
     )
+
+
+def _staged(df: DataFrame, stages: Iterable[TransformStage]) -> DataFrame:
+    for stage in stages:
+        df = stage(df)
+    return df
+
+
+def _fence(snap: Snapshot, fence_prop: str) -> int:
+    return int(snap.properties.get(fence_prop, "-1"))
+
+
+def _skipped(batch_id: int, snap: Snapshot) -> MergeMetrics:
+    return MergeMetrics(batch_id=batch_id, skipped=True, snapshot_version=snap.version)
 
 
 def _winning_keys(batch: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -279,22 +290,189 @@ def _per_bucket_stats(wk: DataFrame, table: LakeTable, snap: Snapshot) -> DataFr
     )
 
 
+def _probe(snap: Snapshot, batch: DataFrame, stages, winner_stages) -> tuple[DataFrame, T.StructType]:
+    """Run the batch ``stages`` and derive the schema the merge commits
+    under. Schema evolution must account for winner-stage output columns
+    too: they are probed against an empty frame (plan-only, no job).
+    Returns (staged batch, evolved schema)."""
+    batch = _staged(batch, stages)
+    staged_empty = _staged(batch.limit(0), winner_stages)
+    if any(c.lower() == "_bucket" for c in staged_empty.columns):
+        # the write path overwrites _bucket with the hash-bucket id and the
+        # partitioned write then strips it — a data column named _bucket
+        # would be silently destroyed, so refuse it loudly
+        raise SchemaError(
+            "'_bucket' is a reserved lake column (the merge overwrites it "
+            "with the hash-bucket id); rename it upstream"
+        )
+    payload_fields = [f for f in staged_empty.schema.fields if f.name not in CONTROL_COLS]
+    incoming = T.StructType(
+        payload_fields
+        + [T.StructField("lsn", T.LongType(), True), T.StructField(DELETED_COL, T.BooleanType(), True)]
+    )
+    return batch, merge_schemas(snap.schema, incoming)
+
+
+def _batch_stats(table: LakeTable, snap: Snapshot, wk: DataFrame, batch_id: int,
+                 precomputed: PrecomputedStats | None, t0: float) -> tuple[MergeMetrics, list[int], bool]:
+    """Phase-1 stats -> (metrics, affected buckets, duplicate-LSN keys?).
+
+    One collect serves both lineage stats and the affected-bucket list:
+    per-bucket partials (<= num_buckets rows) combined driver side. A
+    valid PrecomputedStats (same batch, same bucket function — see
+    replay_events' stats-ahead pipelining) skips the collect entirely:
+    its job already ran overlapped with the previous batch's write.
+
+    Keys with a repeated LSN inside the batch are detected for free in
+    the same collect: the (key, lsn) join-back would keep BOTH tying rows,
+    so the winner set then gets a deterministic struct-max tiebreak."""
+    if (
+        precomputed is not None
+        and precomputed.batch_id == batch_id
+        and precomputed.key_cols == tuple(snap.key_cols)
+        and precomputed.num_buckets == snap.num_buckets
+    ):
+        rows = precomputed.rows
+    else:
+        rows = _per_bucket_stats(wk, table, snap).collect()
+    counts = {r["_bucket"]: r["keys"] for r in rows}
+    n_keys = sum(counts.values())
+    n_del = int(sum(r["dels"] for r in rows))
+    metrics = MergeMetrics(
+        batch_id=batch_id,
+        events_in=int(sum(r["events"] for r in rows)),
+        keys_in_batch=n_keys,
+        upserts=n_keys - n_del,
+        deletes=n_del,
+        buckets_touched=len(counts),
+        min_lsn=min((r["min_lsn"] for r in rows), default=None),
+        max_lsn=max((r["max_lsn"] for r in rows), default=None),
+        stats_sec=time.time() - t0,
+        bucket_rows={str(b): int(c) for b, c in counts.items()},
+    )
+    return metrics, sorted(counts), int(sum(r["dup_lsn_keys"] for r in rows)) > 0
+
+
+def _bcast(df: DataFrame, metrics: MergeMetrics, limit: int) -> DataFrame:
+    return F.broadcast(df) if metrics.keys_in_batch <= limit else df
+
+
+def _select_winners(
+    batch: DataFrame, won: DataFrame, key_cols: list[str], metrics: MergeMetrics,
+    ties: bool, limit: int, winner_stages, evolved: T.StructType,
+    cur_beats: DataFrame | None = None, single_phase: bool = False,
+) -> DataFrame:
+    """Phase 2: the winning payload rows of ``batch``, winner-staged and
+    aligned to ``evolved`` with the tombstone flag set. ``won`` holds the
+    winning (key, lsn) pairs; ``cur_beats`` the keys whose stored version
+    beats the batch (CoW against current state only).
+
+    * Insert-only fast path: when every key appears once (initial load /
+      insert-only stream), the batch IS the winner set minus keys the
+      stored state beats — no join-back at all.
+    * Single-phase (MOR, above the broadcast gate): the (key, lsn)
+      join-back would degenerate to a sort-merge join that shuffles the
+      FULL batch payload anyway — on top of the narrow aggregate's own
+      shuffle and both sort passes. One struct-max aggregate moves the
+      payload once (with map-side partial combine) and its result IS the
+      documented duplicate-LSN tiebreak.
+    * Otherwise broadcast join-back: winners stream straight from the
+      batch scan, no wide shuffle; duplicate-LSN keys get the struct-max
+      tiebreak over the (small) winner set."""
+    if metrics.keys_in_batch == metrics.events_in:
+        winners = batch if cur_beats is None else batch.join(_bcast(cur_beats, metrics, limit), key_cols, "left_anti")
+    elif single_phase and metrics.keys_in_batch > limit:
+        winners = dedup_last_writer(batch, key_cols)
+    else:
+        winners = batch.join(_bcast(won, metrics, limit), [*key_cols, "lsn"], "inner")
+        if ties:
+            winners = dedup_last_writer(winners, key_cols)
+    winners = _staged(winners, winner_stages)
+    return _align(winners.withColumn(DELETED_COL, F.col("op") == F.lit("D")), evolved)
+
+
+def _commit_or_skip(
+    table: LakeTable, metrics: MergeMetrics, expected_version: int, fence_prop: str,
+    new_files: dict, replaced: set, schema: T.StructType, mode: str,
+    properties: dict | None = None, summary: dict | None = None, t0: float | None = None,
+) -> MergeMetrics:
+    """Publish one merge commit (data + fence, atomically) at
+    ``expected_version``. When a concurrent writer committed first and it
+    applied THIS batch (duplicate delivery racing us), the fence makes our
+    work a no-op — exactly-once holds — and skipped metrics come back.
+    Any other lost race re-raises CommitConflict for the caller to retry
+    against fresh state (our files stay orphaned until vacuum; they were
+    never referenced)."""
+    try:
+        new_snap = table.commit(
+            new_files,
+            replaced_buckets=replaced,
+            schema=schema,
+            properties={fence_prop: str(metrics.batch_id), **(properties or {})},
+            summary={"operation": "merge", "mode": mode, **metrics.to_dict(), **(summary or {})},
+            expected_version=expected_version,
+        )
+    except CommitConflict:
+        cur = table.snapshot()
+        if _fence(cur, fence_prop) >= metrics.batch_id:
+            return _skipped(metrics.batch_id, cur)
+        raise
+    metrics.snapshot_version = new_snap.version
+    if t0 is not None:
+        metrics.duration_sec = time.time() - t0
+    return metrics
+
+
 @dataclass
 class PreparedMerge:
     """A MOR merge whose data files are fully written but whose snapshot is
     not yet published (see ``prepare_mor_merge`` / ``commit_prepared_merge``).
-    Carries the assumption set the files were written under; commit
-    validates it against the live snapshot and refuses (returns None) on
-    any drift — the files then stay unreferenced (vacuum reclaims them,
-    exactly like a losing concurrent-commit attempt)."""
+    Carries the assumption set the files were written under: the schema
+    it was prepared against, the schema the files carry, and the bucket
+    spec. Commit validates them against the live snapshot and refuses
+    (returns None) on any drift — the files then stay unreferenced (vacuum
+    reclaims them, exactly like a losing concurrent-commit attempt)."""
 
     batch_id: int
     new_files: dict
     metrics: MergeMetrics
+    schema: T.StructType
     evolved: T.StructType
-    num_buckets: int
-    bucket_cols: tuple | None
-    key_cols: tuple
+    spec: tuple  # _bucket_spec of the snapshot the files were bucketed under
+
+
+def _bucket_spec(snap: Snapshot) -> tuple:
+    return snap.num_buckets, tuple(snap.key_cols), tuple(snap.bucket_cols or ())
+
+
+def _prepare(table: LakeTable, batch: DataFrame, batch_id: int, snap: Snapshot, evolved: T.StructType,
+             winner_stages, broadcast_key_limit: int, strict_lww_ties: bool,
+             precomputed: PrecomputedStats | None, t0: float) -> PreparedMerge:
+    """The one MOR merge body: stats, winner selection and the bucket-file
+    write of an already-probed ``batch`` against ``snap``; no commit."""
+    key_cols = snap.key_cols
+    wk = _winning_keys(batch, key_cols)
+    metrics, _, ties = _batch_stats(table, snap, wk, batch_id, precomputed, t0)
+    prep = PreparedMerge(batch_id, {}, metrics, snap.schema, evolved, _bucket_spec(snap))
+    if metrics.keys_in_batch:  # an empty batch commits a fence advance only
+        winners = _select_winners(batch, wk.select(*key_cols, "lsn"), key_cols, metrics,
+                                  strict_lww_ties or ties, broadcast_key_limit, winner_stages,
+                                  evolved, single_phase=True)
+        combined = winners.withColumn("_bucket", table.bucket_expr(snap)).repartition("_bucket")
+        t_w = time.time()
+        tag = f"mor{batch_id:08d}-{uuid.uuid4().hex[:8]}"
+        prep.new_files = table.write_bucket_files(combined, snap, tag, repartition=False)
+        metrics.write_sec = time.time() - t_w
+    metrics.duration_sec = time.time() - t0
+    return prep
+
+
+def _publish_mor(table: LakeTable, prep: PreparedMerge, expected_version: int, fence_prop: str,
+                 t0: float | None = None) -> MergeMetrics:
+    return _commit_or_skip(
+        table, prep.metrics, expected_version, fence_prop, prep.new_files, set(), prep.evolved, "mor",
+        properties={DELTA_PROP: "true"} if prep.new_files else None, t0=t0,
+    )
 
 
 def prepare_mor_merge(
@@ -316,90 +494,21 @@ def prepare_mor_merge(
     strictly ordered on the caller's thread). MOR never reads table state,
     so the only snapshot inputs are the bucket spec and the schema; both
     are re-validated by ``commit_prepared_merge`` before publishing.
+    Additive and reader-upcastable evolution is prepared like any batch.
 
-    Returns None when the batch needs the classic serial path (assumed
-    fence already past it, or in-flight schema evolution — evolution also
-    rewrites assumptions for every later in-flight prepare, so the caller
-    must refresh ``assumed`` after any fallback). Winner semantics are
-    byte-identical to ``_merge_apply_once``'s MOR branch: same insert-only
-    fast path, same single-phase gate above the broadcast limit, same
-    duplicate-LSN struct-max tiebreak."""
+    Returns None when the batch needs ``merge_apply`` instead: the assumed
+    fence is already past it, or it widens a column beyond what the
+    parquet reader upcasts (``_widen_rewrite`` must run first, serially).
+    ``merge_apply(mode="mor")`` runs this same body against the live
+    snapshot."""
     t0 = time.time()
-    if batch_id <= int(assumed.properties.get(fence_prop, "-1")):
-        return None  # fence already past under the assumption — classic path re-checks
-
-    for stage in stages:
-        batch = stage(batch)
-
-    def _winner_staged(df: DataFrame) -> DataFrame:
-        for stage in winner_stages:
-            df = stage(df)
-        return df
-
-    staged_empty = _winner_staged(batch.limit(0))
-    if any(c.lower() == "_bucket" for c in staged_empty.columns):
-        raise SchemaError(
-            "'_bucket' is a reserved lake column (the merge overwrites it "
-            "with the hash-bucket id); rename it upstream"
-        )
-    payload_fields = [f for f in staged_empty.schema.fields if f.name not in CONTROL_COLS]
-    incoming = T.StructType(
-        payload_fields
-        + [T.StructField("lsn", T.LongType(), True), T.StructField(DELETED_COL, T.BooleanType(), True)]
-    )
-    evolved = merge_schemas(assumed.schema, incoming)
-    if evolved != assumed.schema:
-        return None  # schema evolution: the classic path owns widen/rewrite
-
-    key_cols = assumed.key_cols
-    wk = _winning_keys(batch, key_cols)
-    per_bucket = _per_bucket_stats(wk, table, assumed).collect()
-    bucket_counts = {r["_bucket"]: r["keys"] for r in per_bucket}
-    n_keys = sum(bucket_counts.values())
-    n_del = int(sum(r["dels"] for r in per_bucket))
-    has_lsn_ties = int(sum(r["dup_lsn_keys"] for r in per_bucket)) > 0
-
-    metrics = MergeMetrics(
-        batch_id=batch_id,
-        events_in=int(sum(r["events"] for r in per_bucket)),
-        keys_in_batch=n_keys,
-        upserts=n_keys - n_del,
-        deletes=n_del,
-        min_lsn=min((r["min_lsn"] for r in per_bucket), default=None),
-        max_lsn=max((r["max_lsn"] for r in per_bucket), default=None),
-        stats_sec=time.time() - t0,
-    )
-    base = PreparedMerge(
-        batch_id=batch_id, new_files={}, metrics=metrics, evolved=evolved,
-        num_buckets=assumed.num_buckets,
-        bucket_cols=tuple(assumed.bucket_cols) if assumed.bucket_cols else None,
-        key_cols=tuple(key_cols),
-    )
-    if n_keys == 0:
-        metrics.duration_sec = time.time() - t0
-        return base  # fence-advance-only commit
-
-    bcast = (lambda df: F.broadcast(df)) if n_keys <= broadcast_key_limit else (lambda df: df)
-    if n_keys == metrics.events_in:
-        winners = batch
-    elif n_keys > broadcast_key_limit and os.environ.get("SPARK_GRAFT_MOR_SINGLE_PHASE", "1") != "0":
-        winners = dedup_last_writer(batch, key_cols)
-    else:
-        winners = batch.join(bcast(wk.select(*key_cols, "lsn")), [*key_cols, "lsn"], "inner")
-        if strict_lww_ties or has_lsn_ties:
-            winners = dedup_last_writer(winners, key_cols)
-    winners = _winner_staged(winners)
-    winners = _align(winners.withColumn(DELETED_COL, F.col("op") == F.lit("D")), evolved)
-
-    combined = winners.withColumn("_bucket", table.bucket_expr(assumed)).repartition("_bucket")
-    tag = f"mor{batch_id:08d}-{uuid.uuid4().hex[:8]}"
-    t_w = time.time()
-    base.new_files = table.write_bucket_files(combined, assumed, tag, repartition=False)
-    metrics.write_sec = time.time() - t_w
-    metrics.buckets_touched = len(bucket_counts)
-    metrics.bucket_rows = {str(b): int(c) for b, c in bucket_counts.items()}
-    metrics.duration_sec = time.time() - t0
-    return base
+    if batch_id <= _fence(assumed, fence_prop):
+        return None  # fence already past under the assumption — merge_apply re-checks
+    batch, evolved = _probe(assumed, batch, stages, winner_stages)
+    if _unsupported_upcast_paths(assumed.schema, evolved):
+        return None
+    return _prepare(table, batch, batch_id, assumed, evolved, winner_stages,
+                    broadcast_key_limit, strict_lww_ties, None, t0)
 
 
 def commit_prepared_merge(
@@ -410,38 +519,23 @@ def commit_prepared_merge(
 ) -> MergeMetrics | None:
     """CAS-publish a prepared MOR merge. Re-validates every assumption
     against the LIVE snapshot first: fence (duplicate delivery -> skip,
-    exactly-once holds), schema, bucket spec. Returns None when the
-    assumptions no longer hold — the caller re-runs the classic merge and
-    the prepared files stay orphaned until vacuum (they were never
-    referenced). Retries the CAS when an unrelated commit (compaction, a
-    concurrent stream) races us but the assumptions still validate."""
+    exactly-once holds), schema (the one prepared against, or the one the
+    files already carry when an earlier commit evolved it the same way),
+    bucket spec. Returns None when the assumptions no longer hold — the
+    caller re-runs ``merge_apply`` and the prepared files stay orphaned
+    until vacuum (they were never referenced). Retries the CAS when an
+    unrelated commit (compaction, a concurrent stream) races us but the
+    assumptions still validate."""
     for _ in range(max_retries):
         cur = table.snapshot()
-        if int(cur.properties.get(fence_prop, "-1")) >= prep.batch_id:
-            return MergeMetrics(batch_id=prep.batch_id, skipped=True, snapshot_version=cur.version)
-        if (
-            cur.schema != prep.evolved
-            or cur.num_buckets != prep.num_buckets
-            or tuple(cur.key_cols) != prep.key_cols
-            or (tuple(cur.bucket_cols) if cur.bucket_cols else None) != prep.bucket_cols
-        ):
+        if _fence(cur, fence_prop) >= prep.batch_id:
+            return _skipped(prep.batch_id, cur)
+        if cur.schema not in (prep.schema, prep.evolved) or _bucket_spec(cur) != prep.spec:
             return None
-        props = {fence_prop: str(prep.batch_id)}
-        if prep.new_files:
-            props[DELTA_PROP] = "true"
         try:
-            new_snap = table.commit(
-                prep.new_files,
-                replaced_buckets=set(),
-                schema=prep.evolved,
-                properties=props,
-                summary={"operation": "merge", "mode": "mor", **prep.metrics.to_dict()},
-                expected_version=cur.version,
-            )
+            return _publish_mor(table, prep, cur.version, fence_prop)
         except CommitConflict:
             continue
-        prep.metrics.snapshot_version = new_snap.version
-        return prep.metrics
     return None
 
 
@@ -476,6 +570,7 @@ def merge_apply(
     already returns a skip), and a losing attempt's files were never
     referenced (vacuum reclaims them).
     """
+    winner_stages = tuple(winner_stages)
     attempt = 0
     while True:
         try:
@@ -492,6 +587,26 @@ def merge_apply(
             precomputed = None  # stale after a concurrent commit
 
 
+def _small_state(table: LakeTable, snap: Snapshot, affected: list[int]) -> bool:
+    """Small-state byte gate (see ``_cow_consolidate_bytes``): decides both
+    the consolidating write and the fused small-merge path. Files that
+    cannot be statted locally (object storage) keep the no-shuffle path,
+    and say so."""
+    try:
+        affected_bytes = sum(
+            os.path.getsize(os.path.join(table.path, f)) for b in affected for f in snap.files.get(b, [])
+        )
+    except OSError as exc:
+        warnings.warn(
+            f"CoW merge into {table.path}: cannot stat the affected bucket files "
+            f"({type(exc).__name__}: {exc}); the fused small-merge path and the "
+            "consolidating write are off for this merge",
+            RuntimeWarning, stacklevel=4,
+        )
+        return False
+    return affected_bytes <= _cow_consolidate_bytes()
+
+
 def _merge_apply_once(
     spark: SparkSession,
     table: LakeTable,
@@ -501,7 +616,7 @@ def _merge_apply_once(
     fence_prop: str = FENCE_PROP,
     broadcast_key_limit: int = 500_000,
     strict_lww_ties: bool = False,
-    winner_stages: Iterable[TransformStage] = (),
+    winner_stages: tuple = (),
     mode: str = "cow",
     precomputed: PrecomputedStats | None = None,
     changelog: bool = False,
@@ -522,6 +637,8 @@ def _merge_apply_once(
       version per key. This is the Iceberg-v2 MOR shape — the right mode
       for sustained high-rate ingest; out-of-order and late batches are
       safe automatically because read-time LWW compares LSNs globally.
+      The body is ``prepare_mor_merge``'s, run against the live snapshot
+      and published with one CAS at that snapshot's version.
 
     ``batch`` columns: ``lsn long, op string in {I,U,D}``, the table's key
     columns, plus any payload columns (which may include columns the table
@@ -547,46 +664,22 @@ def _merge_apply_once(
     """
     t0 = time.time()
     snap = table.snapshot()
-    last = int(snap.properties.get(fence_prop, "-1"))
-    if batch_id <= last:
-        # Fence: this batch already committed — idempotent replay no-op.
-        return MergeMetrics(batch_id=batch_id, skipped=True, snapshot_version=snap.version)
+    if batch_id <= _fence(snap, fence_prop):
+        return _skipped(batch_id, snap)  # already committed — idempotent replay no-op
 
-    for stage in stages:
-        batch = stage(batch)
-
-    def _winner_staged(df: DataFrame) -> DataFrame:
-        for stage in winner_stages:
-            df = stage(df)
-        return df
-
-    # schema evolution must account for winner-stage output columns too:
-    # probe them against an empty frame (no data moves, plan-only)
-    staged_empty = _winner_staged(batch.limit(0))
-
-    key_cols = snap.key_cols
-    if any(c.lower() == "_bucket" for c in staged_empty.columns):
-        # the write path overwrites _bucket with the hash-bucket id and the
-        # partitioned write then strips it — a data column named _bucket
-        # would be silently destroyed, so refuse it loudly
-        raise SchemaError(
-            "'_bucket' is a reserved lake column (the merge overwrites it "
-            "with the hash-bucket id); rename it upstream"
-        )
-    # -- in-flight schema evolution -------------------------------------
-    payload_fields = [f for f in staged_empty.schema.fields if f.name not in CONTROL_COLS]
-    incoming = T.StructType(
-        payload_fields
-        + [T.StructField("lsn", T.LongType(), True), T.StructField(DELETED_COL, T.BooleanType(), True)]
-    )
-    evolved = merge_schemas(snap.schema, incoming)
+    batch, evolved = _probe(snap, batch, stages, winner_stages)
     if snap.all_files and _unsupported_upcast_paths(snap.schema, evolved):
         # widening beyond what the parquet reader upcasts (long->double):
         # rewrite live files under the evolved schema first, then merge
         # against the fresh snapshot
         snap = _widen_rewrite(spark, table, snap, evolved)
-    snap_for_bucket = Snapshot(**{**snap.__dict__, "schema": evolved})
+    if mode == "mor":
+        prep = _prepare(table, batch, batch_id, snap, evolved, winner_stages,
+                        broadcast_key_limit, strict_lww_ties, precomputed, t0)
+        return _publish_mor(table, prep, snap.version, fence_prop, t0)
 
+    key_cols = snap.key_cols
+    snap_for_bucket = Snapshot(**{**snap.__dict__, "schema": evolved})
     # -- Phase 1: narrow winning-key aggregate. Only (key, lsn, op) leave
     # the scan (parquet column pruning), partial combine collapses hot
     # keys map-side, and the shuffle carries no payload bytes. Kept lazy:
@@ -595,79 +688,21 @@ def _merge_apply_once(
     # state exists), since on an initial load pinning millions of winner
     # keys in the memory store is pure churn.
     wk = _winning_keys(batch, key_cols)
+    metrics, affected, ties = _batch_stats(table, snap_for_bucket, wk, batch_id, precomputed, t0)
+    ties = ties or strict_lww_ties
+    if not affected:
+        # Nothing to merge, still advance the fence atomically.
+        return _commit_or_skip(table, metrics, snap.version, fence_prop, {}, set(), evolved, mode, t0=t0)
+
+    # Affected buckets with no current files (fresh table / untouched key
+    # space) need none of the current-vs-batch machinery — and the
+    # broadcast builds it would trigger are pure waste on initial load.
+    has_current = any(snap.files.get(b) for b in affected)
+    consolidate = has_current and _small_state(table, snap, affected)
+    bexpr = table.bucket_expr(snap_for_bucket)
+    chlog_files: list[str] | None = None
     persisted = []
     try:
-        # One collect serves both lineage stats and the affected-bucket
-        # list: per-bucket partials (<= num_buckets rows) combined driver
-        # side. Fewer jobs per batch = less serial floor per microbatch.
-        # A valid PrecomputedStats (same bucket function, same batch —
-        # see replay_events' stats-ahead pipelining) skips the collect
-        # entirely: its job already ran overlapped with the previous
-        # batch's write.
-        if (
-            precomputed is not None
-            and precomputed.batch_id == batch_id
-            and precomputed.key_cols == tuple(key_cols)
-            and precomputed.num_buckets == snap.num_buckets
-        ):
-            per_bucket = precomputed.rows
-        else:
-            per_bucket = _per_bucket_stats(wk, table, snap_for_bucket).collect()
-        bucket_counts = {r["_bucket"]: r["keys"] for r in per_bucket}
-        n_keys = sum(bucket_counts.values())
-        n_del = int(sum(r["dels"] for r in per_bucket))
-        # keys with a repeated LSN inside this batch: the (key, lsn) join-
-        # back would keep BOTH tying rows, silently writing duplicate key
-        # versions. Detected for free in the same stats collect; when
-        # present, the winner set (small) gets a deterministic struct-max
-        # tiebreak below.
-        has_lsn_ties = int(sum(r["dup_lsn_keys"] for r in per_bucket)) > 0
-
-        metrics = MergeMetrics(
-            batch_id=batch_id,
-            events_in=int(sum(r["events"] for r in per_bucket)),
-            keys_in_batch=n_keys,
-            upserts=n_keys - n_del,
-            deletes=n_del,
-            min_lsn=min((r["min_lsn"] for r in per_bucket), default=None),
-            max_lsn=max((r["max_lsn"] for r in per_bucket), default=None),
-            stats_sec=time.time() - t0,
-        )
-
-        if n_keys == 0:
-            # Nothing to merge, still advance the fence atomically.
-            new_snap = table.commit({}, set(), schema=evolved,
-                                    properties={fence_prop: str(batch_id)},
-                                    summary={"operation": "merge", "mode": mode, **metrics.to_dict()},
-                                    expected_version=snap.version)
-            metrics.snapshot_version = new_snap.version
-            metrics.duration_sec = time.time() - t0
-            return metrics
-
-        affected = sorted(bucket_counts)
-
-        bcast = (lambda df: F.broadcast(df)) if n_keys <= broadcast_key_limit else (lambda df: df)
-        is_mor = mode == "mor"
-        # Affected buckets with no current files (fresh table / untouched
-        # key space) need none of the current-vs-batch machinery — and the
-        # broadcast builds it would trigger are pure waste on initial load.
-        # MOR never reads current state: read-time LWW resolves it.
-        has_current = (not is_mor) and any(snap.files.get(b) for b in affected)
-
-        # Small-state byte gate (see _cow_consolidate_bytes): decides both
-        # the consolidating write below and the fused small-merge path.
-        consolidate = False
-        if has_current:
-            try:
-                affected_bytes = sum(
-                    os.path.getsize(os.path.join(table.path, f))
-                    for b in affected
-                    for f in snap.files.get(b, [])
-                )
-                consolidate = affected_bytes <= _cow_consolidate_bytes()
-            except OSError:
-                consolidate = False  # files not locally statable: keep no-shuffle path
-
         # -- Fused small-merge fast path. The two-phase shape exists so
         # wide rows never shuffle, but it costs three broadcast builds and
         # two batch passes per commit — pure serial floor when the
@@ -678,205 +713,105 @@ def _merge_apply_once(
         # and stored row keeps the stored row (is_current=1 outranks 0 —
         # the cur_lsn >= new_lsn rule), and batches carrying internal
         # duplicate-LSN keys (detected free in phase 1) fall back to the
-        # classic path so the struct-max payload tiebreak stays byte-for-
+        # two-phase path so the struct-max payload tiebreak stays byte-for-
         # byte the documented one. Gated off for changelog commits (they
         # need the winners frame as a sidecar) and winner_stages
         # (enrichment must see winning batch rows only).
-        fused = (
-            has_current
-            and consolidate
-            and not changelog
-            and not tuple(winner_stages)
-            and not (strict_lww_ties or has_lsn_ties)
-        )
-        if fused:
+        if consolidate and not changelog and not winner_stages and not ties:
             current = _align(table.read_buckets(spark, affected, snap), evolved)
-            batch_al = _align(
-                batch.withColumn(DELETED_COL, F.col("op") == F.lit("D")), evolved
-            )
+            batch_al = _align(batch.withColumn(DELETED_COL, F.col("op") == F.lit("D")), evolved)
             payload = [c for c in evolved.fieldNames() if c not in key_cols and c != "lsn"]
-            packed = F.struct(
-                F.col("lsn"), F.col("_is_cur"), *[F.col(c) for c in payload]
-            )
-            union = current.withColumn("_is_cur", F.lit(1)).unionByName(
-                batch_al.withColumn("_is_cur", F.lit(0))
-            )
+            packed = F.struct(F.col("lsn"), F.col("_is_cur"), *[F.col(c) for c in payload])
+            union = current.withColumn("_is_cur", F.lit(1)).unionByName(batch_al.withColumn("_is_cur", F.lit(0)))
             won = union.groupBy(*key_cols).agg(F.max(packed).alias("_w"))
-            state = won.select(
-                *key_cols,
-                F.col("_w.lsn").alias("lsn"),
-                *[F.col(f"_w.{c}").alias(c) for c in payload],
-            )
-            bexpr = table.bucket_expr(snap_for_bucket)
+            state = won.select(*key_cols, F.col("_w.lsn").alias("lsn"), *[F.col(f"_w.{c}").alias(c) for c in payload])
             combined = _align(state, evolved).withColumn("_bucket", bexpr).repartition("_bucket")
-            tag = f"snap{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
-            t_w = time.time()
-            new_files = table.write_bucket_files(combined, snap_for_bucket, tag, repartition=False)
-            metrics.write_sec = time.time() - t_w
-            try:
-                new_snap = table.commit(
-                    new_files,
-                    replaced_buckets=set(affected),
-                    schema=evolved,
-                    properties={fence_prop: str(batch_id)},
-                    summary={"operation": "merge", "mode": mode, **metrics.to_dict()},
-                    expected_version=snap.version,
-                )
-            except CommitConflict:
-                cur = table.snapshot()
-                if int(cur.properties.get(fence_prop, "-1")) >= batch_id:
-                    return MergeMetrics(batch_id=batch_id, skipped=True, snapshot_version=cur.version)
-                raise
-            metrics.buckets_touched = len(affected)
-            metrics.bucket_rows = {str(b): int(c) for b, c in bucket_counts.items()}
-            metrics.snapshot_version = new_snap.version
-            metrics.duration_sec = time.time() - t0
-            return metrics
-
-        # Small CoW batches are re-read by the winning-key aggregate and
-        # the winner join-back: cache them once instead of re-running the
-        # batch lineage per pass. CoW-only and row-gated: persisting the
-        # bench's 1M-event MOR batches measured a 2.2x replay REGRESSION
-        # (338 s vs 153 s at 20M events) — memory-store materialization
-        # under 32 concurrent tasks costs far more than the pruned
-        # binlog re-scan it saves.
-        if has_current and metrics.events_in <= _batch_persist_rows():
-            batch = batch.persist()
-            persisted.append(batch)
-
-        cur_beats = None
-        batch_won = wk.select(*key_cols, "lsn")
-        survivors = None
-        if has_current:
-            wk = wk.persist()
-            persisted.append(wk)
-            current = _align(table.read_buckets(spark, affected, snap), evolved)
-            # -- LWW vs current state: a key's batch version only applies
-            # if its LSN beats the stored LSN (ties keep the stored row, so
-            # an already-applied writer is never re-applied). Out-of-order
-            # and late batches are therefore safe. Column pruning makes
-            # this a (key, lsn)-only scan of the affected buckets; the
-            # broadcast join means the bucket data itself never shuffles.
-            cur_beats = (
-                current.select(*key_cols, F.col("lsn").alias("_cur_lsn"))
-                .join(bcast(wk.select(*key_cols, F.col("lsn").alias("_new_lsn"))), key_cols, "inner")
-                .filter(F.col("_cur_lsn") >= F.col("_new_lsn"))
-                .select(*key_cols)
-            )
-            batch_won = wk.join(cur_beats, key_cols, "left_anti").select(*key_cols, "lsn").persist()
-            persisted.append(batch_won)
-            # -- survivors: current rows whose key the batch did not win.
-            # Broadcast LEFT ANTI = map-side filter; file-aligned
-            # partitions are kept on write (repartition=False) so the
-            # table state is never shuffled. Only the winner set
-            # repartitions to its target buckets.
-            survivors = current.join(bcast(batch_won.select(*key_cols)), key_cols, "left_anti")
-
-        # -- Phase 2: winning payload rows. Insert-heavy fast path: when
-        # every key appears once (initial load / insert-only stream), the
-        # batch IS the winner set minus keys the stored state beats — no
-        # join-back at all. Otherwise broadcast join-back: winners stream
-        # straight from the batch scan, no wide shuffle.
-        if n_keys == metrics.events_in:
-            winners = batch if cur_beats is None else batch.join(bcast(cur_beats), key_cols, "left_anti")
-        elif (
-            is_mor
-            and n_keys > broadcast_key_limit
-            and os.environ.get("SPARK_GRAFT_MOR_SINGLE_PHASE", "1") != "0"
-        ):
-            # Winner set too large to broadcast: the (key, lsn) join-back
-            # degenerates to a sort-merge join that shuffles the FULL
-            # batch payload anyway — on top of the narrow aggregate's own
-            # shuffle and both sort passes. One struct-max aggregate
-            # moves the payload once (with map-side partial combine) and
-            # its result IS the documented duplicate-LSN tiebreak, so the
-            # tie path needs no separate handling. (The two-phase shape
-            # stays the design for the broadcastable common case — there
-            # the payload never shuffles at all.)
-            winners = dedup_last_writer(batch, key_cols)
         else:
-            winners = batch.join(bcast(batch_won), [*key_cols, "lsn"], "inner")
-            if strict_lww_ties or has_lsn_ties:
-                winners = dedup_last_writer(winners, key_cols)
-        winners = _winner_staged(winners)
-        winners = _align(winners.withColumn(DELETED_COL, F.col("op") == F.lit("D")), evolved)
-
-        # Change-data-feed sidecar (CoW only): persist the winners ONCE,
-        # then read them back as the source for the bucket write below —
-        # the winner plan executes a single time, and the sidecar paths
-        # ride the commit summary so read_changes can serve row-level
-        # changes from this rewrite commit. Orphaned sidecars (a losing
-        # commit race) are unreferenced and reclaimed by vacuum.
-        chlog_files: list[str] | None = None
-        if changelog and not is_mor:
-            chdir = os.path.join(table.data_dir, f"chlog{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}")
-            winners.write.parquet(chdir)
-            chlog_files = sorted(
-                os.path.relpath(p, table.path)
-                for p in glob.glob(os.path.join(chdir, "*.parquet"))
-            )
-            if chlog_files:
-                winners = spark.read.schema(evolved).parquet(
-                    *[os.path.join(table.path, f) for f in chlog_files]
+            # Small CoW batches are re-read by the winning-key aggregate
+            # and the winner join-back: cache them once instead of
+            # re-running the batch lineage per pass. CoW-only and
+            # row-gated: persisting the bench's 1M-event MOR batches
+            # measured a 2.2x replay REGRESSION (338 s vs 153 s at 20M
+            # events) — memory-store materialization under 32 concurrent
+            # tasks costs far more than the pruned binlog re-scan it saves.
+            if has_current and metrics.events_in <= _batch_persist_rows():
+                batch = batch.persist()
+                persisted.append(batch)
+            cur_beats = survivors = None
+            won = wk.select(*key_cols, "lsn")
+            if has_current:
+                wk = wk.persist()
+                persisted.append(wk)
+                current = _align(table.read_buckets(spark, affected, snap), evolved)
+                # -- LWW vs current state: a key's batch version only
+                # applies if its LSN beats the stored LSN (ties keep the
+                # stored row, so an already-applied writer is never
+                # re-applied). Out-of-order and late batches are therefore
+                # safe. Column pruning makes this a (key, lsn)-only scan of
+                # the affected buckets; the broadcast join means the bucket
+                # data itself never shuffles.
+                cur_beats = (
+                    current.select(*key_cols, F.col("lsn").alias("_cur_lsn"))
+                    .join(_bcast(wk.select(*key_cols, F.col("lsn").alias("_new_lsn")), metrics, broadcast_key_limit),
+                          key_cols, "inner")
+                    .filter(F.col("_cur_lsn") >= F.col("_new_lsn"))
+                    .select(*key_cols)
                 )
+                won = wk.join(cur_beats, key_cols, "left_anti").select(*key_cols, "lsn").persist()
+                persisted.append(won)
+                # -- survivors: current rows whose key the batch did not
+                # win. Broadcast LEFT ANTI = map-side filter; file-aligned
+                # partitions are kept on write (repartition=False) so the
+                # table state is never shuffled. Only the winner set
+                # repartitions to its target buckets.
+                survivors = current.join(_bcast(won.select(*key_cols), metrics, broadcast_key_limit),
+                                         key_cols, "left_anti")
+            winners = _select_winners(batch, won, key_cols, metrics, ties, broadcast_key_limit,
+                                      winner_stages, evolved, cur_beats=cur_beats)
 
-        # One write job. Default shape: the survivors branch (if any)
-        # streams file-aligned (no shuffle), only the winners branch
-        # repartitions. Small-state exception: file-aligned survivor
-        # writes emit one file per (scan task, bucket), so each CoW batch
-        # fragments its buckets further and every later merge pays the
-        # growing file count in driver plan-building, footer stats and
-        # scan setup. When the affected buckets hold only a few MB, a
-        # shuffle of those bytes is far cheaper than the fragmentation —
-        # so below the byte gate survivors ride the winners' exchange and
-        # every rewritten bucket compacts to ONE file per commit. Above
-        # it, the wide-row rule stands: table state never shuffles.
-        bexpr = table.bucket_expr(snap_for_bucket)
-        if consolidate and survivors is not None:
-            combined = (
-                survivors.unionByName(winners)
-                .withColumn("_bucket", bexpr)
-                .repartition("_bucket")
-            )
-        else:
-            combined = winners.withColumn("_bucket", bexpr).repartition("_bucket")
-            if survivors is not None:
-                combined = survivors.withColumn("_bucket", bexpr).unionByName(combined)
+            # Change-data-feed sidecar: persist the winners ONCE, then read
+            # them back as the source for the bucket write below — the
+            # winner plan executes a single time, and the sidecar paths
+            # ride the commit summary so read_changes can serve row-level
+            # changes from this rewrite commit. Orphaned sidecars (a losing
+            # commit race) are unreferenced and reclaimed by vacuum.
+            if changelog:
+                chdir = os.path.join(table.data_dir, f"chlog{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}")
+                winners.write.parquet(chdir)
+                chlog_files = sorted(
+                    os.path.relpath(p, table.path) for p in glob.glob(os.path.join(chdir, "*.parquet"))
+                )
+                if chlog_files:
+                    winners = spark.read.schema(evolved).parquet(
+                        *[os.path.join(table.path, f) for f in chlog_files]
+                    )
+
+            # One write job. Default shape: the survivors branch (if any)
+            # streams file-aligned (no shuffle), only the winners branch
+            # repartitions. Small-state exception: file-aligned survivor
+            # writes emit one file per (scan task, bucket), so each CoW
+            # batch fragments its buckets further and every later merge
+            # pays the growing file count in driver plan-building, footer
+            # stats and scan setup. When the affected buckets hold only a
+            # few MB, a shuffle of those bytes is far cheaper than the
+            # fragmentation — so below the byte gate survivors ride the
+            # winners' exchange and every rewritten bucket compacts to ONE
+            # file per commit. Above it, the wide-row rule stands: table
+            # state never shuffles.
+            if consolidate:
+                combined = survivors.unionByName(winners).withColumn("_bucket", bexpr).repartition("_bucket")
+            else:
+                combined = winners.withColumn("_bucket", bexpr).repartition("_bucket")
+                if survivors is not None:
+                    combined = survivors.withColumn("_bucket", bexpr).unionByName(combined)
         tag = f"snap{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
         t_w = time.time()
         new_files = table.write_bucket_files(combined, snap_for_bucket, tag, repartition=False)
         metrics.write_sec = time.time() - t_w
-
-        props = {fence_prop: str(batch_id)}
-        if is_mor:
-            props[DELTA_PROP] = "true"
-        summary = {"operation": "merge", "mode": mode, **metrics.to_dict()}
-        if chlog_files is not None:
-            summary["changelog"] = chlog_files
-        try:
-            new_snap = table.commit(
-                new_files,
-                replaced_buckets=set() if is_mor else set(affected),
-                schema=evolved,
-                properties=props,
-                summary=summary,
-                expected_version=snap.version,
-            )
-        except CommitConflict:
-            # A concurrent writer committed first. If it applied THIS batch
-            # (duplicate delivery racing us), the fence makes our work a
-            # no-op — exactly-once holds. Anything else must be retried by
-            # the caller against fresh state (our files stay orphaned until
-            # vacuum; they were never referenced).
-            cur = table.snapshot()
-            if int(cur.properties.get(fence_prop, "-1")) >= batch_id:
-                return MergeMetrics(batch_id=batch_id, skipped=True, snapshot_version=cur.version)
-            raise
-        metrics.buckets_touched = len(affected)
-        metrics.bucket_rows = {str(b): int(c) for b, c in bucket_counts.items()}
-        metrics.snapshot_version = new_snap.version
-        metrics.duration_sec = time.time() - t0
-        return metrics
+        return _commit_or_skip(
+            table, metrics, snap.version, fence_prop, new_files, set(affected), evolved, mode,
+            summary={"changelog": chlog_files} if chlog_files is not None else None, t0=t0,
+        )
     finally:
         for df in persisted:
             df.unpersist()

@@ -12,12 +12,15 @@ from __future__ import annotations
 import json
 import os
 import warnings
-from typing import Iterable
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+import docetl_spark.cdc.merge as merge_mod
 from docetl_spark.cdc.merge import (
     DELETED_COL,
     DELTA_PROP,
@@ -25,7 +28,6 @@ from docetl_spark.cdc.merge import (
     MergeMetrics,
     TransformStage,
     dedup_last_writer,
-    merge_apply,
 )
 from docetl_spark.lake.table import LakeTable
 
@@ -270,20 +272,55 @@ def replay_events(
             return events.filter(F.col(batch_col) == group[0])
         return events.filter(F.col(batch_col).isin([int(b) for b in group]))
 
-    return _replay_groups(
-        spark, table, groups, batch_df, stages, winner_stages,
-        metrics_path, compact_every, changelog, mode,
-    )
+    return _replay_groups(spark, table, groups, batch_df, stages, winner_stages, mode, changelog,
+                          merge_sink(spark, table, metrics_path, compact_every))
+
+
+def append_metrics(metrics_path: str | None, record: dict) -> None:
+    """Append one lineage record to the metrics JSONL (no-op without a
+    path) — the metrics log of every replay and streaming face."""
+    if metrics_path:
+        os.makedirs(os.path.dirname(metrics_path) or ".", exist_ok=True)
+        with open(metrics_path, "a") as f:
+            f.write(json.dumps(record) + "\n")
+
+
+def merge_sink(spark: SparkSession, table: LakeTable, metrics_path: str | None = None,
+               compact_every: int | None = None) -> Callable[[MergeMetrics], MergeMetrics]:
+    """The per-batch tail shared by ``replay_events`` and
+    ``stream_changes``: append each MergeMetrics to the metrics JSONL and
+    fold MOR deltas (``compact_state``) after every ``compact_every``
+    APPLIED merges — fenced skips neither count nor trigger a fold."""
+    applied = 0
+
+    def sink(m: MergeMetrics) -> MergeMetrics:
+        nonlocal applied
+        append_metrics(metrics_path, m.to_dict())
+        if compact_every and not m.skipped:
+            applied += 1
+            if applied % compact_every == 0:
+                compact_state(spark, table)
+        return m
+
+    return sink
 
 
 def _speculation_failed(what: str, batch_id: int, exc: Exception) -> None:
     """Say that speculative work for ``batch_id`` raised and that the batch
-    falls back to the classic merge (which re-derives everything itself)."""
+    falls back to ``merge_apply`` (which re-derives everything itself)."""
     warnings.warn(
         f"{what} for batch {batch_id} failed with {type(exc).__name__}: {exc}; "
-        "falling back to the classic merge",
+        "falling back to merge_apply",
         RuntimeWarning, stacklevel=3,
     )
+
+
+# Speculative jobs in flight: the batch being applied plus the next one.
+# CoW's stats lookahead of 1 and MOR's prepare depth of 2 are this same
+# queue. A MOR depth of 3 measured no better (OPTIMIZATION_r06.md, MOR
+# write-job pipelining): deeper queues add concurrent shuffle/write
+# pressure on shared disks.
+_IN_FLIGHT = 2
 
 
 def _replay_groups(
@@ -293,131 +330,61 @@ def _replay_groups(
     batch_df,
     stages: Iterable[TransformStage],
     winner_stages: Iterable[TransformStage],
-    metrics_path: str | None,
-    compact_every: int | None,
-    changelog: bool,
     mode: str,
-) -> list[MergeMetrics]:
-    """Serial replay loop with stats-ahead pipelining: batch i+1's phase-1
-    stats job reads only its own events slice — never table state — so it
-    runs in a helper thread WHILE batch i's write job executes, hiding one
-    of the two serial jobs per micro-batch. merge_apply validates the
-    prefetch against its own snapshot (bucket fingerprint + batch id) and
-    silently recomputes if a compaction/rebucket invalidated it; a prefetch
-    that raises is recomputed too, with a RuntimeWarning. MOR mode
-    upgrades to full write pipelining (_replay_mor_pipelined)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from docetl_spark.cdc.merge import compute_batch_stats
-
-    out: list[MergeMetrics] = []
-    if mode == "mor" and os.environ.get("SPARK_GRAFT_MOR_PIPELINE", "1") != "0":
-        return _replay_mor_pipelined(
-            spark, table, groups, batch_df, stages, winner_stages,
-            metrics_path, compact_every, changelog,
-        )
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = None
-        for i, group in enumerate(groups, start=1):
-            bid = int(max(group))
-            pre = None
-            if fut is not None:
-                try:
-                    pre = fut.result()
-                except Exception as exc:
-                    # prefetch is an optimization, never a failure
-                    _speculation_failed("stats prefetch", bid, exc)
-                    pre = None
-            if i < len(groups):
-                nxt = groups[i]
-                fut = pool.submit(compute_batch_stats, table, batch_df(nxt), int(max(nxt)), stages)
-            else:
-                fut = None
-            m = merge_apply(spark, table, batch_df(group), bid,
-                            stages=stages, winner_stages=winner_stages, mode=mode,
-                            precomputed=pre, changelog=changelog)
-            out.append(m)
-            if metrics_path:
-                os.makedirs(os.path.dirname(metrics_path) or ".", exist_ok=True)
-                with open(metrics_path, "a") as f:
-                    f.write(json.dumps(m.to_dict()) + "\n")
-            if compact_every and i % compact_every == 0:
-                compact_state(spark, table)
-    return out
-
-
-def _replay_mor_pipelined(
-    spark: SparkSession,
-    table: LakeTable,
-    groups: list[list[int]],
-    batch_df,
-    stages: Iterable[TransformStage],
-    winner_stages: Iterable[TransformStage],
-    metrics_path: str | None,
-    compact_every: int | None,
     changelog: bool,
+    sink: Callable[[MergeMetrics], MergeMetrics],
 ) -> list[MergeMetrics]:
-    """MOR replay with WRITE-JOB pipelining (guide §2.6): a MOR merge never
-    reads table state, so consecutive batches' prepare phases (stats +
-    winner dedup + bucket-file write) are independent — only the fenced
-    commits must stay ordered. Two prepare workers keep the next batch's
-    write job in the scheduler while the current one drains its stragglers
-    (FIFO scheduling back-fills freed executors); the main thread publishes
-    the commits strictly in batch order, so exactly-once, fence
-    monotonicity and the change feed's per-commit deltas are byte-identical
-    to serial replay. A prepare whose assumptions drift (in-flight schema
-    evolution, rebucket) is discarded — its files were never referenced —
-    and the batch re-runs through the classic serial merge; later prepares
-    restart from the refreshed snapshot. A prepare that RAISES takes the
-    same fallback, with a RuntimeWarning (a genuinely bad batch then fails
-    in the classic merge, before any commit). Disable with
-    SPARK_GRAFT_MOR_PIPELINE=0."""
-    from collections import deque
-    from concurrent.futures import ThreadPoolExecutor
+    """The one replay loop: each batch's speculative work runs ahead in a
+    helper thread while the main thread applies the batch before it, and
+    commits stay strictly ordered on the main thread.
 
-    from docetl_spark.cdc.merge import commit_prepared_merge, merge_apply, prepare_mor_merge
+    * CoW: batch i+1's phase-1 stats job reads only its own events slice
+      — never table state — so it runs WHILE batch i merges, hiding one
+      of the two serial jobs per micro-batch. merge_apply validates the
+      prefetch (bucket fingerprint + batch id) and recomputes on drift.
+    * MOR: a merge never reads table state, so the whole prepare (stats,
+      winner dedup, bucket-file write) runs ahead (guide §2.6) and the
+      main thread only CAS-publishes it; FIFO scheduling back-fills the
+      executors batch i's stragglers free with batch i+1's write job.
+      Exactly-once, fence monotonicity and the change feed's per-commit
+      deltas match a serial ``merge_apply`` loop. A prepare that declines
+      (a rewrite-widening) or whose assumptions drift (schema, bucket
+      spec) is discarded — its files were never referenced — and the
+      batch runs through ``merge_apply``; later prepares start from the
+      refreshed snapshot.
 
+    Speculation is an optimization, never a failure: a speculative job
+    that raises is redone inside ``merge_apply``, with a RuntimeWarning (a
+    genuinely bad batch then fails there, before any commit). The merge
+    functions are looked up on the merge module at call time, so wrappers
+    installed there (tracing, fault injection) see every call."""
+    mor = mode == "mor"
     out: list[MergeMetrics] = []
-    # one in-flight write + one back-filling by default; deeper pipelines
-    # add concurrent shuffle/write pressure on shared disks — measure
-    # before raising (scale-adaptive knob, guide §2.6)
-    depth = max(1, int(os.environ.get("SPARK_GRAFT_MOR_PIPELINE_DEPTH", "2")))
-    with ThreadPoolExecutor(max_workers=depth) as pool:
-        assumed = table.snapshot()
+    with ThreadPoolExecutor(max_workers=_IN_FLIGHT) as pool:
+        assumed = table.snapshot() if mor else None
 
-        def submit(group):
-            return pool.submit(
-                prepare_mor_merge, spark, table, batch_df(group), int(max(group)),
-                assumed, stages=stages, winner_stages=winner_stages,
-            )
+        def speculate(group):
+            if mor:
+                return pool.submit(merge_mod.prepare_mor_merge, spark, table, batch_df(group),
+                                   int(max(group)), assumed, stages=stages, winner_stages=winner_stages)
+            return pool.submit(merge_mod.compute_batch_stats, table, batch_df(group), int(max(group)), stages)
 
-        futs: deque = deque()
-        for g in groups[:depth]:
-            futs.append(submit(g))
-        for i, group in enumerate(groups, start=1):
+        futs = deque(speculate(g) for g in groups[:_IN_FLIGHT])
+        for i, group in enumerate(groups):
             bid = int(max(group))
             try:
-                prep = futs.popleft().result()
+                ahead = futs.popleft().result()
             except Exception as exc:
-                _speculation_failed("speculative prepare", bid, exc)
-                prep = None
-            m = commit_prepared_merge(table, prep) if prep is not None else None
+                _speculation_failed("speculative prepare" if mor else "stats prefetch", bid, exc)
+                ahead = None
+            m = merge_mod.commit_prepared_merge(table, ahead) if mor and ahead is not None else None
             if m is None:
-                # assumptions drifted (or fence already past): classic merge
-                # owns this batch, then later prepares rebuild on the fresh
-                # snapshot (in-flight ones self-invalidate at commit)
-                m = merge_apply(spark, table, batch_df(group), bid,
-                                stages=stages, winner_stages=winner_stages,
-                                mode="mor", changelog=changelog)
-                assumed = table.snapshot()
-            if i + depth - 1 < len(groups):
-                futs.append(submit(groups[i + depth - 1]))
-            out.append(m)
-            if metrics_path:
-                os.makedirs(os.path.dirname(metrics_path) or ".", exist_ok=True)
-                with open(metrics_path, "a") as f:
-                    f.write(json.dumps(m.to_dict()) + "\n")
-            if compact_every and i % compact_every == 0:
-                compact_state(spark, table)
+                m = merge_mod.merge_apply(spark, table, batch_df(group), bid, stages=stages,
+                                          winner_stages=winner_stages, mode=mode,
+                                          precomputed=None if mor else ahead, changelog=changelog)
+                if mor:
+                    assumed = table.snapshot()
+            if i + _IN_FLIGHT < len(groups):
+                futs.append(speculate(groups[i + _IN_FLIGHT]))
+            out.append(sink(m))
     return out

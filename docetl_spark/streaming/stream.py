@@ -27,8 +27,6 @@ stream state.
 
 from __future__ import annotations
 
-import json
-import os
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,6 +34,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from docetl_spark.cdc.merge import TransformStage, merge_apply
+from docetl_spark.cdc.replay import append_metrics, merge_sink
 from docetl_spark.lake.table import LakeTable
 
 
@@ -53,6 +52,19 @@ def read_change_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(path)
+
+
+def _start(stream: DataFrame, apply_batch, query_name: str, checkpoint_dir: str,
+           trigger_available_now: bool) -> StreamingQuery:
+    """Start ``apply_batch`` as the stream's idempotent foreachBatch sink."""
+    writer = (
+        stream.writeStream.foreachBatch(apply_batch)
+        .queryName(query_name)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_changes(
@@ -83,30 +95,13 @@ def stream_changes(
     """
     stages = list(stages)
     winner_stages = list(winner_stages)
-    applied_count = {"n": 0}
+    sink = merge_sink(spark, table, metrics_path, compact_every)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        m = merge_apply(spark, table, batch_df, int(batch_id), stages=stages,
-                        winner_stages=winner_stages, mode=mode)
-        if metrics_path:
-            os.makedirs(os.path.dirname(metrics_path) or ".", exist_ok=True)
-            with open(metrics_path, "a") as f:
-                f.write(json.dumps(m.to_dict()) + "\n")
-        if not m.skipped and compact_every:
-            applied_count["n"] += 1
-            if applied_count["n"] % compact_every == 0:
-                from docetl_spark.cdc.replay import compact_state
+        sink(merge_apply(spark, table, batch_df, int(batch_id), stages=stages,
+                         winner_stages=winner_stages, mode=mode))
 
-                compact_state(spark, table)
-
-    writer = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(changes, apply_batch, query_name, checkpoint_dir, trigger_available_now)
 
 
 def stream_dedup_ingest(
@@ -138,28 +133,17 @@ def stream_dedup_ingest(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         stats = dedup_ingest(spark, table, batch_df, int(batch_id),
                              id_col, text_col, **dedup_kwargs)
-        if metrics_path:
-            os.makedirs(os.path.dirname(metrics_path) or ".", exist_ok=True)
-            with open(metrics_path, "a") as f:
-                rec = {
-                    "batch_id": int(batch_id),
-                    "batch_docs": stats.batch_docs,
-                    "dropped_cross": stats.dropped_cross,
-                    "dropped_within": stats.dropped_within,
-                    "kept": stats.kept,
-                    "skipped": stats.merge.skipped,
-                    "snapshot_version": stats.merge.snapshot_version,
-                }
-                f.write(json.dumps(rec) + "\n")
+        append_metrics(metrics_path, {
+            "batch_id": int(batch_id),
+            "batch_docs": stats.batch_docs,
+            "dropped_cross": stats.dropped_cross,
+            "dropped_within": stats.dropped_within,
+            "kept": stats.kept,
+            "skipped": stats.merge.skipped,
+            "snapshot_version": stats.merge.snapshot_version,
+        })
 
-    writer = (
-        docs.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, apply_batch, query_name, checkpoint_dir, trigger_available_now)
 
 
 def stream_ivf_ingest(
@@ -193,23 +177,12 @@ def stream_ivf_ingest(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         stats = ivf_ingest(spark, table, batch_df, int(batch_id),
                            id_col, vec_col, **ivf_kwargs)
-        if metrics_path:
-            os.makedirs(os.path.dirname(metrics_path) or ".", exist_ok=True)
-            with open(metrics_path, "a") as f:
-                rec = {
-                    "batch_id": int(batch_id),
-                    "batch_rows": stats.batch_rows,
-                    "index_entries": stats.index_entries,
-                    "skipped": stats.merge.skipped,
-                    "snapshot_version": stats.merge.snapshot_version,
-                }
-                f.write(json.dumps(rec) + "\n")
+        append_metrics(metrics_path, {
+            "batch_id": int(batch_id),
+            "batch_rows": stats.batch_rows,
+            "index_entries": stats.index_entries,
+            "skipped": stats.merge.skipped,
+            "snapshot_version": stats.merge.snapshot_version,
+        })
 
-    writer = (
-        vectors.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(vectors, apply_batch, query_name, checkpoint_dir, trigger_available_now)

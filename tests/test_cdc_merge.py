@@ -7,6 +7,7 @@ equals a declarative oracle computed from the same events.
 """
 
 import os
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -720,3 +721,25 @@ def test_fused_small_merge_equals_classic_path(spark, tmp_path, events, monkeypa
             (F.col("repo") == "r0") & (F.col("path") == "p0") & (F.col("commit") == "c0")
         ).collect()
         assert after[0]["content"] == stored[0]["content"] != "late-duplicate"
+
+
+def test_unstatable_files_warn_and_keep_state(spark, tmp_path, events, monkeypatch):
+    # the CoW byte gate stats the affected bucket files; where it cannot
+    # (object storage) the fused path and the consolidating write turn
+    # off — with a warning naming the table, never silently
+    t_ok = create_cdc_table(str(tmp_path / "ok"), KEYS, num_buckets=4)
+    replay_events(spark, t_ok, events)
+
+    t_bad = create_cdc_table(str(tmp_path / "bad"), KEYS, num_buckets=4)
+    real = os.path.getsize
+
+    def getsize(p):
+        if str(p).startswith(t_bad.path):
+            raise OSError(f"no local stat for {p}")
+        return real(p)
+
+    monkeypatch.setattr(os.path, "getsize", getsize)
+    with pytest.warns(RuntimeWarning, match=rf"CoW merge into {re.escape(t_bad.path)}: .*OSError"):
+        replay_events(spark, t_bad, events)
+    monkeypatch.undo()
+    assert state_hashes(read_state(spark, t_bad)) == state_hashes(read_state(spark, t_ok))

@@ -123,22 +123,29 @@ def test_compact_after_mode_switch_restores_unique_keys(spark, tmp_path):
     assert got == want
 
 
-def test_mor_pipelined_equals_serial_replay(spark, tmp_path, monkeypatch):
+def _serial_mor(spark, table, events, batch_ids, **kwargs):
+    """The reference every MOR replay must match: one plain
+    ``merge_apply(mode="mor")`` per batch, no speculation."""
+    return [
+        merge_apply(spark, table, events.filter(F.col("batch_id") == b), b, mode="mor", **kwargs)
+        for b in batch_ids
+    ]
+
+
+def test_mor_pipelined_equals_serial_replay(spark, tmp_path):
     # the write-job pipeline must be invisible in every observable: final
     # state, fence, delta flag, commit-per-batch history, and winner-stage
-    # output (the bench shape). Batch 0 additionally exercises the
-    # evolution fallback: the fresh table evolves its schema on the first
-    # batch, so its prepare self-invalidates and the classic path owns it.
+    # output (the bench shape). Batch 0 additionally evolves the fresh
+    # table's schema inside a prepare, and batch 1's prepare — made
+    # against the pre-evolution snapshot — publishes over the evolved one.
     events = _events(spark)
     stage = [lambda df: df.withColumn("n_chars", F.length("content"))]
 
     t_pipe = create_cdc_table(str(tmp_path / "pipe"), KEYS, num_buckets=4)
-    monkeypatch.delenv("SPARK_GRAFT_MOR_PIPELINE", raising=False)
     m_pipe = replay_events(spark, t_pipe, events, mode="mor", winner_stages=stage)
 
     t_ser = create_cdc_table(str(tmp_path / "ser"), KEYS, num_buckets=4)
-    monkeypatch.setenv("SPARK_GRAFT_MOR_PIPELINE", "0")
-    m_ser = replay_events(spark, t_ser, events, mode="mor", winner_stages=stage)
+    m_ser = _serial_mor(spark, t_ser, events, range(4), winner_stages=stage)
 
     cols = [*KEYS, "lsn", "lang", "content", "n_chars"]
     assert df_rows(read_state(spark, t_pipe).select(*cols)) == df_rows(
@@ -157,11 +164,10 @@ def test_mor_pipelined_equals_serial_replay(spark, tmp_path, monkeypatch):
 
 def test_failed_prepare_falls_back_to_classic_merge(spark, tmp_path, monkeypatch):
     # a speculative prepare that raises must not abort the replay: the
-    # batch runs through the classic merge, with a warning naming it
+    # batch runs through merge_apply, with a warning naming it
     import docetl_spark.cdc.merge as merge_mod
 
     events = _events(spark)
-    monkeypatch.delenv("SPARK_GRAFT_MOR_PIPELINE", raising=False)
     t_ok = create_cdc_table(str(tmp_path / "ok"), KEYS, num_buckets=4)
     replay_events(spark, t_ok, events, mode="mor")
 
@@ -202,17 +208,90 @@ def test_failed_stats_prefetch_warns_and_recomputes(spark, tmp_path, monkeypatch
     assert got == df_rows(final_state_oracle(events).select(*KEYS, "lsn", "content"))
 
 
-def test_empty_batch_history_matches_across_replay_paths(spark, tmp_path, monkeypatch):
-    # batch 2 has no events: both replay paths commit a fence-advance-only
-    # merge, and the history records must not say which path ran it
+def test_empty_batch_history_matches_across_replay_paths(spark, tmp_path):
+    # batch 2 has no events: the pipelined replay and a plain merge_apply
+    # loop both commit a fence-advance-only merge, and the history records
+    # must not say which path ran it
     events = _events(spark).filter(F.col("batch_id") != 2)
+    t_pipe = create_cdc_table(str(tmp_path / "pipe"), KEYS, num_buckets=4)
+    m_pipe = replay_events(spark, t_pipe, events, batch_ids=[0, 1, 2, 3], mode="mor")
+    t_ser = create_cdc_table(str(tmp_path / "ser"), KEYS, num_buckets=4)
+    m_ser = _serial_mor(spark, t_ser, events, [0, 1, 2, 3])
     summaries = []
-    for pipeline in ("1", "0"):
-        monkeypatch.setenv("SPARK_GRAFT_MOR_PIPELINE", pipeline)
-        table = create_cdc_table(str(tmp_path / f"p{pipeline}"), KEYS, num_buckets=4)
-        m = replay_events(spark, table, events, batch_ids=[0, 1, 2, 3], mode="mor")
+    for table, m in ((t_pipe, m_pipe), (t_ser, m_ser)):
         assert [x.keys_in_batch == 0 for x in m] == [False, False, True, False]
         (rec,) = [h for h in table.history() if h["summary"].get("batch_id") == 2]
         summaries.append(rec["summary"])
     pipe, ser = summaries
     assert (pipe["operation"], pipe["mode"]) == (ser["operation"], ser["mode"]) == ("merge", "mor")
+
+
+def test_pipelined_replay_across_rewrite_widening(spark, tmp_path, monkeypatch):
+    # x widens long -> double mid-replay (beyond what the parquet reader
+    # upcasts) and y appears: prepares made against the pre-widening
+    # schema drop out, merge_apply runs the one-time rewrite, and later
+    # prepares publish against the widened schema
+    import docetl_spark.cdc.merge as merge_mod
+
+    table = create_cdc_table(str(tmp_path / "t"), ["k"], num_buckets=4)
+    seed = [(i, 0, "I", f"k{i}", i * 10) for i in range(8)]
+    merge_apply(spark, table, spark.createDataFrame(
+        seed, "lsn long, batch_id long, op string, k string, x long"), 0, mode="mor")
+
+    rows = [
+        (100 * b + j, b, "D" if (b, j) == (3, 0) else "U", f"k{(b + j) % 8}", (b + j) % 8 + b / 4, f"y{b}")
+        for b in range(1, 5) for j in range(4)
+    ]
+    events = spark.createDataFrame(rows, "lsn long, batch_id long, op string, k string, x double, y string")
+
+    real = merge_mod.prepare_mor_merge
+    prepared = {}
+
+    def spy(*args, **kwargs):
+        prep = real(*args, **kwargs)
+        prepared[args[3]] = prep is not None
+        return prep
+
+    monkeypatch.setattr(merge_mod, "prepare_mor_merge", spy)
+    m = replay_events(spark, table, events, mode="mor")
+    assert [x.batch_id for x in m] == [1, 2, 3, 4] and not any(x.skipped for x in m)
+    assert prepared[1] is False and prepared[4] is True
+
+    want = {f"k{i}": (float(i * 10), None) for i in range(8)}
+    for _, _, op, k, x, y in sorted(rows):
+        if op == "D":
+            want.pop(k, None)
+        else:
+            want[k] = (x, y)
+    got = read_state(spark, table)
+    assert got.schema["x"].dataType.simpleString() == "double"
+    assert {r["k"]: (r["x"], r["y"]) for r in got.collect()} == want
+
+    hist = table.history()
+    seeded = next(i for i, h in enumerate(hist) if h["summary"].get("batch_id") == 0)
+    tail = hist[seeded + 1:]
+    assert [h["operation"] for h in tail] == ["widen-rewrite"] + ["merge"] * 4
+    assert [h["summary"]["batch_id"] for h in tail[1:]] == [1, 2, 3, 4]
+    assert table.snapshot().properties["cdc.last-batch-id"] == "4"
+
+
+def test_prepared_merge_publishes_only_on_its_schema(spark, tmp_path):
+    # a prepare made before another commit added a column must not
+    # publish: its schema lacks the column and would drop it from the table
+    from docetl_spark.cdc.merge import commit_prepared_merge, prepare_mor_merge
+
+    table = create_cdc_table(str(tmp_path / "t"), ["k"], num_buckets=2)
+    ddl = "lsn long, op string, k string, x long"
+    merge_apply(spark, table, spark.createDataFrame([(1, "I", "a", 1)], ddl), 0, mode="mor")
+    late = spark.createDataFrame([(3, "U", "b", 2)], ddl)
+    stale = prepare_mor_merge(spark, table, late, 2, table.snapshot())
+    merge_apply(spark, table, spark.createDataFrame([(2, "U", "a", 5, "new")], ddl + ", y string"), 1,
+                mode="mor")
+    assert commit_prepared_merge(table, stale) is None
+
+    fresh = prepare_mor_merge(spark, table, late, 2, table.snapshot())
+    m = commit_prepared_merge(table, fresh)
+    assert m is not None and not m.skipped and m.keys_in_batch == 1
+    assert commit_prepared_merge(table, fresh).skipped  # fenced redelivery
+    got = {r["k"]: (r["x"], r["y"]) for r in read_state(spark, table).collect()}
+    assert got == {"a": (5, "new"), "b": (2, None)}
