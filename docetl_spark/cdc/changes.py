@@ -29,6 +29,17 @@ How each commit kind contributes changes
   widen-rewrite, index prune/reindex — change files but not logical rows:
   skipped, exactly like Iceberg incremental reads skip REPLACE snapshots.
 
+Read shape: the whole range is ONE parquet scan per distinct read schema,
+never a union of per-commit scans. Files the parquet reader can upcast
+(additive columns, int->long, float->double, ...) all read through the
+end schema in one scan; only slices it cannot upcast (long-typed deltas
+from before a long->double widen-rewrite, see
+``_unsupported_upcast_paths``) get a scan of their own, cast by
+``_align``. Each row's ``_commit_version`` / ``_commit_timestamp_ms``
+comes from a file -> commit lookup on ``_metadata.file_name``, built
+from ``plan_changes``. Driver planning therefore costs a constant number
+of py4j round trips however many commits the range spans.
+
 Feed semantics: per-COMMIT deltas, not net-of-range. In MOR mode a
 commit's winners may still lose to an already-stored higher LSN at read
 time; the feed therefore carries ``lsn`` and consumers resolve LWW
@@ -57,7 +68,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from docetl_spark.cdc.merge import DELETED_COL, FENCE_PROP, MergeMetrics, _align
+from docetl_spark.cdc.merge import (
+    DELETED_COL,
+    FENCE_PROP,
+    MergeMetrics,
+    _align,
+    _unsupported_upcast_paths,
+)
 from docetl_spark.lake.table import LakeTable
 
 CHANGE_TYPE_COL = "_change_type"  # 'upsert' | 'delete'
@@ -126,6 +143,20 @@ def plan_changes(table: LakeTable, since_version: int, to_version: int) -> list[
     return out
 
 
+def feed_schema(table_schema: T.StructType) -> T.StructType:
+    """The change feed's schema over a table schema: the table's columns,
+    then the three non-null system columns. Both ``read_changes`` and
+    the ``lakefeed`` source return it."""
+    return T.StructType(
+        list(table_schema.fields)
+        + [
+            T.StructField(CHANGE_TYPE_COL, T.StringType(), False),
+            T.StructField(COMMIT_VERSION_COL, T.LongType(), False),
+            T.StructField(COMMIT_TS_COL, T.LongType(), False),
+        ]
+    )
+
+
 def read_changes(
     spark: SparkSession,
     table: LakeTable,
@@ -135,49 +166,99 @@ def read_changes(
     """Row-level changes committed AFTER ``since_version``, up to and
     including ``to_version`` (default: current version).
 
-    Returns the table schema (aligned to ``to_version``'s schema, so
-    in-range evolution reads back consistently: columns added later come
-    back null for earlier commits) plus three system columns:
+    Returns ``feed_schema`` of ``to_version``'s schema: the table columns
+    (in-range evolution reads back consistently — columns added later
+    come back null for earlier commits) plus three system columns:
     ``_change_type`` ('upsert'/'delete' from the tombstone flag),
     ``_commit_version`` and ``_commit_timestamp_ms``.
 
     Scale shape: one metadata read per version in the range (driver-side,
-    tiny JSON) and one parquet scan over exactly the files each commit
-    added (or its changelog sidecar) — O(changes), never O(table), and
-    nothing shuffles. Filters on the result push into those scans.
+    tiny JSON), then ONE parquet scan per distinct read schema over
+    exactly the files the range's commits added (or their changelog
+    sidecars) — O(changes), never O(table), and nothing shuffles. The
+    common case is a single scan through the end schema, which the parquet
+    reader upcasts older files through (as ``LakeTable.read`` does); only
+    slices the reader cannot upcast (``_unsupported_upcast_paths``, e.g.
+    long-typed deltas from before a long->double widen-rewrite) get their
+    own scan, cast by ``_align``. Each row's commit columns come from a
+    file -> commit lookup on ``_metadata.file_name``, so planning costs a
+    constant number of driver round trips whatever the range length.
+    Filters on data columns push into the scans; the commit columns are
+    per-row lookups, so bound a range by ``since_version`` /
+    ``to_version``, not by filtering them.
     """
     end = to_version if to_version is not None else table.current_version()
     end_schema = table.snapshot(end).schema
-    is_delete = (
-        F.coalesce(F.col(DELETED_COL), F.lit(False))
-        if DELETED_COL in end_schema.fieldNames()
-        else F.lit(False)
-    )
-    parts: list[DataFrame] = []
+    out_schema = feed_schema(end_schema)
+    groups: dict[str, tuple[T.StructType, list[ChangeSlice]]] = {}
     for sl in plan_changes(table, since_version, end):
-        src = spark.read.schema(sl.schema).parquet(
-            *[os.path.join(table.path, f) for f in sl.files]
-        )
-        parts.append(
-            _align(src, end_schema)
-            .withColumn(CHANGE_TYPE_COL, F.when(is_delete, "delete").otherwise("upsert"))
-            .withColumn(COMMIT_VERSION_COL, F.lit(sl.version).cast("long"))
-            .withColumn(COMMIT_TS_COL, F.lit(sl.timestamp_ms).cast("long"))
-        )
-    if not parts:
-        empty = T.StructType(
-            list(end_schema.fields)
-            + [
-                T.StructField(CHANGE_TYPE_COL, T.StringType(), False),
-                T.StructField(COMMIT_VERSION_COL, T.LongType(), False),
-                T.StructField(COMMIT_TS_COL, T.LongType(), False),
-            ]
-        )
-        return spark.createDataFrame([], empty)
+        read_schema = sl.schema if _unsupported_upcast_paths(sl.schema, end_schema) else end_schema
+        groups.setdefault(read_schema.json(), (read_schema, []))[1].append(sl)
+    if not groups:
+        return spark.createDataFrame([], out_schema)
+    parts = [
+        _align(_scan_slices(spark, table, read_schema, slices), out_schema)
+        for read_schema, slices in groups.values()
+    ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _scan_slices(
+    spark: SparkSession, table: LakeTable, read_schema: T.StructType, slices: list[ChangeSlice]
+) -> DataFrame:
+    """One parquet scan over every file of ``slices`` through
+    ``read_schema``, plus the three system columns. The commit columns are
+    looked up per row from the file it was read from: parallel literal
+    arrays of file basename / version / timestamp, indexed by
+    ``array_position`` of ``_metadata.file_name``. The column comes from
+    ``metadataColumn`` so a data column named ``_metadata`` cannot shadow
+    it. A file missing from the lookup makes ``element_at`` raise on index
+    0 instead of returning a wrong commit; under ANSI mode (the Spark 4
+    default) that failure contract is also what keeps both columns
+    non-null, as ``feed_schema`` declares them."""
+    version_of: dict[str, ChangeSlice] = {}
+    paths: list[str] = []
+    for sl in slices:
+        for f in sl.files:
+            paths.append(os.path.join(table.path, f))
+            prev = version_of.setdefault(os.path.basename(f), sl)
+            if prev.version != sl.version:
+                raise ValueError(
+                    f"change feed: file name {os.path.basename(f)!r} was added by both "
+                    f"version {prev.version} and version {sl.version}; the file -> commit "
+                    "lookup cannot attribute its rows"
+                )
+    names = list(version_of)
+    scan = table.scan(spark, read_schema, paths)
+    pos = F.array_position(
+        F.expr(_sql_array([_sql_str(n) for n in names])),
+        scan.metadataColumn("_metadata").getField("file_name"),
+    ).cast("int")
+
+    def lookup(values: list[int]):
+        return F.element_at(F.expr(_sql_array([f"{v}L" for v in values])), pos)
+
+    is_delete = (
+        F.coalesce(F.col(DELETED_COL), F.lit(False))
+        if DELETED_COL in read_schema.fieldNames()
+        else F.lit(False)
+    )
+    return scan.withColumns({
+        CHANGE_TYPE_COL: F.when(is_delete, "delete").otherwise("upsert"),
+        COMMIT_VERSION_COL: lookup([version_of[n].version for n in names]),
+        COMMIT_TS_COL: lookup([version_of[n].timestamp_ms for n in names]),
+    })
+
+
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_array(items: list[str]) -> str:
+    return f"array({', '.join(items)})"
 
 
 def changes_as_batch(feed: DataFrame, batch_col_from: str = COMMIT_VERSION_COL) -> DataFrame:

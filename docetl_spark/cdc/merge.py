@@ -185,10 +185,17 @@ def _widen_rewrite(spark: SparkSession, table, snap, evolved: T.StructType):
 
 def _align(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Project ``df`` onto ``schema``: missing columns become typed nulls,
-    shared columns cast to the (possibly widened) target type."""
-    have = set(df.columns)
+    shared columns cast to the (possibly widened) target type. Built by
+    column name — columns that already match pass through as plain
+    names, only missing or retyped ones get ``lit``/``cast`` — and ``df``
+    comes back unchanged when it already has the target names, order and
+    types (nullability aside)."""
+    have = {f.name: f.dataType for f in df.schema.fields}
+    if list(have.items()) == [(f.name, f.dataType) for f in schema.fields]:
+        return df
     cols = [
-        (F.col(f.name).cast(f.dataType) if f.name in have else F.lit(None).cast(f.dataType)).alias(f.name)
+        f.name if have.get(f.name) == f.dataType
+        else (F.col(f.name).cast(f.dataType) if f.name in have else F.lit(None).cast(f.dataType)).alias(f.name)
         for f in schema.fields
     ]
     return df.select(*cols)
@@ -204,19 +211,15 @@ def dedup_last_writer(
     (skew-safe) and ties on lsn break deterministically by the struct
     comparison. Mirrors LWW-by-LSN from the north rule. If ``count_col`` is
     given, a per-key pre-dedup event count rides along (same shuffle, free).
+    Output: the key columns, ``order_col``, the other payload columns in
+    input order, then ``count_col``.
     """
-    payload = [c for c in batch.columns if c not in key_cols]
-    packed = F.struct(F.col(order_col), *[F.col(c) for c in payload if c != order_col])
-    aggs = [F.max(packed).alias("_w")]
+    payload = [c for c in batch.columns if c not in key_cols and c != order_col]
+    aggs = [F.max(F.struct(order_col, *payload)).alias("_w")]
     if count_col:
         aggs.append(F.count(F.lit(1)).alias(count_col))
     won = batch.groupBy(*key_cols).agg(*aggs)
-    out_cols = [F.col(k) for k in key_cols] + [
-        F.col(f"_w.{c}").alias(c) for c in [order_col] + [c for c in payload if c != order_col]
-    ]
-    if count_col:
-        out_cols.append(F.col(count_col))
-    return won.select(*out_cols)
+    return won.select(*key_cols, "_w.*", *([count_col] if count_col else []))
 
 
 @dataclass

@@ -281,17 +281,16 @@ def ivf_stored_recall_at_k(
     appends + fence repair end to end. O(|Q|·|corpus|) by design: run on
     a bounded query sample, like every recall certificate here."""
     from docetl_spark.cdc.replay import read_state
-    from docetl_spark.functions.ann import _collect_queries_raw, _recall_against_brute
+    from docetl_spark.functions.ann import _collect_queries, _recall_against_brute
 
     pairs, q, _ = _stored_candidate_pairs(
         spark, table, queries, id_col, vec_col, n_probe, query_id_col
     )
     state = read_state(spark, table)
     c = state.select(F.col(id_col).alias("_nid"), l2_normalize(vec_col).alias("_cv"))
-    return _recall_against_brute(
-        c, q, k, pairs,
-        q_rows=_collect_queries_raw(queries, query_id_col or id_col, vec_col),
-    )
+    # the query rows come from the checkpointed q that produced the pairs:
+    # re-scanning ``queries`` could draw a different sample
+    return _recall_against_brute(c, q, k, pairs, q_rows=_collect_queries(q))
 
 
 def prune_ivf_orphans(spark: SparkSession, table: LakeTable, conflict_retries: int = 3):

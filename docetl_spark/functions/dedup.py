@@ -261,6 +261,12 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str, max_hamming: int = 
 
 # -- exact jaccard over candidate pairs --------------------------------------
 
+# Candidate pairs up to which ngram_jaccard_pairs broadcasts the candidate-id
+# set (at most twice as many ids — a few MB of longs). Larger sets would
+# ship an unbounded hash table to every executor.
+NGRAM_BROADCAST_MAX_PAIRS = 250_000
+
+
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3, threshold: float = 0.5,
     candidates: DataFrame | None = None, num_hashes: int = 32, bands: int = 16,
@@ -286,7 +292,11 @@ def ngram_jaccard_pairs(
     wanted = candidates.select(F.col("_id1").alias(id_col)).union(
         candidates.select(F.col("_id2").alias(id_col))
     )
-    pruned = df.join(F.broadcast(wanted), id_col, "left_semi")
+    # the count fills the persist the three consumers read anyway; past the
+    # bound the planner picks the join strategy from the runtime size
+    if candidates.count() <= NGRAM_BROADCAST_MAX_PAIRS:
+        wanted = F.broadcast(wanted)
+    pruned = df.join(wanted, id_col, "left_semi")
     sh = pruned.select(F.col(id_col).alias("_id"), shingles(text_col, shingle_n).alias("_sh"))
     s1 = sh.select(F.col("_id").alias("_id1"), F.col("_sh").alias("_sh1"))
     s2 = sh.select(F.col("_id").alias("_id2"), F.col("_sh").alias("_sh2"))

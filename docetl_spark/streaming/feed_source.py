@@ -59,23 +59,13 @@ from docetl_spark.cdc.changes import (
     CHANGE_TYPE_COL,
     COMMIT_TS_COL,
     COMMIT_VERSION_COL,
+    feed_schema,
     plan_changes,
 )
 from docetl_spark.cdc.merge import DELETED_COL
 from docetl_spark.lake.table import LakeTable, stats_may_intersect
 
 FORMAT_NAME = "lakefeed"
-
-
-def feed_schema(table_schema: T.StructType) -> T.StructType:
-    return T.StructType(
-        list(table_schema.fields)
-        + [
-            T.StructField(CHANGE_TYPE_COL, T.StringType(), False),
-            T.StructField(COMMIT_VERSION_COL, T.LongType(), False),
-            T.StructField(COMMIT_TS_COL, T.LongType(), False),
-        ]
-    )
 
 
 @dataclass

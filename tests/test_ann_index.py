@@ -229,3 +229,25 @@ def test_ivf_ingest_reserved_columns_refused(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="reserved"):
         ivf_ingest(spark, t, bad, 0, id_col="vec_id", vec_col="emb")
+
+
+def test_ivf_stored_recall_scores_the_checkpointed_sample(spark, corpus_table):
+    """The certificate must score the query rows that produced its
+    candidate pairs. An unseeded sample over a randomly ordered frame draws
+    a different set on every scan, so the result has to equal the
+    certificate over the materialized sample it reports."""
+    import random
+
+    emb = _clustered(spark)
+    ivf_ingest(spark, corpus_table, emb, 0, "vec_id", "embedding", n_centroids=8)
+    shuffle_key = F.udf(lambda: random.random(), "double").asNondeterministic()
+    queries = emb.orderBy(shuffle_key()).sample(fraction=0.25)
+
+    rec = ivf_stored_recall_at_k(spark, corpus_table, queries, "vec_id", "embedding",
+                                 k=3, n_probe=2)
+    got = sorted((r["query_id"], r["recall"]) for r in rec.collect())
+    drawn = [q for q, _ in got]
+    assert drawn
+    ref = ivf_stored_recall_at_k(spark, corpus_table, emb.filter(F.col("vec_id").isin(drawn)),
+                                 "vec_id", "embedding", k=3, n_probe=2)
+    assert got == sorted((r["query_id"], r["recall"]) for r in ref.collect())

@@ -503,3 +503,25 @@ def test_bm25_fit_for_query_oneshot_contract(spark, tmp_path):
 
     with pytest.raises(ValueError, match="fixed query"):
         st.term_idfs(["gamma"])
+
+
+def test_ngram_jaccard_broadcast_hint_is_count_gated(spark, docs, monkeypatch):
+    """The candidate-id set is broadcast only up to
+    NGRAM_BROADCAST_MAX_PAIRS candidate pairs; above it the hint is gone
+    and the verified pairs are unchanged."""
+    from docetl_spark.functions import dedup
+
+    ids = [r["id"] for r in docs.select("id").collect()]
+    cands = spark.createDataFrame([(a, b) for a in ids for b in ids if a < b], "_id1 long, _id2 long")
+
+    def run():
+        out = ngram_jaccard_pairs(docs, "id", "text", threshold=0.5, candidates=cands)
+        hinted = "strategy=broadcast" in out._jdf.queryExecution().analyzed().toString()
+        return hinted, sorted(tuple(r) for r in out.collect())
+
+    hinted, small = run()
+    assert hinted
+    monkeypatch.setattr(dedup, "NGRAM_BROADCAST_MAX_PAIRS", cands.count() - 1)
+    hinted, large = run()
+    assert not hinted
+    assert large == small and (0, 1, 1.0) in large

@@ -7,6 +7,8 @@ checks the physical plan for the properties that matter at 100 TB:
 * WholeStageCodegen spans exist (expressions stayed JVM-side)
 * no WindowExec without partitioning (single-partition sort) outside
   intentional global top-k
+* change-feed reads run one parquet scan per read schema, not one per
+  commit
 
 Usage: python tools/explain_audit.py [sf_dir] [query ...]
 """
@@ -47,12 +49,20 @@ CROSS_OK = {
 # lsh_recall_at_k, so its returned plan is a local relation — auditing it
 # would pay the full pipeline to inspect nothing).
 SKIP = {"cdc_merge_lww", "cdc_stream_lww", "cluster_docs", "incremental_dedup_docs", "knn_lsh_top5"}
+# Change-feed reads: one parquet scan per distinct read schema
+# (cdc/changes.py), never a union of per-commit scans.
+FEED_QUERIES = {"cdc_change_feed", "cdc_feed_net_slice"}
 
 
 def audit(name: str, plan: str) -> list[str]:
     issues = []
     if ("CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan) and name not in CROSS_OK:
         issues.append("cartesian/nested-loop join present")
+    if name in FEED_QUERIES:
+        schemas = re.findall(r"FileScan parquet .*ReadSchema: (\S+)", plan)
+        if len(schemas) > len(set(schemas)):
+            issues.append(f"change feed: {len(schemas)} parquet scans for "
+                          f"{len(set(schemas))} read schema(s)")
     # note: WholeStageCodegen spans aren't visible in a pre-execution
     # AdaptiveSparkPlan string, so codegen presence isn't checkable here
     if name not in GLOBAL_ORDER_OK:
