@@ -29,7 +29,7 @@ Scale design notes
   merge reads + rewrites ONLY buckets the batch keys land in. A batch
   touching 1% of key space reads+rewrites ~1% of the table.
 * **Broadcast is gated, AQE backstops.** The winning keyset is broadcast
-  only below ``broadcast_key_limit`` keys; above it the joins fall back to
+  only up to ``BROADCAST_KEY_LIMIT`` keys; above it the joins fall back to
   AQE-planned shuffle joins (with skew-split enabled in the session).
 
 The reference's analogue is in-memory ``{**item, **output}`` row merging
@@ -62,30 +62,36 @@ DELETED_COL = "_deleted"  # tombstone flag: deletes keep (key, lsn) so a
 
 TransformStage = Callable[[DataFrame], DataFrame]
 
-# -- scale-adaptive knobs (env-overridable, guide §2: partitioning must
-# derive from input size, not a constant tuned for one deployment) --------
+# -- engine constants, read at call time so a test can monkeypatch one
+# (e.g. to force the other side of a size gate) ----------------------------
 
-def _cow_consolidate_bytes() -> int:
-    """CoW merges whose affected buckets hold at most this many bytes
-    shuffle the (small) survivors together with the winners so every
-    rewritten bucket lands in exactly ONE file. Without it, file-aligned
-    survivor writes fragment each bucket by ~one file per batch, and the
-    per-merge driver cost (file listing, footer stats, scan planning)
-    grows linearly with batch count — measured 435 ms/merge of pure
-    driver plan-building at 48 files vs ~150 ms at 16. Above the
-    threshold the wide-row rule wins (survivors never shuffle; periodic
-    compaction owns file counts)."""
-    return int(os.environ.get("SPARK_GRAFT_COW_CONSOLIDATE_BYTES", str(256 << 20)))
+# CoW merges whose affected buckets hold at most this many bytes shuffle
+# the (small) survivors together with the winners so every rewritten
+# bucket lands in exactly ONE file, and take the fused small-merge path.
+# Without it, file-aligned survivor writes fragment each bucket by ~one
+# file per batch, and the per-merge driver cost (file listing, footer
+# stats, scan planning) grows linearly with batch count — measured
+# 435 ms/merge of pure driver plan-building at 48 files vs ~150 ms at 16.
+# Above the gate the wide-row rule wins (survivors never shuffle;
+# periodic compaction owns file counts).
+COW_CONSOLIDATE_BYTES = 256 << 20
 
+# CoW batches of at most this many events are persisted for the merge's
+# duration: the batch plan is read 2-3x (winning-key aggregate, winner
+# join-back) and for small batches a one-shot cache is cheaper than
+# re-running the scan+filter lineage each time. Large batches stream
+# (caching 10^9 rows trades a cheap rescan for executor memory/disk
+# pressure).
+BATCH_PERSIST_ROWS = 4_000_000
 
-def _batch_persist_rows() -> int:
-    """Batches at or below this many events are persisted for the merge's
-    duration: the batch plan is read 2-3x (winning-key aggregate, winner
-    join-back) and for small batches a one-shot cache is cheaper than
-    re-running the scan+filter lineage each time. Large batches stream
-    (caching 10^9 rows trades a cheap rescan for executor memory/disk
-    pressure — the wrong trade, so the gate defaults to 4M events)."""
-    return int(os.environ.get("SPARK_GRAFT_BATCH_PERSIST_ROWS", str(4_000_000)))
+# Winning-key sets up to this many keys are broadcast; above it the joins
+# are left to AQE, and a MOR batch dedups in one struct-max aggregate
+# (see ``_select_winners``).
+BROADCAST_KEY_LIMIT = 500_000
+
+# CAS attempts of ``commit_prepared_merge`` against unrelated commits
+# (compaction, a concurrent stream) before it hands the batch back.
+PREPARED_COMMIT_RETRIES = 5
 
 
 def reject_reserved_columns(df: DataFrame, caller: str,
@@ -261,8 +267,8 @@ def _staged(df: DataFrame, stages: Iterable[TransformStage]) -> DataFrame:
     return df
 
 
-def _fence(snap: Snapshot, fence_prop: str) -> int:
-    return int(snap.properties.get(fence_prop, "-1"))
+def _fence(snap: Snapshot) -> int:
+    return int(snap.properties.get(FENCE_PROP, "-1"))
 
 
 def _skipped(batch_id: int, snap: Snapshot) -> MergeMetrics:
@@ -356,13 +362,13 @@ def _batch_stats(table: LakeTable, snap: Snapshot, wk: DataFrame, batch_id: int,
     return metrics, sorted(counts), int(sum(r["dup_lsn_keys"] for r in rows)) > 0
 
 
-def _bcast(df: DataFrame, metrics: MergeMetrics, limit: int) -> DataFrame:
-    return F.broadcast(df) if metrics.keys_in_batch <= limit else df
+def _bcast(df: DataFrame, metrics: MergeMetrics) -> DataFrame:
+    return F.broadcast(df) if metrics.keys_in_batch <= BROADCAST_KEY_LIMIT else df
 
 
 def _select_winners(
     batch: DataFrame, won: DataFrame, key_cols: list[str], metrics: MergeMetrics,
-    ties: bool, limit: int, winner_stages, evolved: T.StructType,
+    ties: bool, winner_stages, evolved: T.StructType,
     cur_beats: DataFrame | None = None, single_phase: bool = False,
 ) -> DataFrame:
     """Phase 2: the winning payload rows of ``batch``, winner-staged and
@@ -383,11 +389,11 @@ def _select_winners(
       batch scan, no wide shuffle; duplicate-LSN keys get the struct-max
       tiebreak over the (small) winner set."""
     if metrics.keys_in_batch == metrics.events_in:
-        winners = batch if cur_beats is None else batch.join(_bcast(cur_beats, metrics, limit), key_cols, "left_anti")
-    elif single_phase and metrics.keys_in_batch > limit:
+        winners = batch if cur_beats is None else batch.join(_bcast(cur_beats, metrics), key_cols, "left_anti")
+    elif single_phase and metrics.keys_in_batch > BROADCAST_KEY_LIMIT:
         winners = dedup_last_writer(batch, key_cols)
     else:
-        winners = batch.join(_bcast(won, metrics, limit), [*key_cols, "lsn"], "inner")
+        winners = batch.join(_bcast(won, metrics), [*key_cols, "lsn"], "inner")
         if ties:
             winners = dedup_last_writer(winners, key_cols)
     winners = _staged(winners, winner_stages)
@@ -395,7 +401,7 @@ def _select_winners(
 
 
 def _commit_or_skip(
-    table: LakeTable, metrics: MergeMetrics, expected_version: int, fence_prop: str,
+    table: LakeTable, metrics: MergeMetrics, expected_version: int,
     new_files: dict, replaced: set, schema: T.StructType, mode: str,
     properties: dict | None = None, summary: dict | None = None, t0: float | None = None,
 ) -> MergeMetrics:
@@ -411,13 +417,13 @@ def _commit_or_skip(
             new_files,
             replaced_buckets=replaced,
             schema=schema,
-            properties={fence_prop: str(metrics.batch_id), **(properties or {})},
+            properties={FENCE_PROP: str(metrics.batch_id), **(properties or {})},
             summary={"operation": "merge", "mode": mode, **metrics.to_dict(), **(summary or {})},
             expected_version=expected_version,
         )
     except CommitConflict:
         cur = table.snapshot()
-        if _fence(cur, fence_prop) >= metrics.batch_id:
+        if _fence(cur) >= metrics.batch_id:
             return _skipped(metrics.batch_id, cur)
         raise
     metrics.snapshot_version = new_snap.version
@@ -449,8 +455,7 @@ def _bucket_spec(snap: Snapshot) -> tuple:
 
 
 def _prepare(table: LakeTable, batch: DataFrame, batch_id: int, snap: Snapshot, evolved: T.StructType,
-             winner_stages, broadcast_key_limit: int, strict_lww_ties: bool,
-             precomputed: PrecomputedStats | None, t0: float) -> PreparedMerge:
+             winner_stages, precomputed: PrecomputedStats | None, t0: float) -> PreparedMerge:
     """The one MOR merge body: stats, winner selection and the bucket-file
     write of an already-probed ``batch`` against ``snap``; no commit."""
     key_cols = snap.key_cols
@@ -458,9 +463,8 @@ def _prepare(table: LakeTable, batch: DataFrame, batch_id: int, snap: Snapshot, 
     metrics, _, ties = _batch_stats(table, snap, wk, batch_id, precomputed, t0)
     prep = PreparedMerge(batch_id, {}, metrics, snap.schema, evolved, _bucket_spec(snap))
     if metrics.keys_in_batch:  # an empty batch commits a fence advance only
-        winners = _select_winners(batch, wk.select(*key_cols, "lsn"), key_cols, metrics,
-                                  strict_lww_ties or ties, broadcast_key_limit, winner_stages,
-                                  evolved, single_phase=True)
+        winners = _select_winners(batch, wk.select(*key_cols, "lsn"), key_cols, metrics, ties,
+                                  winner_stages, evolved, single_phase=True)
         combined = winners.withColumn("_bucket", table.bucket_expr(snap)).repartition("_bucket")
         t_w = time.time()
         tag = f"mor{batch_id:08d}-{uuid.uuid4().hex[:8]}"
@@ -470,10 +474,10 @@ def _prepare(table: LakeTable, batch: DataFrame, batch_id: int, snap: Snapshot, 
     return prep
 
 
-def _publish_mor(table: LakeTable, prep: PreparedMerge, expected_version: int, fence_prop: str,
+def _publish_mor(table: LakeTable, prep: PreparedMerge, expected_version: int,
                  t0: float | None = None) -> MergeMetrics:
     return _commit_or_skip(
-        table, prep.metrics, expected_version, fence_prop, prep.new_files, set(), prep.evolved, "mor",
+        table, prep.metrics, expected_version, prep.new_files, set(), prep.evolved, "mor",
         properties={DELTA_PROP: "true"} if prep.new_files else None, t0=t0,
     )
 
@@ -486,9 +490,6 @@ def prepare_mor_merge(
     assumed: Snapshot,
     stages: Iterable[TransformStage] = (),
     winner_stages: Iterable[TransformStage] = (),
-    broadcast_key_limit: int = 500_000,
-    strict_lww_ties: bool = False,
-    fence_prop: str = FENCE_PROP,
 ) -> PreparedMerge | None:
     """Phases 1+2 and the bucket-file WRITE of a MOR merge, run against an
     ASSUMED snapshot with the commit deferred (guide §2.6: consecutive MOR
@@ -505,21 +506,15 @@ def prepare_mor_merge(
     ``merge_apply(mode="mor")`` runs this same body against the live
     snapshot."""
     t0 = time.time()
-    if batch_id <= _fence(assumed, fence_prop):
+    if batch_id <= _fence(assumed):
         return None  # fence already past under the assumption — merge_apply re-checks
     batch, evolved = _probe(assumed, batch, stages, winner_stages)
     if _unsupported_upcast_paths(assumed.schema, evolved):
         return None
-    return _prepare(table, batch, batch_id, assumed, evolved, winner_stages,
-                    broadcast_key_limit, strict_lww_ties, None, t0)
+    return _prepare(table, batch, batch_id, assumed, evolved, winner_stages, None, t0)
 
 
-def commit_prepared_merge(
-    table: LakeTable,
-    prep: PreparedMerge,
-    fence_prop: str = FENCE_PROP,
-    max_retries: int = 5,
-) -> MergeMetrics | None:
+def commit_prepared_merge(table: LakeTable, prep: PreparedMerge) -> MergeMetrics | None:
     """CAS-publish a prepared MOR merge. Re-validates every assumption
     against the LIVE snapshot first: fence (duplicate delivery -> skip,
     exactly-once holds), schema (the one prepared against, or the one the
@@ -528,15 +523,15 @@ def commit_prepared_merge(
     caller re-runs ``merge_apply`` and the prepared files stay orphaned
     until vacuum (they were never referenced). Retries the CAS when an
     unrelated commit (compaction, a concurrent stream) races us but the
-    assumptions still validate."""
-    for _ in range(max_retries):
+    assumptions still validate (``PREPARED_COMMIT_RETRIES`` attempts)."""
+    for _ in range(PREPARED_COMMIT_RETRIES):
         cur = table.snapshot()
-        if _fence(cur, fence_prop) >= prep.batch_id:
+        if _fence(cur) >= prep.batch_id:
             return _skipped(prep.batch_id, cur)
         if cur.schema not in (prep.schema, prep.evolved) or _bucket_spec(cur) != prep.spec:
             return None
         try:
-            return _publish_mor(table, prep, cur.version, fence_prop)
+            return _publish_mor(table, prep, cur.version)
         except CommitConflict:
             continue
     return None
@@ -548,9 +543,6 @@ def merge_apply(
     batch: DataFrame,
     batch_id: int,
     stages: Iterable[TransformStage] = (),
-    fence_prop: str = FENCE_PROP,
-    broadcast_key_limit: int = 500_000,
-    strict_lww_ties: bool = False,
     winner_stages: Iterable[TransformStage] = (),
     mode: str = "cow",
     conflict_retries: int = 0,
@@ -558,6 +550,9 @@ def merge_apply(
     changelog: bool = False,
 ) -> MergeMetrics:
     """Apply one microbatch of change events to ``table``.
+
+    ``mode`` is ``"cow"`` or ``"mor"`` (see ``_merge_apply_once``); any
+    other value raises ValueError before the table is read.
 
     ``changelog=True`` makes a COPY-ON-WRITE commit change-readable
     (``cdc.changes.read_changes``): the winner frame is persisted once as
@@ -573,15 +568,15 @@ def merge_apply(
     already returns a skip), and a losing attempt's files were never
     referenced (vacuum reclaims them).
     """
+    if mode not in ("cow", "mor"):
+        raise ValueError(f'merge_apply: mode must be "cow" or "mor", got {mode!r}')
     winner_stages = tuple(winner_stages)
     attempt = 0
     while True:
         try:
             return _merge_apply_once(
-                spark, table, batch, batch_id, stages=stages, fence_prop=fence_prop,
-                broadcast_key_limit=broadcast_key_limit, strict_lww_ties=strict_lww_ties,
-                winner_stages=winner_stages, mode=mode, precomputed=precomputed,
-                changelog=changelog,
+                spark, table, batch, batch_id, stages=stages, winner_stages=winner_stages,
+                mode=mode, precomputed=precomputed, changelog=changelog,
             )
         except CommitConflict:
             if attempt >= conflict_retries:
@@ -591,7 +586,7 @@ def merge_apply(
 
 
 def _small_state(table: LakeTable, snap: Snapshot, affected: list[int]) -> bool:
-    """Small-state byte gate (see ``_cow_consolidate_bytes``): decides both
+    """Small-state byte gate (``COW_CONSOLIDATE_BYTES``): decides both
     the consolidating write and the fused small-merge path. Files that
     cannot be statted locally (object storage) keep the no-shuffle path,
     and say so."""
@@ -607,7 +602,7 @@ def _small_state(table: LakeTable, snap: Snapshot, affected: list[int]) -> bool:
             RuntimeWarning, stacklevel=4,
         )
         return False
-    return affected_bytes <= _cow_consolidate_bytes()
+    return affected_bytes <= COW_CONSOLIDATE_BYTES
 
 
 def _merge_apply_once(
@@ -616,9 +611,6 @@ def _merge_apply_once(
     batch: DataFrame,
     batch_id: int,
     stages: Iterable[TransformStage] = (),
-    fence_prop: str = FENCE_PROP,
-    broadcast_key_limit: int = 500_000,
-    strict_lww_ties: bool = False,
     winner_stages: tuple = (),
     mode: str = "cow",
     precomputed: PrecomputedStats | None = None,
@@ -662,12 +654,11 @@ def _merge_apply_once(
     LSNs are normally unique per key within a batch (standard WAL/binlog
     property); violations are DETECTED for free in the phase-1 stats
     aggregate and resolved with a deterministic struct-max tiebreak over
-    the (small) winner set. ``strict_lww_ties=True`` forces the tiebreak
-    unconditionally.
+    the (small) winner set.
     """
     t0 = time.time()
     snap = table.snapshot()
-    if batch_id <= _fence(snap, fence_prop):
+    if batch_id <= _fence(snap):
         return _skipped(batch_id, snap)  # already committed — idempotent replay no-op
 
     batch, evolved = _probe(snap, batch, stages, winner_stages)
@@ -677,9 +668,8 @@ def _merge_apply_once(
         # against the fresh snapshot
         snap = _widen_rewrite(spark, table, snap, evolved)
     if mode == "mor":
-        prep = _prepare(table, batch, batch_id, snap, evolved, winner_stages,
-                        broadcast_key_limit, strict_lww_ties, precomputed, t0)
-        return _publish_mor(table, prep, snap.version, fence_prop, t0)
+        prep = _prepare(table, batch, batch_id, snap, evolved, winner_stages, precomputed, t0)
+        return _publish_mor(table, prep, snap.version, t0)
 
     key_cols = snap.key_cols
     snap_for_bucket = Snapshot(**{**snap.__dict__, "schema": evolved})
@@ -692,10 +682,9 @@ def _merge_apply_once(
     # keys in the memory store is pure churn.
     wk = _winning_keys(batch, key_cols)
     metrics, affected, ties = _batch_stats(table, snap_for_bucket, wk, batch_id, precomputed, t0)
-    ties = ties or strict_lww_ties
     if not affected:
         # Nothing to merge, still advance the fence atomically.
-        return _commit_or_skip(table, metrics, snap.version, fence_prop, {}, set(), evolved, mode, t0=t0)
+        return _commit_or_skip(table, metrics, snap.version, {}, set(), evolved, mode, t0=t0)
 
     # Affected buckets with no current files (fresh table / untouched key
     # space) need none of the current-vs-batch machinery — and the
@@ -737,7 +726,7 @@ def _merge_apply_once(
             # measured a 2.2x replay REGRESSION (338 s vs 153 s at 20M
             # events) — memory-store materialization under 32 concurrent
             # tasks costs far more than the pruned binlog re-scan it saves.
-            if has_current and metrics.events_in <= _batch_persist_rows():
+            if has_current and metrics.events_in <= BATCH_PERSIST_ROWS:
                 batch = batch.persist()
                 persisted.append(batch)
             cur_beats = survivors = None
@@ -755,7 +744,7 @@ def _merge_apply_once(
                 # data itself never shuffles.
                 cur_beats = (
                     current.select(*key_cols, F.col("lsn").alias("_cur_lsn"))
-                    .join(_bcast(wk.select(*key_cols, F.col("lsn").alias("_new_lsn")), metrics, broadcast_key_limit),
+                    .join(_bcast(wk.select(*key_cols, F.col("lsn").alias("_new_lsn")), metrics),
                           key_cols, "inner")
                     .filter(F.col("_cur_lsn") >= F.col("_new_lsn"))
                     .select(*key_cols)
@@ -767,10 +756,9 @@ def _merge_apply_once(
                 # partitions are kept on write (repartition=False) so the
                 # table state is never shuffled. Only the winner set
                 # repartitions to its target buckets.
-                survivors = current.join(_bcast(won.select(*key_cols), metrics, broadcast_key_limit),
-                                         key_cols, "left_anti")
-            winners = _select_winners(batch, won, key_cols, metrics, ties, broadcast_key_limit,
-                                      winner_stages, evolved, cur_beats=cur_beats)
+                survivors = current.join(_bcast(won.select(*key_cols), metrics), key_cols, "left_anti")
+            winners = _select_winners(batch, won, key_cols, metrics, ties, winner_stages, evolved,
+                                      cur_beats=cur_beats)
 
             # Change-data-feed sidecar: persist the winners ONCE, then read
             # them back as the source for the bucket write below — the
@@ -812,7 +800,7 @@ def _merge_apply_once(
         new_files = table.write_bucket_files(combined, snap_for_bucket, tag, repartition=False)
         metrics.write_sec = time.time() - t_w
         return _commit_or_skip(
-            table, metrics, snap.version, fence_prop, new_files, set(affected), evolved, mode,
+            table, metrics, snap.version, new_files, set(affected), evolved, mode,
             summary={"changelog": chlog_files} if chlog_files is not None else None, t0=t0,
         )
     finally:

@@ -74,18 +74,24 @@ def read_state(spark: SparkSession, table: LakeTable, version: int | None = None
     Lower-bound skipping commutes with read-time LWW: a skipped file
     holds only rows that either lose to a kept row (the key's winner has
     lsn >= X, and its file is kept) or belong to keys the post-dedup
-    filter drops anyway — so the filter below runs AFTER dedup and the
-    result is exact. Upper bounds would not commute (pruning a winner's
+    filter drops anyway — so the filter runs AFTER dedup (``_live_rows``)
+    and the result is exact. Upper bounds would not commute (pruning a winner's
     file would resurrect a stale row), so only the lower bound prunes."""
     snap = table.snapshot(version)
-    if lsn_min is not None:
-        df = table.read_pruned(spark, {"lsn": (lsn_min, None)}, snap=snap, lower_only=True)
-    else:
-        df = table.read(spark, version)
+    if lsn_min is None:
+        return _live_rows(table.read(spark, version), snap)
+    df = table.read_pruned(spark, {"lsn": (lsn_min, None)}, snap=snap, lower_only=True)
+    return _live_rows(df, snap, F.col("lsn") >= lsn_min)
+
+
+def _live_rows(df: DataFrame, snap, keep=None) -> DataFrame:
+    """The live-row tail of every state read: LWW-dedup MOR deltas when
+    the snapshot carries them, apply the caller's ``keep`` filter to the
+    winners, then drop tombstones."""
     if snap.properties.get(DELTA_PROP) == "true":
         df = dedup_last_writer(df, snap.key_cols)
-    if lsn_min is not None:
-        df = df.filter(F.col("lsn") >= lsn_min)
+    if keep is not None:
+        df = df.filter(keep)
     if DELETED_COL in df.columns:
         df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
     return df
@@ -146,12 +152,7 @@ def read_keys_frame(spark: SparkSession, table: LakeTable, keys: DataFrame,
             for r in keys.select(table.bucket_expr(snap).alias("_b")).distinct().collect()
         })
     df = table.read_buckets(spark, [b for b in buckets if b in snap.files], snap)
-    df = df.join(F.broadcast(keys), on=snap.key_cols, how="left_semi")
-    if snap.properties.get(DELTA_PROP) == "true":
-        df = dedup_last_writer(df, snap.key_cols)
-    if DELETED_COL in df.columns:
-        df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
-    return df
+    return _live_rows(df.join(F.broadcast(keys), on=snap.key_cols, how="left_semi"), snap)
 
 
 def compact_state(spark: SparkSession, table: LakeTable, min_files: int = 2,
@@ -198,7 +199,6 @@ def replay_events(
     table: LakeTable,
     events: DataFrame,
     stages: Iterable[TransformStage] = (),
-    batch_col: str = "batch_id",
     metrics_path: str | None = None,
     winner_stages: Iterable[TransformStage] = (),
     batch_ids: list[int] | None = None,
@@ -207,7 +207,7 @@ def replay_events(
     coalesce_batches: int | None = None,
     changelog: bool = False,
 ) -> list[MergeMetrics]:
-    """Replay ``events`` batch by batch in ascending ``batch_col`` order.
+    """Replay ``events`` batch by batch in ascending ``batch_id`` order.
 
     Already-applied batches (fence) are skipped without reading their data.
     Per-batch lineage metrics are returned and, if ``metrics_path`` is
@@ -245,10 +245,10 @@ def replay_events(
     if batch_ids is None:
         batch_ids = [
             r[0]
-            for r in events.filter(F.col(batch_col) > last_applied)
-            .select(batch_col)
+            for r in events.filter(F.col("batch_id") > last_applied)
+            .select("batch_id")
             .distinct()
-            .sort(batch_col)
+            .sort("batch_id")
             .collect()
         ]
     else:
@@ -269,8 +269,8 @@ def replay_events(
     # batch-interleaved.
     def batch_df(group):
         if len(group) == 1:
-            return events.filter(F.col(batch_col) == group[0])
-        return events.filter(F.col(batch_col).isin([int(b) for b in group]))
+            return events.filter(F.col("batch_id") == group[0])
+        return events.filter(F.col("batch_id").isin([int(b) for b in group]))
 
     return _replay_groups(spark, table, groups, batch_df, stages, winner_stages, mode, changelog,
                           merge_sink(spark, table, metrics_path, compact_every))

@@ -256,10 +256,7 @@ class LakeTable:
         which passes ``lower_only`` and filters after LWW)."""
         snap = snap or self.snapshot()
         keep, _ = self.pruned_files(snap, ranges, lower_only=lower_only)
-        paths = [os.path.join(self.path, f) for f in keep]
-        if not paths:
-            return spark.createDataFrame([], snap.schema)
-        df = spark.read.schema(snap.schema).parquet(*paths)
+        df = self.scan(spark, snap.schema, [os.path.join(self.path, f) for f in keep])
         if not lower_only:
             for c, (lo, hi) in ranges.items():
                 if lo is not None:
@@ -472,7 +469,7 @@ class LakeTable:
         if not todo:
             return None
         paths = [os.path.join(self.path, f) for fl in todo.values() for f in fl]
-        df = spark.read.schema(snap.schema).parquet(*paths)
+        df = self.scan(spark, snap.schema, paths)
         if transform is not None:
             df = transform(df)
         tag = f"compact{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"

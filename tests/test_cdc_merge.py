@@ -203,12 +203,13 @@ def test_extreme_hot_key_skew_replay(spark, tmp_path):
 
 
 def test_compact_preserves_state_and_reduces_files(spark, tmp_path, events, monkeypatch):
+    import docetl_spark.cdc.merge as merge_mod
     from docetl_spark.cdc import create_cdc_table, read_state, replay_events
 
     # disable the small-state consolidating write so the replay fragments
     # bucket files the way a wide-row (above-gate) table would — that is
     # the state compaction exists to clean up
-    monkeypatch.setenv("SPARK_GRAFT_COW_CONSOLIDATE_BYTES", "0")
+    monkeypatch.setattr(merge_mod, "COW_CONSOLIDATE_BYTES", 0)
     table = create_cdc_table(str(tmp_path / "t"), ["repo", "path", "commit"], num_buckets=4)
     replay_events(spark, table, events)
     before = read_state(spark, table).sort("repo", "path", "commit", "lsn").collect()
@@ -690,12 +691,14 @@ def test_fused_small_merge_equals_classic_path(spark, tmp_path, events, monkeypa
     two-phase plan. The final state must be IDENTICAL — including the
     stored-row-wins-on-equal-LSN rule — and every rewritten bucket must
     land in exactly one file (the consolidating write)."""
+    import docetl_spark.cdc.merge as merge_mod
+
     # classic path (gate forced off)
-    monkeypatch.setenv("SPARK_GRAFT_COW_CONSOLIDATE_BYTES", "0")
+    monkeypatch.setattr(merge_mod, "COW_CONSOLIDATE_BYTES", 0)
     t_classic = create_cdc_table(str(tmp_path / "classic"), KEYS, num_buckets=4)
     replay_events(spark, t_classic, events)
     # fused path (gate wide open)
-    monkeypatch.setenv("SPARK_GRAFT_COW_CONSOLIDATE_BYTES", str(1 << 40))
+    monkeypatch.setattr(merge_mod, "COW_CONSOLIDATE_BYTES", 1 << 40)
     t_fused = create_cdc_table(str(tmp_path / "fused"), KEYS, num_buckets=4)
     replay_events(spark, t_fused, events)
 
@@ -743,3 +746,61 @@ def test_unstatable_files_warn_and_keep_state(spark, tmp_path, events, monkeypat
         replay_events(spark, t_bad, events)
     monkeypatch.undo()
     assert state_hashes(read_state(spark, t_bad)) == state_hashes(read_state(spark, t_ok))
+
+
+def test_unknown_merge_mode_is_refused(spark, tmp_path, events):
+    # a mode typo must not run a CoW merge stamped "mode": "MOR" into
+    # history: it raises before anything commits, on every face
+    table = create_cdc_table(str(tmp_path / "t"), KEYS, num_buckets=4)
+    v0 = table.current_version()
+    with pytest.raises(ValueError, match=r'"cow" or "mor".*MOR'):
+        replay_events(spark, table, events, mode="MOR")
+    with pytest.raises(ValueError, match=r'"cow" or "mor"'):
+        merge_apply(spark, table, events.filter("batch_id = 0"), 0, mode="mor ")
+    assert table.current_version() == v0
+
+
+def test_merges_above_the_broadcast_gate_match_the_oracle(spark, tmp_path, events, monkeypatch):
+    # every batch here has far more keys than the lowered gate: MOR takes
+    # the single-phase struct-max dedup and CoW (classic path, on a table
+    # that already holds state) plans cur_beats, survivors and the
+    # join-back without broadcast hints. Batch 3 carries a duplicate
+    # (key, LSN) pair whose payload sorts above the original's.
+    import docetl_spark.cdc.merge as merge_mod
+
+    final = events.groupBy(*KEYS).agg(F.max("lsn").alias("lsn")).join(events, [*KEYS, "lsn"])
+    last = final.filter("op = 'U' AND batch_id = 3").orderBy("lsn").first().asDict()
+    dup = spark.createDataFrame([Row(**{**last, "content": "zz-duplicate"})]).select(*events.columns)
+    ev = events.unionByName(dup)
+    oracle = final_state_oracle(ev)
+    assert ("zz-duplicate",) in oracle.select("content").collect()  # the tie decides a final row
+    want = state_hashes(oracle)
+
+    monkeypatch.setattr(merge_mod, "COW_CONSOLIDATE_BYTES", 0)  # classic CoW path
+
+    def replay(name, mode):
+        table = create_cdc_table(str(tmp_path / name), KEYS, num_buckets=4)
+        replay_events(spark, table, ev, mode=mode)
+        return state_hashes(read_state(spark, table))
+
+    default = {mode: replay(f"{mode}-default", mode) for mode in ("mor", "cow")}
+
+    real_bcast, real_dedup = merge_mod._bcast, merge_mod.dedup_last_writer
+    hinted, dedups = [], []
+
+    def bcast(df, metrics):
+        out = real_bcast(df, metrics)
+        hinted.append(out is not df)
+        return out
+
+    def dedup(*args, **kwargs):
+        dedups.append(1)
+        return real_dedup(*args, **kwargs)
+
+    monkeypatch.setattr(merge_mod, "BROADCAST_KEY_LIMIT", 1)
+    monkeypatch.setattr(merge_mod, "_bcast", bcast)
+    monkeypatch.setattr(merge_mod, "dedup_last_writer", dedup)
+    assert replay("mor-gated", "mor") == default["mor"] == want
+    assert len(dedups) == 4  # one single-phase dedup per MOR batch
+    assert replay("cow-gated", "cow") == default["cow"] == want
+    assert hinted and not any(hinted)

@@ -1,7 +1,8 @@
 """Env-knob budget: every ``SPARK_GRAFT_*`` setting the engine names is
-listed here on purpose. Three are deployment settings (master, cores,
-driver memory) and two gate the CoW fast paths; a new knob has to be
-added to ``ALLOWED`` deliberately, not slip in with a code path."""
+listed here on purpose. Only the three deployment settings (master,
+cores, driver memory) are env knobs; engine gates are module constants.
+A new knob has to be added to ``ALLOWED`` deliberately, not slip in with
+a code path."""
 
 import ast
 import pathlib
@@ -11,8 +12,6 @@ ALLOWED = {
     "SPARK_GRAFT_MASTER",
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
-    "SPARK_GRAFT_COW_CONSOLIDATE_BYTES",
-    "SPARK_GRAFT_BATCH_PERSIST_ROWS",
 }
 
 

@@ -295,3 +295,38 @@ def test_prepared_merge_publishes_only_on_its_schema(spark, tmp_path):
     assert commit_prepared_merge(table, fresh).skipped  # fenced redelivery
     got = {r["k"]: (r["x"], r["y"]) for r in read_state(spark, table).collect()}
     assert got == {"a": (5, "new"), "b": (2, None)}
+
+
+def test_crash_between_prepare_and_commit_recovers(spark, tmp_path, monkeypatch):
+    # the process dies after batch 2's files are written but before its
+    # commit: the replay raises, a rerun resumes at the fence and lands
+    # the serial state, and vacuum reclaims the orphaned prepared files
+    import docetl_spark.cdc.merge as merge_mod
+
+    events = _events(spark)
+    real = merge_mod.commit_prepared_merge
+
+    def crash(table, prep):
+        if prep.batch_id == 2:
+            raise RuntimeError("injected crash before commit")
+        return real(table, prep)
+
+    monkeypatch.setattr(merge_mod, "commit_prepared_merge", crash)
+    table = create_cdc_table(str(tmp_path / "t"), KEYS, num_buckets=4)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        replay_events(spark, table, events, mode="mor")
+    assert table.snapshot().properties["cdc.last-batch-id"] == "1"
+
+    monkeypatch.setattr(merge_mod, "commit_prepared_merge", real)
+    m = replay_events(spark, table, events, mode="mor")
+    assert [x.batch_id for x in m] == [2, 3] and not any(x.skipped for x in m)
+    t_ser = create_cdc_table(str(tmp_path / "ser"), KEYS, num_buckets=4)
+    _serial_mor(spark, t_ser, events, range(4))
+    cols = [*KEYS, "lsn", "content"]
+    got = df_rows(read_state(spark, table).select(*cols))
+    assert got == df_rows(read_state(spark, t_ser).select(*cols))
+    assert got == df_rows(final_state_oracle(events).select(*cols))
+    assert table.snapshot().properties["cdc.last-batch-id"] == "3"
+
+    assert table.vacuum(keep_versions=1) > 0
+    assert df_rows(read_state(spark, table).select(*cols)) == got
