@@ -24,7 +24,9 @@ from pyspark.sql import functions as F
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    from docetl_spark.sources.parquet import read_parquet
+
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -2180,10 +2182,11 @@ def q_cdc_stream_lww(spark: SparkSession, sf_dir: str) -> DataFrame:
     Must reach the exact same final state as the batch replay (same
     oracle as cdc_merge_lww)."""
     from docetl_spark.cdc import create_cdc_table, read_state
+    from docetl_spark.sources.parquet import read_parquet
     from docetl_spark.streaming import read_change_stream, stream_changes
 
     events_path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     # the file stream source tails a DIRECTORY of dropped WAL segments;
     # expose the events file as a single-segment drop dir via symlink
     wal_dir = tempfile.mkdtemp(prefix="wal_")

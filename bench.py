@@ -154,6 +154,7 @@ def run_replay(master: str, n_events: int, batch_size: int, shuffle_partitions: 
     """
     from docetl_spark.cdc import create_cdc_table, read_state, replay_events
     from docetl_spark.session import get_spark
+    from docetl_spark.sources.parquet import read_parquet
     from docetl_spark.sources.testgen import gen_change_events
 
     spark = get_spark(master=master, shuffle_partitions=shuffle_partitions, app_name="bench_replay")
@@ -169,7 +170,7 @@ def run_replay(master: str, n_events: int, batch_size: int, shuffle_partitions: 
             spark, n_events, n_keys=max(1000, int(n_events * keys_ratio)),
             batch_size=batch_size, partitions=16, unique_keys=keys_ratio >= 1.0,
         ).write.mode("overwrite").parquet(binlog_dir)
-        events = spark.read.parquet(binlog_dir)
+        events = read_parquet(spark, binlog_dir)
 
         # Map stage runs as winner_stages: enrichment after LWW dedup —
         # a losing event's derived columns are unobservable, so computing

@@ -537,6 +537,14 @@ def commit_prepared_merge(table: LakeTable, prep: PreparedMerge) -> MergeMetrics
     return None
 
 
+def check_mode(mode: str) -> None:
+    """Refuse a merge mode other than ``"cow"`` / ``"mor"``. Every entry
+    point that takes a mode calls this first, before it reads the table
+    or runs a Spark job."""
+    if mode not in ("cow", "mor"):
+        raise ValueError(f'merge_apply: mode must be "cow" or "mor", got {mode!r}')
+
+
 def merge_apply(
     spark: SparkSession,
     table: LakeTable,
@@ -568,8 +576,7 @@ def merge_apply(
     already returns a skip), and a losing attempt's files were never
     referenced (vacuum reclaims them).
     """
-    if mode not in ("cow", "mor"):
-        raise ValueError(f'merge_apply: mode must be "cow" or "mor", got {mode!r}')
+    check_mode(mode)
     winner_stages = tuple(winner_stages)
     attempt = 0
     while True:

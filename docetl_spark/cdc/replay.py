@@ -27,6 +27,7 @@ from docetl_spark.cdc.merge import (
     FENCE_PROP,
     MergeMetrics,
     TransformStage,
+    check_mode,
     dedup_last_writer,
 )
 from docetl_spark.lake.table import LakeTable
@@ -118,10 +119,10 @@ def read_keys(spark: SparkSession, table: LakeTable, keys: DataFrame) -> DataFra
     collected through Arrow and de-duplicated in the driver. The lookup
     frame is rebuilt from that result as a local relation, so the bucket
     ids are computed by projecting ``bucket_expr`` over it in the driver
-    (no Spark job) and the broadcast of the key set ships rows the driver
-    already holds (no build job). Only the shared tail
-    (``read_keys_frame``: bucket scan, semi-join, MOR dedup) runs on the
-    cluster."""
+    (no Spark job). Broadcasting the key set still costs one job: a
+    bucket scan alone runs 1 job, with the broadcast semi-join 2. Only
+    the shared tail (``read_keys_frame``: bucket scan, semi-join, MOR
+    dedup) runs on the cluster."""
     snap = table.snapshot()
     probe = keys.select(*[F.col(k).cast(snap.schema[k].dataType).alias(k) for k in snap.key_cols])
     pdf = probe.toPandas().drop_duplicates()
@@ -241,6 +242,7 @@ def replay_events(
     Lineage granularity becomes per-group (one MergeMetrics; min/max LSN
     and event counts still exact).
     """
+    check_mode(mode)
     last_applied = int(table.snapshot().properties.get(FENCE_PROP, "-1"))
     if batch_ids is None:
         batch_ids = [

@@ -3,14 +3,17 @@
 Reference: docetl/operations/split.py (token_count / delimiter chunking)
 and docetl/operations/gather.py (peripheral-context re-rendering).
 
-* ``split`` chunks inside a scalar pandas UDF (one Arrow batch per ~10k
-  docs, no shuffle) and explodes with ``posexplode`` — chunk ids are
-  content-derived hashes, not uuid4 (split.py:74), so replays are
-  byte-stable.
-* ``gather`` is a grouped apply: each document's chunks sort by
-  ``order_key`` inside the group and render with head/middle/tail
-  peripheral sections and skipped-character markers (gather.py:113-260
-  semantics).
+* ``split`` chunks with SQL array expressions (no shuffle, no Python per
+  row) and explodes with ``posexplode`` — chunk ids are content-derived
+  hashes, not uuid4 (split.py:74), so replays are byte-stable.
+* ``gather`` renders each chunk with head/middle/tail peripheral
+  sections and skipped-character markers (gather.py:113-260 semantics):
+  window frames over the document's chunks for the common config, a
+  grouped pandas apply for the rest.
+
+Both build their expressions as SQL text (``_ident`` / ``_lit`` quote
+names and literals): a Python-lambda Column tree costs one py4j round
+trip per node, which made plan construction the bulk of a short leaf.
 """
 
 from __future__ import annotations
@@ -24,6 +27,34 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _TOKEN_RE = re.compile(r"\S+\s*")
+
+
+def _ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _lit(text: str) -> str:
+    """A Python string as a SQL string literal. The SQL parser unescapes
+    backslash sequences inside literals, so backslashes and quotes are
+    escaped; every other character (newlines included) stands as is."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+_NEWLINE = _lit("\n")
+
+
+def _lambda_vars(columns: list[str], *names: str) -> list[str]:
+    """Lambda variable names no column of the frame shares: inside a SQL
+    lambda a variable shadows a column of the same (case-insensitive)
+    name, so a column referenced in the body would bind to the variable."""
+    taken = {c.lower() for c in columns}
+    out = []
+    for n in names:
+        while n.lower() in taken:
+            n = "_" + n
+        out.append(n)
+    return out
 
 
 def _token_chunks(text: str, num_tokens: int) -> list[str]:
@@ -63,22 +94,27 @@ def split(
     distinct (e.g. carrying a unique id). The caller owns the claim: with
     exact-duplicate rows present, duplicate ``({name}_id, chunk_num)``
     pairs reach downstream and gather would interleave them."""
-    # Chunking is pure Column expressions (split/regexp_extract_all +
+    # Chunking is pure SQL expressions (split/regexp_extract_all +
     # sequence + slice/array_join): stays in codegen, no Python per row.
     # The _token_chunks/_delim_chunks python forms above are the executable
-    # spec these expressions replicate (and what tests golden-check).
-    c = F.coalesce(F.col(split_key), F.lit(""))
+    # spec these expressions replicate (and what tests golden-check). The
+    # plan is built as SQL text: a Column tree costs one py4j round trip
+    # per node, and on short reads plan construction sets the latency.
+    cols = df.columns
+    (i,) = _lambda_vars(cols, "i")
+    c = f"coalesce({_ident(split_key)}, '')"
     if method == "token_count":
-        toks = F.regexp_extract_all(c, F.lit(r"\S+\s*"), F.lit(0))
-        group, joiner = num_tokens, ""
+        toks = f"regexp_extract_all({c}, {_lit(_TOKEN_RE.pattern)}, 0)"
+        group, joiner = int(num_tokens), ""
     elif method == "delimiter":
-        toks = F.split(c, re.escape(delimiter), -1)
-        group, joiner = num_splits_to_group, delimiter
+        toks = f"split({c}, {_lit(re.escape(delimiter))}, -1)"
+        group, joiner = int(num_splits_to_group), delimiter
     else:
         raise ValueError(f"unknown split method {method!r}")
-    idx = F.sequence(F.lit(0), F.floor((F.size(toks) - 1) / group).cast("int"))
-    chunk_expr = F.when(F.size(toks) == 0, F.array(F.lit(""))).otherwise(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i * group + 1, group), joiner))
+    chunk_expr = (
+        f"CASE WHEN size({toks}) = 0 THEN array('') ELSE transform("
+        f"sequence(0, CAST(floor((size({toks}) - 1) / {group}) AS INT)), "
+        f"{i} -> array_join(slice({toks}, {i} * {group} + 1, {group}), {_lit(joiner)})) END"
     )
 
     # id over ALL columns, not just the split text: two different source
@@ -98,52 +134,37 @@ def split(
     # repo) requires a DETERMINISTIC input plan: a non-deterministic
     # upstream (unseeded sample, F.rand filter) can disagree between the
     # probe and the anti/semi passes — checkpoint such inputs first.
-    from pyspark.sql import Window
+    quoted = [_ident(c) for c in cols]
+    base_json = f"to_json(struct({', '.join(quoted)}))"
+    doc_id = f"sha2({base_json}, 256)"
+    if not assume_distinct:
+        with_h = df.selectExpr("*", f"xxhash64({', '.join(quoted)}) AS `_h`")
+        dup_keys = (
+            with_h.groupBy("_h").agg(F.count(F.lit(1)).alias("_c")).filter(F.col("_c") > 1).select("_h")
+        )
+        if dup_keys.isEmpty():
+            # common case: all rows distinct — the probe job above is the
+            # only extra cost, and the split plan stays the original single
+            # pass
+            df = with_h
+        else:
+            from pyspark.sql import Window
 
-    base_json = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
-    with_h = df.withColumn("_h", F.xxhash64(*[F.col(c) for c in df.columns]))
-    if assume_distinct:
-        out = (
-            df.withColumn(f"{name}_id", F.sha2(base_json, 256))
-            .withColumn("_chunks", chunk_expr)
-            .select(
-                *[c for c in df.columns],
-                f"{name}_id",
-                F.posexplode("_chunks").alias("_pos", f"{split_key}_chunk"),
+            clean = with_h.join(F.broadcast(dup_keys), "_h", "left_anti").withColumn("_salt", F.lit(1))
+            dups = with_h.join(F.broadcast(dup_keys), "_h", "left_semi").withColumn(
+                "_salt", F.row_number().over(Window.partitionBy("_h").orderBy("_h"))
             )
-            .withColumn(f"{name}_chunk_num", (F.col("_pos") + 1).cast("int"))
-            .drop("_pos")
-        )
-        return out
-    dup_keys = (
-        with_h.groupBy("_h").agg(F.count(F.lit(1)).alias("_c")).filter(F.col("_c") > 1).select("_h")
+            df = clean.unionByName(dups)
+            doc_id = (
+                f"CASE WHEN `_salt` = 1 THEN {doc_id} "
+                f"ELSE sha2(concat({base_json}, '#', CAST(`_salt` AS STRING)), 256) END"
+            )
+    id_col, chunk_col = _ident(f"{name}_id"), _ident(f"{split_key}_chunk")
+    return (
+        df.selectExpr("*", f"{doc_id} AS {id_col}", f"{chunk_expr} AS `_chunks`")
+        .selectExpr(*quoted, id_col, f"posexplode(`_chunks`) AS (`_pos`, {chunk_col})")
+        .selectExpr(*quoted, id_col, chunk_col, f"CAST(`_pos` + 1 AS INT) AS {_ident(f'{name}_chunk_num')}")
     )
-    if dup_keys.isEmpty():
-        # common case: all rows distinct — the probe job above is the only
-        # extra cost, and the split plan stays the original single pass
-        prepped = with_h.withColumn("_salt", F.lit(1))
-    else:
-        clean = with_h.join(F.broadcast(dup_keys), "_h", "left_anti").withColumn("_salt", F.lit(1))
-        dups = with_h.join(F.broadcast(dup_keys), "_h", "left_semi").withColumn(
-            "_salt", F.row_number().over(Window.partitionBy("_h").orderBy("_h"))
-        )
-        prepped = clean.unionByName(dups)
-    doc_id = F.when(F.col("_salt") == 1, F.sha2(base_json, 256)).otherwise(
-        F.sha2(F.concat(base_json, F.lit("#"), F.col("_salt").cast("string")), 256)
-    )
-    out = (
-        prepped
-        .withColumn(f"{name}_id", doc_id)
-        .withColumn("_chunks", chunk_expr)
-        .select(
-            *[c for c in df.columns],
-            f"{name}_id",
-            F.posexplode("_chunks").alias("_pos", f"{split_key}_chunk"),
-        )
-        .withColumn(f"{name}_chunk_num", (F.col("_pos") + 1).cast("int"))
-        .drop("_pos")
-    )
-    return out
 
 
 def _lvl(x):
@@ -193,67 +214,42 @@ def _render_hierarchy_headers(current_headers: list, header_lists: list) -> str:
     return f"_Current Section:_ {joined}" if joined else ""
 
 
-def _hierarchy_header_expr(cur, w) -> F.Column:
-    """JVM form of ``_render_hierarchy_headers`` over a running window:
-    one aggregate fold per chunk over the flattened prior header structs
-    (array<struct<header,level>> per chunk). Header counts are tiny, so
-    the interpreted fold is cheap; the document's chunks already shuffle
-    once for the gather window — no extra exchange."""
-    from pyspark.sql import Window
+def _hierarchy_header_expr(cur: str, w: str, columns: list[str]) -> str:
+    """SQL form of ``_render_hierarchy_headers`` over a running window
+    ``w``: one aggregate fold per chunk over the flattened prior header
+    structs (``cur`` is the chunk's array<struct<header,level>>). Header
+    counts are tiny, so the interpreted fold is cheap; the document's
+    chunks already shuffle once for the gather window — no extra
+    exchange."""
+    acc, h, e, o, x = _lambda_vars(columns, "acc", "h", "e", "o", "x")
+    prior = f"flatten(collect_list({cur}) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))"
+    empty_state = "CAST(array() AS array<struct<level:int,header:string>>)"
 
-    prior = F.flatten(
-        F.collect_list(cur).over(w.rowsBetween(Window.unboundedPreceding, 0))
+    def entry(level: str, header: str) -> str:
+        return f"named_struct('level', CAST({level} AS INT), 'header', CAST({header} AS STRING))"
+
+    valid = (f"{h}.header IS NOT NULL AND {h}.header != '' "
+             f"AND {h}.level IS NOT NULL AND {h}.level != 0")
+    exists = f"exists({acc}, {o} -> {o}.level = {h}.level)"
+    sz_after = f"size({acc}) + CASE WHEN {exists} THEN 0 ELSE 1 END"
+    updated = (
+        f"transform({acc}, {e} -> CASE WHEN {e}.level = {h}.level THEN {entry(f'{e}.level', f'{h}.header')} "
+        f"WHEN {e}.level > {h}.level AND {e}.level <= {sz_after} THEN {entry(f'{e}.level', 'NULL')} "
+        f"ELSE {e} END)"
     )
-    empty_state = F.array().cast("array<struct<level:int,header:string>>")
-
-    def entry(level, header):
-        return F.struct(level.cast("int").alias("level"), header.cast("string").alias("header"))
-
-    def step(acc, h):
-        valid = (
-            h["header"].isNotNull() & (h["header"] != "")
-            & h["level"].isNotNull() & (h["level"] != 0)
-        )
-        exists = F.exists(acc, lambda e: e["level"] == h["level"])
-        sz_after = F.size(acc) + F.when(exists, F.lit(0)).otherwise(F.lit(1))
-        updated = F.transform(
-            acc,
-            lambda e: F.when(e["level"] == h["level"], entry(e["level"], h["header"]))
-            .when(
-                (e["level"] > h["level"]) & (e["level"] <= sz_after),
-                entry(e["level"], F.lit(None)),
-            )
-            .otherwise(e),
-        )
-        appended = F.when(exists, updated).otherwise(
-            F.array_append(updated, entry(h["level"], h["header"]))
-        )
-        return F.when(valid, appended).otherwise(acc)
-
-    state = F.aggregate(prior, empty_state, step)
-    levels = F.filter(F.transform(cur, lambda h: h["level"]), lambda x: x.isNotNull())
-    highest = F.array_min(levels)
-    entries = F.array_sort(
-        F.filter(
-            state,
-            lambda e: e["header"].isNotNull() & (highest.isNull() | (e["level"] < highest)),
-        )
-    )
-    line = F.concat(
-        F.lit("_Current Section:_ "),
-        F.array_join(
-            F.transform(
-                entries,
-                lambda e: F.concat(
-                    F.array_join(F.array_repeat(F.lit("#"), e["level"]), ""),
-                    F.lit(" "),
-                    e["header"],
-                ),
-            ),
-            " > ",
-        ),
-    )
-    return F.when((F.size(cur) > 0) & (F.size(entries) > 0), line)
+    appended = (f"CASE WHEN {exists} THEN {updated} "
+                f"ELSE array_append({updated}, {entry(f'{h}.level', f'{h}.header')}) END")
+    state = f"aggregate({prior}, {empty_state}, ({acc}, {h}) -> CASE WHEN {valid} THEN {appended} ELSE {acc} END)"
+    highest = f"array_min(filter(transform({cur}, {h} -> {h}.level), {x} -> {x} IS NOT NULL))"
+    entries = (f"array_sort(filter({state}, {e} -> {e}.header IS NOT NULL "
+               f"AND ({highest} IS NULL OR {e}.level < {highest})))")
+    # every rendered entry holds at least a space, so the join is empty
+    # exactly when no entry survives: nullif drops the line then, and the
+    # fold runs once per chunk instead of once for a size test and once
+    # for the line
+    joined = (f"array_join(transform({entries}, {e} -> "
+              f"concat(array_join(array_repeat('#', {e}.level), ''), ' ', {e}.header)), ' > ')")
+    return f"CASE WHEN size({cur}) > 0 THEN concat('_Current Section:_ ', nullif({joined}, '')) END"
 
 
 def _render_side(chunks: list[tuple[int, str]], cfg: dict, label: str) -> list[str]:
@@ -321,40 +317,46 @@ def gather(
         and (next_cfg is None or (set(next_cfg) == {"head"} and set(next_cfg["head"]) <= {"count"}))
     )
     if simple:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(doc_id_key).orderBy(order_key)
-        c = F.coalesce(F.col(content_key), F.lit(""))
-        parts: list = []
+        # built as SQL text: one parse instead of a py4j round trip per
+        # Column node (see split)
+        doc = _ident(doc_id_key)
+        w = f"PARTITION BY {doc} ORDER BY {_ident(order_key)}"
+        c = f"coalesce({_ident(content_key)}, '')"
+        parts: list[str] = []
         if doc_header_key and not hierarchical:
-            parts.append(F.when(F.col(doc_header_key).isNotNull(), F.col(doc_header_key).cast("string")))
+            hdr = _ident(doc_header_key)
+            parts.append(f"CASE WHEN {hdr} IS NOT NULL THEN CAST({hdr} AS STRING) END")
         if prev_cfg:
             p = int(prev_cfg["tail"].get("count", 0))
-            prev_cnt = F.row_number().over(w) - 1
-            tail_arr = F.collect_list(c).over(w.rowsBetween(-max(p, 1), -1)) if p else F.array()
-            skipped = F.sum(F.length(c)).over(w.rowsBetween(Window.unboundedPreceding, -(p + 1)))
+            prev_cnt = f"(row_number() OVER ({w}) - 1)"
+            tail_arr = (f"collect_list({c}) OVER ({w} ROWS BETWEEN {max(p, 1)} PRECEDING AND 1 PRECEDING)"
+                        if p else "array()")
+            skipped = f"sum(length({c})) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING AND {p + 1} PRECEDING)"
             parts += [
-                F.when(prev_cnt > 0, F.lit("--- Previous Context ---")),
-                F.when(prev_cnt > p, F.concat(F.lit("[... "), skipped.cast("string"), F.lit(" characters skipped ...]"))),
-                F.when((prev_cnt > 0) & F.lit(p > 0), F.array_join(tail_arr, "\n")),
-                F.when(prev_cnt > 0, F.lit("--- End Previous Context ---")),
+                f"CASE WHEN {prev_cnt} > 0 THEN '--- Previous Context ---' END",
+                f"CASE WHEN {prev_cnt} > {p} THEN "
+                f"concat('[... ', CAST({skipped} AS STRING), ' characters skipped ...]') END",
+                f"CASE WHEN {prev_cnt} > 0 AND {str(p > 0).lower()} THEN array_join({tail_arr}, {_NEWLINE}) END",
+                f"CASE WHEN {prev_cnt} > 0 THEN '--- End Previous Context ---' END",
             ]
         if hierarchical:
-            no_hdrs = F.array().cast(hdr_type.simpleString())
-            parts.append(_hierarchy_header_expr(F.coalesce(F.col(doc_header_key), no_hdrs), w))
-        parts += [F.lit(main_chunk_start), c, F.lit(main_chunk_end)]
+            cur = f"coalesce({_ident(doc_header_key)}, CAST(array() AS {hdr_type.simpleString()}))"
+            parts.append(_hierarchy_header_expr(cur, w, df.columns))
+        parts += [_lit(main_chunk_start), c, _lit(main_chunk_end)]
         if next_cfg:
             n = int(next_cfg["head"].get("count", 0))
-            next_cnt = F.count(F.lit(1)).over(Window.partitionBy(doc_id_key)) - F.row_number().over(w)
-            head_arr = F.collect_list(c).over(w.rowsBetween(1, max(n, 1))) if n else F.array()
-            nskip = F.sum(F.length(c)).over(w.rowsBetween(n + 1, Window.unboundedFollowing))
+            next_cnt = f"(count(1) OVER (PARTITION BY {doc}) - row_number() OVER ({w}))"
+            head_arr = (f"collect_list({c}) OVER ({w} ROWS BETWEEN 1 FOLLOWING AND {max(n, 1)} FOLLOWING)"
+                        if n else "array()")
+            nskip = f"sum(length({c})) OVER ({w} ROWS BETWEEN {n + 1} FOLLOWING AND UNBOUNDED FOLLOWING)"
             parts += [
-                F.when(next_cnt > 0, F.lit("--- Next Context ---")),
-                F.when((next_cnt > 0) & F.lit(n > 0), F.array_join(head_arr, "\n")),
-                F.when(next_cnt > n, F.concat(F.lit("[... "), nskip.cast("string"), F.lit(" characters skipped ...]"))),
-                F.when(next_cnt > 0, F.lit("--- End Next Context ---")),
+                f"CASE WHEN {next_cnt} > 0 THEN '--- Next Context ---' END",
+                f"CASE WHEN {next_cnt} > 0 AND {str(n > 0).lower()} THEN array_join({head_arr}, {_NEWLINE}) END",
+                f"CASE WHEN {next_cnt} > {n} THEN "
+                f"concat('[... ', CAST({nskip} AS STRING), ' characters skipped ...]') END",
+                f"CASE WHEN {next_cnt} > 0 THEN '--- End Next Context ---' END",
             ]
-        return df.withColumn(out_field, F.concat_ws("\n", *parts))
+        return df.withColumn(out_field, F.expr(f"concat_ws({_NEWLINE}, {', '.join(parts)})"))
     schema = T.StructType(list(df.schema.fields) + [T.StructField(out_field, T.StringType(), True)])
     cols = [f.name for f in schema.fields]
 

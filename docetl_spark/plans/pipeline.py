@@ -39,6 +39,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from docetl_spark.sources.parquet import read_parquet
+
 
 def _op_scan(spark: SparkSession, datasets: dict, cfg: dict) -> DataFrame:
     ds = datasets[cfg["dataset"]]
@@ -51,7 +53,7 @@ def _op_scan(spark: SparkSession, datasets: dict, cfg: dict) -> DataFrame:
             reader = reader.option("inferSchema", "true")
     if fmt == "json":
         reader = reader.option("multiLine", str(ds.get("multiline", True)).lower())
-    df = reader.format(fmt).load(path)
+    df = read_parquet(spark, path) if fmt == "parquet" else reader.format(fmt).load(path)
     if ds.get("parsing"):
         # dataset-level parsing-tool fan-out (reference dataset.py:250-315)
         from docetl_spark.sources.parsing import apply_parsing
@@ -307,7 +309,7 @@ class Pipeline:
                 # crashed run leaves committed task files without _SUCCESS,
                 # which must be recomputed, not silently reused
                 if os.path.exists(os.path.join(ckpt, "_SUCCESS")):  # checkpoint hit
-                    last = spark.read.parquet(ckpt)
+                    last = read_parquet(spark, ckpt)
                     self._step_outputs[name] = last
                     continue
             src = step.get("input")
@@ -325,7 +327,8 @@ class Pipeline:
                 df = _apply_op(df, op_cfg, datasets, spark, observations=self.observations)
             if ckpt:
                 df.write.mode("overwrite").parquet(ckpt)
-                df = spark.read.parquet(ckpt)
+                # the frame's own schema: the re-read runs no inference job
+                df = read_parquet(spark, ckpt, schema=df.schema)
             if self.observe:
                 # observed selectivity per step (the reference records
                 # out/in per op at containers.py:543-545); one count per

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from docetl_spark.cdc.merge import TransformStage, merge_apply
+from docetl_spark.cdc.merge import TransformStage, check_mode, merge_apply
 from docetl_spark.cdc.replay import append_metrics, merge_sink
 from docetl_spark.lake.table import LakeTable
 
@@ -93,6 +93,7 @@ def stream_changes(
     as ``replay_events``. The compaction commit retries if it races the
     next microbatch.
     """
+    check_mode(mode)
     stages = list(stages)
     winner_stages = list(winner_stages)
     sink = merge_sink(spark, table, metrics_path, compact_every)

@@ -760,6 +760,33 @@ def test_unknown_merge_mode_is_refused(spark, tmp_path, events):
     assert table.current_version() == v0
 
 
+def test_unknown_mode_is_refused_before_any_spark_job(spark, tmp_path, events):
+    # the check runs at entry: no batch-id discovery scan, no speculative
+    # stats job, no stream started; a caught-up table raises too instead
+    # of returning [] silently
+    from docetl_spark.streaming import stream_changes
+
+    caught_up = create_cdc_table(str(tmp_path / "caught_up"), KEYS, num_buckets=4)
+    merge_apply(spark, caught_up, events.filter("batch_id = 0"), 0)
+    pending = create_cdc_table(str(tmp_path / "pending"), KEYS, num_buckets=4)
+    for table, batch_ids in ((caught_up, [0]), (pending, None)):
+        v0 = table.current_version()
+        with pytest.raises(ValueError, match=r'"cow" or "mor".*MOR'):
+            _jobs_in(spark, "bad_mode", lambda: replay_events(
+                spark, table, events, batch_ids=batch_ids, mode="MOR"))
+        assert len(spark.sparkContext.statusTracker().getJobIdsForGroup("bad_mode")) == 0
+        assert table.current_version() == v0
+
+    active = len(spark.streams.active)
+    stream = spark.readStream.format("rate").load()
+    with pytest.raises(ValueError, match=r'"cow" or "mor".*MOR'):
+        _jobs_in(spark, "bad_stream_mode", lambda: stream_changes(
+            spark, pending, stream, str(tmp_path / "ckpt"), mode="MOR"))
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup("bad_stream_mode")) == 0
+    assert len(spark.streams.active) == active
+    assert pending.current_version() == v0
+
+
 def test_merges_above_the_broadcast_gate_match_the_oracle(spark, tmp_path, events, monkeypatch):
     # every batch here has far more keys than the lowered gate: MOR takes
     # the single-phase struct-max dedup and CoW (classic path, on a table

@@ -10,13 +10,22 @@ checks the physical plan for the properties that matter at 100 TB:
 * change-feed reads run one parquet scan per read schema, not one per
   commit
 
+It also reports what building each plan costs: the py4j round
+trips and the eager Spark jobs of the ``queries()[q](spark, sf)`` call.
+A timed leaf of the benchmark's query board (``BOARD_LEAVES`` in
+``perfbench/inputs.py``) is built a second time, and FAILs if that build
+still runs a job: its input schemas are known by then.
+
 Usage: python tools/explain_audit.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import gc
+import itertools
 import re
 import sys
+import threading
 
 sys.path.insert(0, ".")
 
@@ -81,6 +90,45 @@ def audit(name: str, plan: str) -> list[str]:
     return issues
 
 
+_BUILDS = itertools.count()
+
+
+def build_cost(spark, build):
+    """(build(), py4j commands this thread sent, Spark jobs it ran).
+    Object releases go out on py4j's finalizer thread and are not
+    counted."""
+    from py4j.clientserver import ClientServerConnection
+
+    sc, me, calls = spark.sparkContext, threading.get_ident(), [0]
+    real = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        if threading.get_ident() == me:
+            calls[0] += 1
+        return real(self, *args, **kwargs)
+
+    gc.collect()
+    group = f"explain_audit_build_{next(_BUILDS)}"
+    sc.setJobGroup(group, group)
+    ClientServerConnection.send_command = counting
+    try:
+        out = build()
+    finally:
+        ClientServerConnection.send_command = real
+        sc.setJobGroup(None, None)
+    return out, calls[0], len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def board_leaves() -> set[str]:
+    """The benchmark's timed query-board leaves."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("perfbench_inputs", "perfbench/inputs.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return set(mod.BOARD_LEAVES)
+
+
 def main() -> int:
     import __spark_entry__ as em
     from docetl_spark.session import get_spark
@@ -89,6 +137,7 @@ def main() -> int:
     only = set(sys.argv[2:])
     spark = get_spark(master="local[8]", shuffle_partitions=8, app_name="explain_audit")
 
+    timed = board_leaves()
     failures = 0
     for name, fn in em.queries().items():
         if only and name not in only:
@@ -96,9 +145,15 @@ def main() -> int:
         if name in SKIP:
             print(f"skip  {name} (multi-job/driver-side)")
             continue
-        df = fn(spark, sf_dir)
+        df, calls, jobs = build_cost(spark, lambda: fn(spark, sf_dir))
         plan = df._jdf.queryExecution().executedPlan().toString()
         issues = audit(name, plan)
+        build = f"build: {calls} py4j, {jobs} jobs"
+        if name in timed:
+            _, calls, jobs = build_cost(spark, lambda: fn(spark, sf_dir))
+            build += f"; again: {calls} py4j, {jobs} jobs"
+            if jobs:
+                issues.append(f"board leaf build runs {jobs} Spark job(s) after its first call")
         scans = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
         reads = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
         bhj = plan.count("BroadcastHashJoin")
@@ -107,7 +162,7 @@ def main() -> int:
         failures += bool(issues)
         print(f"{status}{name}: bhj={bhj} smj={smj} "
               f"pushed={[s for s in scans if s][:2]} "
-              f"readcols={[len(r.split(',')) for r in reads]} {issues or ''}")
+              f"readcols={[len(r.split(',')) for r in reads]} [{build}] {issues or ''}")
     print(f"\n{failures} plan failures")
     return 1 if failures else 0
 
