@@ -261,7 +261,7 @@ def _sql_array(items: list[str]) -> str:
     return f"array({', '.join(items)})"
 
 
-def changes_as_batch(feed: DataFrame, batch_col_from: str = COMMIT_VERSION_COL) -> DataFrame:
+def changes_as_batch(feed: DataFrame) -> DataFrame:
     """Reshape a change feed into the ``merge_apply``/``replay_events``
     input contract: ``op`` in {U, D} from the change type, ``batch_id``
     from the source commit version (so one source commit replays as one
@@ -274,7 +274,7 @@ def changes_as_batch(feed: DataFrame, batch_col_from: str = COMMIT_VERSION_COL) 
     ]
     return feed.select(
         F.col("lsn"),
-        F.col(batch_col_from).alias("batch_id"),
+        F.col(COMMIT_VERSION_COL).alias("batch_id"),
         F.when(F.col(CHANGE_TYPE_COL) == "delete", "D").otherwise("U").alias("op"),
         *[F.col(c) for c in cols],
     )

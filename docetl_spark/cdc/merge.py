@@ -94,8 +94,7 @@ BROADCAST_KEY_LIMIT = 500_000
 PREPARED_COMMIT_RETRIES = 5
 
 
-def reject_reserved_columns(df: DataFrame, caller: str,
-                            reserved: tuple = ("lsn", "op")) -> None:
+def reject_reserved_columns(df: DataFrame, caller: str) -> None:
     """Fail loudly when a payload frame carries columns an ingest face
     synthesizes itself. The ingest wrappers (``dedup_ingest``,
     ``ivf_ingest``) prepend their own ``lsn``/``op``; a batch that already
@@ -106,8 +105,7 @@ def reject_reserved_columns(df: DataFrame, caller: str,
     Case-insensitive (ADVICE r5): Spark resolves columns with
     ``spark.sql.caseSensitive=false`` by default, so a batch carrying
     ``LSN`` hits exactly the ambiguity this guard exists to prevent."""
-    lowered = {c.lower() for c in reserved}
-    clash = sorted({c for c in df.columns if c.lower() in lowered})
+    clash = sorted({c for c in df.columns if c.lower() in ("lsn", "op")})
     if clash:
         raise ValueError(
             f"{caller}: batch carries reserved column(s) {clash}; this ingest "

@@ -144,15 +144,13 @@ def read_keys_frame(spark: SparkSession, table: LakeTable, keys: DataFrame,
 
     ``buckets`` is the precomputed bucket list of ``keys`` (``read_keys``
     derives it in the driver from its local key relation). Distributed
-    callers leave it None: the distinct bucket ids are then collected
-    from ``keys`` (≤ num_buckets ints)."""
+    callers leave it None: the buckets are then probed from ``keys``
+    (``LakeTable.read_probed_buckets``)."""
     snap = snap or table.snapshot()
     if buckets is None:
-        buckets = sorted({
-            r["_b"]
-            for r in keys.select(table.bucket_expr(snap).alias("_b")).distinct().collect()
-        })
-    df = table.read_buckets(spark, [b for b in buckets if b in snap.files], snap)
+        df = table.read_probed_buckets(spark, keys, snap)
+    else:
+        df = table.read_buckets(spark, buckets, snap)
     return _live_rows(df.join(F.broadcast(keys), on=snap.key_cols, how="left_semi"), snap)
 
 

@@ -1,7 +1,7 @@
 """Persistent IVF ANN index over a STORED lake-table corpus.
 
 The banded-index pattern of the incremental dedup ingest
-(functions/incr_dedup.py:64-135) generalized to similarity search: the
+(``incr_dedup._ensure_band_index``) generalized to similarity search: the
 corpus lives as a fenced CDC lake table of (id, embedding) rows, and a
 sidecar lake table at ``<table>/ivfidx`` holds one (cell, id) entry per
 stored vector — keyed (_band, _sid), hash-bucketed on ``_band`` alone, so
@@ -45,12 +45,16 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from docetl_spark.cdc.merge import FENCE_PROP, MergeMetrics, merge_apply, reject_reserved_columns
+from docetl_spark.cdc.merge import MergeMetrics
+from docetl_spark.cdc.replay import read_keys_frame, read_state
 from docetl_spark.functions.ann import _cell_assign_udf, _rank_topk, ivf_centroids
 from docetl_spark.functions.incr_dedup import (
-    _affected_hash_buckets,
     _ensure_band_index,
+    _index_then_corpus,
+    _ingest_entry,
     band_index_path,
+    prune_index_orphans,
+    rebuild_band_index,
 )
 from docetl_spark.functions.vectors import cosine, l2_normalize
 from docetl_spark.lake.table import LakeTable
@@ -122,18 +126,9 @@ def ivf_ingest(
     centroids = drop the ``ivfidx`` directory; the next ingest retrains
     and the creation backfill re-assigns the whole stored corpus (one
     O(corpus) scan, the documented migration path)."""
-    id_type = batch.schema[id_col].dataType.typeName()
-    if id_type not in ("byte", "short", "integer", "long"):
-        raise ValueError(
-            f"ivf_ingest needs an integral id_col; {id_col!r} is {id_type} "
-            "(derive one upstream, e.g. xxhash64 of a natural key)"
-        )
-    reject_reserved_columns(batch, "ivf_ingest")
-    snap = table.snapshot()
-    if batch_id <= int(snap.properties.get(FENCE_PROP, "-1")):
-        return IvfIngestMetrics(
-            merge=MergeMetrics(batch_id=batch_id, skipped=True, snapshot_version=snap.version)
-        )
+    snap, skipped = _ingest_entry(table, batch, batch_id, id_col, mode, "ivf_ingest")
+    if skipped:
+        return IvfIngestMetrics(merge=skipped)
 
     batch = batch.localCheckpoint()  # pin: feeds the index append AND the corpus write
     n_batch = batch.count()
@@ -162,45 +157,10 @@ def ivf_ingest(
     # tie every version of the same key and let struct-max pick the
     # lexicographically larger embedding). Within one batch, duplicate
     # ids tie and resolve by the merge's deterministic struct-max.
-    lsn = F.lit(int(batch_id)).cast("long").alias("lsn")
-
-    # index first, corpus second — crash in between leaves harmless
-    # phantoms (see module docstring)
-    idx_changes = batch.select(
-        lsn, F.lit("I").alias("op"),
-        F.explode(cell_fn(batch)).alias("_band"), F.col(id_col).alias("_sid"),
-    )
-    imetrics = merge_apply(spark, idx, idx_changes, batch_id, mode="mor")
-
-    changes = batch.select(
-        lsn, F.lit("I").alias("op"),
-        *[c for c in batch.columns],
-    )
-    metrics = merge_apply(spark, table, changes, batch_id, mode=mode)
-
-    if compact_index_files:
-        isnap2 = idx.snapshot()
-        if any(len(fl) >= compact_index_files for fl in isnap2.files.values()):
-            from docetl_spark.cdc.replay import compact_state
-
-            compact_state(spark, idx, min_files=compact_index_files)
-            idx.vacuum(keep_versions=2)
-
-    return IvfIngestMetrics(
-        merge=metrics,
-        batch_rows=n_batch,
-        index_entries=0 if imetrics.skipped else imetrics.keys_in_batch,
-    )
-
-
-def _stored_corpus(spark: SparkSession, table: LakeTable, snap, sids: DataFrame, id_col: str):
-    """Candidate rows by bucket-pruned point lookup (the shared
-    read-repair tail, cdc/replay.read_keys_frame): only the buckets the
-    (pair-bounded) candidate ids land in are read, the id set broadcasts
-    into a semi-join — wide rows never shuffle."""
-    from docetl_spark.cdc.replay import read_keys_frame
-
-    return read_keys_frame(spark, table, sids, snap=snap)
+    metrics, index_entries = _index_then_corpus(
+        spark, table, idx, batch, cell_fn, F.lit(int(batch_id)), batch_id, id_col, mode,
+        compact_index_files)
+    return IvfIngestMetrics(merge=metrics, batch_rows=n_batch, index_entries=index_entries)
 
 
 def _stored_candidate_pairs(
@@ -218,11 +178,8 @@ def _stored_candidate_pairs(
     q_cells = q.select(
         "_qid", F.explode(_cell_assign_udf(centroids, n_probe)(F.col("_qv")).cast("array<long>")).alias("_band")
     )
-    isnap = idx.snapshot()
-    ibuckets = _affected_hash_buckets(q_cells, idx.bucket_expr(isnap))
-    entries = idx.read_buckets(
-        spark, [b for b in ibuckets if b in isnap.files], isnap
-    ).select("_band", "_sid")  # MOR deltas are insert-only unique rows
+    entries = idx.read_probed_buckets(spark, q_cells, idx.snapshot()).select(
+        "_band", "_sid")  # MOR deltas are insert-only unique rows
     pairs = (
         # query side is |Q| * n_probe rows — broadcast so the index side
         # never shuffles (file-source stats can hide how small it is
@@ -253,9 +210,10 @@ def knn_ivf_stored(
         spark, table, queries, id_col, vec_col, n_probe, query_id_col
     )
     pairs = pairs.localCheckpoint()  # feeds the sid collect AND the scored join
-    snap = table.snapshot()
+    # candidate rows by bucket-pruned point lookup: the id set broadcasts
+    # into a semi-join, wide rows never shuffle
     sids = pairs.select(F.col("_nid").alias(id_col)).distinct()
-    cand = _stored_corpus(spark, table, snap, sids, id_col)
+    cand = read_keys_frame(spark, table, sids)
     c = cand.select(F.col(id_col).alias("_nid"), l2_normalize(vec_col).alias("_cv"))
     scored = (
         pairs.join(c, "_nid")
@@ -280,7 +238,6 @@ def ivf_stored_recall_at_k(
     (ann.py:_recall_against_brute) — certifies training pin + per-batch
     appends + fence repair end to end. O(|Q|·|corpus|) by design: run on
     a bounded query sample, like every recall certificate here."""
-    from docetl_spark.cdc.replay import read_state
     from docetl_spark.functions.ann import _collect_queries, _recall_against_brute
 
     pairs, q, _ = _stored_candidate_pairs(
@@ -298,8 +255,6 @@ def prune_ivf_orphans(spark: SparkSession, table: LakeTable, conflict_retries: i
     the same filtered compaction as the dedup index's
     ``incr_dedup.prune_index_orphans`` (orphans are read-harmless but
     bloat candidate sets without bound on delete-heavy corpora)."""
-    from docetl_spark.functions.incr_dedup import prune_index_orphans
-
     return prune_index_orphans(spark, table, subdir=IVF_SUBDIR,
                                conflict_retries=conflict_retries)
 
@@ -314,8 +269,6 @@ def rebuild_ivf_index(spark: SparkSession, table: LakeTable, vec_col: str,
     retrains centroids and silently changes every stored cell. One
     O(corpus) assignment pass; run it when the update rate has bloated
     the index, not per batch."""
-    from docetl_spark.functions.incr_dedup import rebuild_band_index
-
     idx, centroids = _open_index(table)
     props = idx.snapshot().properties
     params = _params(centroids, int(props["ivf.n-centroids"]), int(props["ivf.seed"]))

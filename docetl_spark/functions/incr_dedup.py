@@ -46,13 +46,23 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from docetl_spark.cdc.merge import FENCE_PROP, MergeMetrics, merge_apply, reject_reserved_columns
+from docetl_spark.cdc.merge import (
+    DELETED_COL,
+    DELTA_PROP,
+    FENCE_PROP,
+    MergeMetrics,
+    check_mode,
+    dedup_last_writer,
+    merge_apply,
+    reject_reserved_columns,
+)
+from docetl_spark.cdc.replay import _live_rows, compact_state, read_keys_frame, read_state
 from docetl_spark.functions.dedup import (
     band_buckets,
     minhash_signature,
     shingles,
 )
-from docetl_spark.lake.table import LakeTable
+from docetl_spark.lake.table import CommitConflict, LakeTable, Snapshot
 
 SIG_COL = "_sig"
 IDX_SUBDIR = "bandidx"
@@ -91,8 +101,6 @@ def _ensure_band_index(
     duplicates that the downstream ``distinct()`` and compaction fold
     away, so repair never corrupts, only completes."""
     from pyspark.sql import types as T
-
-    from docetl_spark.cdc.replay import read_state
 
     corpus_fence = int(snap.properties.get(FENCE_PROP, "-1"))
 
@@ -137,10 +145,61 @@ def _ensure_band_index(
     return idx
 
 
-def _affected_hash_buckets(probe: DataFrame, bucket_col) -> list[int]:
-    """Distinct hashed-bucket ids of a probe frame — a bounded collect
-    (≤ num_buckets ints), the price of file-level pruning."""
-    return sorted({r["_b"] for r in probe.select(bucket_col.alias("_b")).distinct().collect()})
+def _ingest_entry(table: LakeTable, batch: DataFrame, batch_id: int, id_col: str,
+                  mode: str, caller: str) -> tuple[Snapshot, MergeMetrics | None]:
+    """The entry guards of a sidecar-indexed ingest, run before any table
+    read or Spark job: the merge mode, an integral ``id_col``, no reserved
+    payload column, then the fence. Returns the corpus snapshot and, when
+    ``batch_id`` has already committed, the skipped batch's MergeMetrics
+    (else None) — the dedup work itself is fenced, not just the write."""
+    check_mode(mode)
+    id_type = batch.schema[id_col].dataType.typeName()
+    if id_type not in ("byte", "short", "integer", "long"):
+        # dedup's greedy "earlier" ordering and its synthesized lsn both
+        # need a numeric id; a string id would order lexicographically
+        # ("10"<"9") and cast to a NULL lsn silently
+        raise ValueError(
+            f"{caller} needs an integral id_col; {id_col!r} is {id_type} "
+            "(derive one upstream, e.g. xxhash64 of a natural key)"
+        )
+    reject_reserved_columns(batch, caller)
+    snap = table.snapshot()
+    if batch_id <= int(snap.properties.get(FENCE_PROP, "-1")):
+        return snap, MergeMetrics(batch_id=batch_id, skipped=True, snapshot_version=snap.version)
+    return snap, None
+
+
+def _index_then_corpus(spark: SparkSession, table: LakeTable, idx: LakeTable, rows: DataFrame,
+                       band_fn, lsn, batch_id: int, id_col: str, mode: str,
+                       compact_index_files: int | None) -> tuple[MergeMetrics, int]:
+    """The fenced commit of a sidecar-indexed ingest. The index append
+    (one ``(lsn, band, id)`` entry per band of each row) commits FIRST,
+    the corpus merge of ``rows`` second, both fenced on ``batch_id``: a
+    crash in between leaves phantom index entries, which the next
+    (deterministic) redelivery re-keeps identically — see module
+    docstring. Returns the corpus MergeMetrics and the index entries
+    appended."""
+    lsn = lsn.cast("long").alias("lsn")
+    idx_changes = rows.select(
+        lsn, F.lit("I").alias("op"),
+        F.explode(band_fn(rows)).alias("_band"), F.col(id_col).alias("_sid"),
+    )
+    imetrics = merge_apply(spark, idx, idx_changes, batch_id, mode="mor")
+    metrics = merge_apply(spark, table, rows.select(lsn, F.lit("I").alias("op"), *rows.columns),
+                          batch_id, mode=mode)
+
+    # opportunistic index maintenance: MOR appends one delta file per
+    # touched index bucket per batch; fold them when a bucket accumulates
+    # compact_index_files files (amortized O(index)/threshold per batch)
+    if compact_index_files and any(
+        len(fl) >= compact_index_files for fl in idx.snapshot().files.values()
+    ):
+        compact_state(spark, idx, min_files=compact_index_files)
+        # the ingest is the index's only writer (it lives inside the
+        # corpus table directory), so dropping pre-compaction versions
+        # is safe and keeps a long ingest loop's disk bounded
+        idx.vacuum(keep_versions=2)
+    return metrics, 0 if imetrics.skipped else imetrics.keys_in_batch
 
 
 def greedy_first_kept(
@@ -360,16 +419,9 @@ def dedup_ingest(
       reproducible comparison). The embedding itself is the stored
       signature; no extra column is written.
     """
-    id_type = batch.schema[id_col].dataType.typeName()
-    if id_type not in ("byte", "short", "integer", "long"):
-        # the greedy "earlier" ordering and the synthesized lsn both need a
-        # numeric id; a string id would order lexicographically ("10"<"9")
-        # and cast to a NULL lsn silently
-        raise ValueError(
-            f"dedup_ingest needs an integral id_col; {id_col!r} is {id_type} "
-            "(derive one upstream, e.g. xxhash64 of a natural key)"
-        )
-    reject_reserved_columns(batch, "dedup_ingest")
+    snap, skipped = _ingest_entry(table, batch, batch_id, id_col, mode, "dedup_ingest")
+    if skipped:
+        return DedupIngestMetrics(merge=skipped)
     if method == "minhash":
         if not text_col:
             raise ValueError("method='minhash' needs text_col")
@@ -395,12 +447,6 @@ def dedup_ingest(
     else:
         raise ValueError(f"unknown dedup_ingest method {method!r}")
 
-    snap = table.snapshot()
-    if batch_id <= int(snap.properties.get(FENCE_PROP, "-1")):
-        return DedupIngestMetrics(
-            merge=MergeMetrics(batch_id=batch_id, skipped=True, snapshot_version=snap.version)
-        )
-
     signed = sign(batch)
     signed = signed.localCheckpoint()  # pin: sigs feed banding, verify, and the write
 
@@ -408,20 +454,14 @@ def dedup_ingest(
     batch_banded = signed.select(F.col(id_col).alias("_bid"), F.explode(bb).alias("_band"))
 
     idx = _ensure_band_index(spark, table, snap, batch.schema[id_col], band_expr_fn, params)
-    has_stored = bool(snap.files) or snap.properties.get("cdc.has-deltas") == "true"
     dropped_cross = spark.createDataFrame([], f"_id {batch.schema[id_col].dataType.simpleString()}")
-    if has_stored:
+    if snap.files:  # a MOR commit flags deltas only when it writes files
         # stored-side blocking reads the INDEX, pruned to the hash-buckets
-        # of this batch's band values — per-batch cost scales with the
-        # batch and the touched index buckets, not with the corpus
-        isnap = idx.snapshot()
-        # the SAME bucket function the index files were written with
-        # (bucket_cols=['_band']); never hand-roll a copy that could
-        # desynchronize from a future bucket-recipe change
-        ibuckets = _affected_hash_buckets(batch_banded, idx.bucket_expr(isnap))
-        entries = idx.read_buckets(
-            spark, [b for b in ibuckets if b in isnap.files], isnap
-        ).select("_band", "_sid")  # MOR deltas are insert-only unique rows
+        # of this batch's band values (bucket_cols=['_band']) — per-batch
+        # cost scales with the batch and the touched index buckets, not
+        # with the corpus
+        entries = idx.read_probed_buckets(spark, batch_banded, idx.snapshot()).select(
+            "_band", "_sid")  # MOR deltas are insert-only unique rows
         cross_cands = (
             batch_banded.join(entries, "_band")
             .select(F.col("_sid").alias("_id1"), F.col("_bid").alias("_id2"))
@@ -433,8 +473,6 @@ def dedup_ingest(
         # ids, wide rows never shuffle); INNER against live corpus
         # state, so phantom index entries left by a crash between the
         # index and corpus commits drop out harmlessly
-        from docetl_spark.cdc.replay import read_keys_frame
-
         sids = cross_cands.select(F.col("_id1").alias(id_col)).distinct()
         cand_stored = read_keys_frame(spark, table, sids, snap=snap)
         cross_pairs = verified(cross_cands, cand_stored, signed)
@@ -467,37 +505,9 @@ def dedup_ingest(
     n_batch = signed.count()
     n_surv = survivors.count()
     kept_rows = kept_rows.localCheckpoint()  # pin: feeds the index append AND the corpus write
-
-    # index append FIRST, corpus second, both fenced on batch_id: a crash
-    # in between leaves phantom index entries, which the next (determin-
-    # istic) redelivery re-keeps identically — see module docstring
-    idx_changes = kept_rows.select(
-        F.col(id_col).cast("long").alias("lsn"), F.lit("I").alias("op"),
-        F.explode(bb).alias("_band"), F.col(id_col).alias("_sid"),
-    )
-    imetrics = merge_apply(spark, idx, idx_changes, batch_id, mode="mor")
-
-    changes = kept_rows.select(
-        F.col(id_col).cast("long").alias("lsn"),
-        F.lit("I").alias("op"),
-        *[c for c in kept_rows.columns],
-    )
-    metrics = merge_apply(spark, table, changes, batch_id, mode=mode)
-
-    # opportunistic index maintenance: MOR appends one delta file per
-    # touched index bucket per batch; fold them when a bucket accumulates
-    # compact_index_files files (amortized O(index)/threshold per batch)
-    if compact_index_files:
-        isnap2 = idx.snapshot()
-        if any(len(fl) >= compact_index_files for fl in isnap2.files.values()):
-            from docetl_spark.cdc.replay import compact_state
-
-            compact_state(spark, idx, min_files=compact_index_files)
-            # the ingest is the index's only writer (it lives inside the
-            # corpus table directory), so dropping pre-compaction versions
-            # is safe and keeps a long ingest loop's disk bounded
-            idx.vacuum(keep_versions=2)
-
+    metrics, index_entries = _index_then_corpus(
+        spark, table, idx, kept_rows, band_expr_fn, F.col(id_col), batch_id, id_col, mode,
+        compact_index_files)
     n_kept = metrics.keys_in_batch if not metrics.skipped else 0
     return DedupIngestMetrics(
         merge=metrics,
@@ -505,7 +515,7 @@ def dedup_ingest(
         dropped_cross=n_batch - n_surv,
         dropped_within=n_surv - n_kept,
         kept=n_kept,
-        index_entries=0 if imetrics.skipped else imetrics.keys_in_batch,
+        index_entries=index_entries,
     )
 
 
@@ -513,24 +523,17 @@ def dedup_ingest(
 # Sidecar-index maintenance (delete-heavy / update-heavy corpora)
 # ---------------------------------------------------------------------------
 
-def _live_ids(spark: SparkSession, table: LakeTable, snap) -> DataFrame:
-    """Live corpus ids as a (_sid) frame, computed NARROWLY: only
-    (key, lsn, _deleted) ever shuffle for the MOR LWW dedup — the
-    wide-rows-never-shuffle rule holds even when the corpus carries
-    deltas. Pinned to ``snap``'s version."""
-    from docetl_spark.cdc.merge import DELETED_COL, DELTA_PROP, dedup_last_writer
-
-    id_col = snap.key_cols[0]
+def _live_corpus(spark: SparkSession, table: LakeTable, snap, value_cols=None) -> DataFrame:
+    """Live corpus rows pinned to ``snap``'s version (``cdc.replay``'s
+    live-row tail). Given ``value_cols``, the rows are projected NARROWLY
+    first: only (key, lsn, those, _deleted) shuffle in the MOR LWW dedup —
+    the wide-rows-never-shuffle rule holds even when the corpus carries
+    deltas."""
     df = table.read(spark, snap.version)
-    narrow = df.select(
-        *snap.key_cols, "lsn",
-        *([DELETED_COL] if DELETED_COL in df.columns else []),
-    )
-    if snap.properties.get(DELTA_PROP) == "true":
-        narrow = dedup_last_writer(narrow, snap.key_cols)
-    if DELETED_COL in narrow.columns:
-        narrow = narrow.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-    return narrow.select(F.col(id_col).alias("_sid")).distinct()
+    if value_cols is not None:
+        df = df.select(*snap.key_cols, "lsn", *value_cols,
+                       *([DELETED_COL] if DELETED_COL in df.columns else []))
+    return _live_rows(df, snap)
 
 
 def _index_maintenance(spark, table, subdir, make_entries, conflict_retries, op):
@@ -559,9 +562,6 @@ def _index_maintenance(spark, table, subdir, make_entries, conflict_retries, op)
     """
     import uuid
 
-    from docetl_spark.cdc.merge import DELTA_PROP
-    from docetl_spark.lake.table import CommitConflict
-
     idx = LakeTable(band_index_path(table, subdir))
     if not idx.exists():
         return None
@@ -584,7 +584,8 @@ def _index_maintenance(spark, table, subdir, make_entries, conflict_retries, op)
             # in milliseconds — back off so the window can actually close.
             time.sleep(min(2.0, 0.25 * (2 ** attempt)))
             continue
-        live = _live_ids(spark, table, snap)
+        live = _live_corpus(spark, table, snap, []).select(
+            F.col(snap.key_cols[0]).alias("_sid")).distinct()
         entries = make_entries(idx, isnap, snap, live)
         tag = f"{op}{isnap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
         new_files = idx.write_bucket_files(entries, isnap, tag, repartition=True)
@@ -635,8 +636,6 @@ def prune_index_orphans(
     reclaim them with ``rebuild_band_index`` / ``ann_index.
     rebuild_ivf_index`` — the pin-preserving O(corpus) full refresh.
     """
-    from docetl_spark.cdc.merge import DELTA_PROP, dedup_last_writer
-
     def make_entries(idx, isnap, snap, live):
         cur = idx.read(spark, isnap.version)
         if isnap.properties.get(DELTA_PROP) == "true":
@@ -679,8 +678,6 @@ def rebuild_band_index(
     Concurrency/crash safety: the ``_index_maintenance`` protocol (see
     its docstring — pinned-snapshot commit + index-fence-ahead refusal).
     """
-    from docetl_spark.cdc.merge import DELETED_COL, DELTA_PROP, dedup_last_writer
-
     def make_entries(idx, isnap, snap, live):
         if expected_params is not None:
             got = {k: isnap.properties.get(k) for k in expected_params}
@@ -691,16 +688,7 @@ def rebuild_band_index(
                     "from the pinned parameters"
                 )
         id_col = snap.key_cols[0]
-        src = table.read(spark, snap.version)
-        if value_cols is not None:
-            src = src.select(
-                *snap.key_cols, "lsn", *value_cols,
-                *([DELETED_COL] if DELETED_COL in src.columns else []),
-            )
-        if snap.properties.get(DELTA_PROP) == "true":
-            src = dedup_last_writer(src, snap.key_cols)
-        if DELETED_COL in src.columns:
-            src = src.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
+        src = _live_corpus(spark, table, snap, value_cols)
         fence = int(isnap.properties.get(FENCE_PROP, "-1"))
         return (
             src.select(

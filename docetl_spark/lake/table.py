@@ -203,6 +203,14 @@ class LakeTable:
         paths = [os.path.join(self.path, f) for b in buckets for f in snap.files.get(b, [])]
         return self.scan(spark, snap.schema, paths)
 
+    def read_probed_buckets(self, spark: SparkSession, probe: DataFrame, snap: Snapshot) -> DataFrame:
+        """The buckets ``probe``'s rows hash into, scanned: its distinct
+        ``bucket_expr(snap)`` ids are collected (at most ``num_buckets``
+        ints, the price of file-level pruning) and only those buckets are
+        read. ``probe`` must carry the table's bucket columns."""
+        rows = probe.select(self.bucket_expr(snap).alias("_b")).distinct().collect()
+        return self.read_buckets(spark, sorted(r["_b"] for r in rows), snap)
+
     @staticmethod
     def scan(spark: SparkSession, schema: T.StructType, paths: list[str]) -> DataFrame:
         """One parquet scan of ``paths`` (absolute) through ``schema``; an

@@ -27,6 +27,7 @@ stream state.
 
 from __future__ import annotations
 
+from dataclasses import fields
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,6 +66,25 @@ def _start(stream: DataFrame, apply_batch, query_name: str, checkpoint_dir: str,
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _start_ingest(stream: DataFrame, ingest, metrics_path: str | None, query_name: str,
+                  checkpoint_dir: str, trigger_available_now: bool) -> StreamingQuery:
+    """Start a sidecar-indexed ingest (``ingest(batch_df, batch_id)`` ->
+    its stats dataclass) as the stream's foreachBatch sink. Each batch
+    appends one metrics record: ``batch_id``, every stats field but
+    ``merge``, then the merge's ``skipped`` and ``snapshot_version``."""
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        stats = ingest(batch_df, int(batch_id))
+        append_metrics(metrics_path, {
+            "batch_id": int(batch_id),
+            **{f.name: getattr(stats, f.name) for f in fields(stats) if f.name != "merge"},
+            "skipped": stats.merge.skipped,
+            "snapshot_version": stats.merge.snapshot_version,
+        })
+
+    return _start(stream, apply_batch, query_name, checkpoint_dir, trigger_available_now)
 
 
 def stream_changes(
@@ -131,20 +151,11 @@ def stream_dedup_ingest(
     pins which batch saw which corpus state)."""
     from docetl_spark.functions.incr_dedup import dedup_ingest
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        stats = dedup_ingest(spark, table, batch_df, int(batch_id),
-                             id_col, text_col, **dedup_kwargs)
-        append_metrics(metrics_path, {
-            "batch_id": int(batch_id),
-            "batch_docs": stats.batch_docs,
-            "dropped_cross": stats.dropped_cross,
-            "dropped_within": stats.dropped_within,
-            "kept": stats.kept,
-            "skipped": stats.merge.skipped,
-            "snapshot_version": stats.merge.snapshot_version,
-        })
+    def ingest(batch_df: DataFrame, batch_id: int):
+        return dedup_ingest(spark, table, batch_df, batch_id, id_col, text_col, **dedup_kwargs)
 
-    return _start(docs, apply_batch, query_name, checkpoint_dir, trigger_available_now)
+    return _start_ingest(docs, ingest, metrics_path, query_name, checkpoint_dir,
+                         trigger_available_now)
 
 
 def stream_ivf_ingest(
@@ -175,15 +186,8 @@ def stream_ivf_ingest(
     fenced replay repairs, exactly as in the batch path."""
     from docetl_spark.functions.ann_index import ivf_ingest
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        stats = ivf_ingest(spark, table, batch_df, int(batch_id),
-                           id_col, vec_col, **ivf_kwargs)
-        append_metrics(metrics_path, {
-            "batch_id": int(batch_id),
-            "batch_rows": stats.batch_rows,
-            "index_entries": stats.index_entries,
-            "skipped": stats.merge.skipped,
-            "snapshot_version": stats.merge.snapshot_version,
-        })
+    def ingest(batch_df: DataFrame, batch_id: int):
+        return ivf_ingest(spark, table, batch_df, batch_id, id_col, vec_col, **ivf_kwargs)
 
-    return _start(vectors, apply_batch, query_name, checkpoint_dir, trigger_available_now)
+    return _start_ingest(vectors, ingest, metrics_path, query_name, checkpoint_dir,
+                         trigger_available_now)

@@ -17,6 +17,7 @@ from docetl_spark.functions.ann_index import (
 )
 from docetl_spark.functions.incr_dedup import band_index_path
 from docetl_spark.lake.table import LakeTable
+from tests.test_cdc_merge import _jobs_in
 
 
 def _clustered(spark, n=96, dim=16, n_anchors=4):
@@ -251,3 +252,32 @@ def test_ivf_stored_recall_scores_the_checkpointed_sample(spark, corpus_table):
     ref = ivf_stored_recall_at_k(spark, corpus_table, emb.filter(F.col("vec_id").isin(drawn)),
                                  "vec_id", "embedding", k=3, n_probe=2)
     assert got == sorted((r["query_id"], r["recall"]) for r in ref.collect())
+
+
+def test_unknown_mode_is_refused_before_any_spark_job(spark, corpus_table):
+    # a bad mode used to surface only in the corpus merge, after the index
+    # had committed the batch: index fence 1, corpus fence 0
+    emb = _clustered(spark)
+    ivf_ingest(spark, corpus_table, emb.filter("vec_id < 48"), 0, "vec_id", "embedding",
+               n_centroids=8)
+    idx = LakeTable(band_index_path(corpus_table, IVF_SUBDIR))
+    fences = (corpus_table.snapshot().properties, idx.snapshot().properties)
+    with pytest.raises(ValueError, match=r'"cow" or "mor".*MOR'):
+        _jobs_in(spark, "ivf_bad_mode", lambda: ivf_ingest(
+            spark, corpus_table, emb.filter("vec_id >= 48"), 1, "vec_id", "embedding",
+            n_centroids=8, mode="MOR"))
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup("ivf_bad_mode")) == 0
+    assert (corpus_table.snapshot().properties, idx.snapshot().properties) == fences
+
+
+def test_second_batch_job_count(spark, corpus_table):
+    # a batch against a pinned index: no training, index append, corpus merge
+    emb = _clustered(spark)
+    ivf_ingest(spark, corpus_table, emb.filter("vec_id < 48"), 0, "vec_id", "embedding",
+               n_centroids=8)
+    stats = []
+    jobs = _jobs_in(spark, "ivf_second", lambda: stats.append(ivf_ingest(
+        spark, corpus_table, emb.filter("vec_id >= 48"), 1, "vec_id", "embedding",
+        n_centroids=8)))
+    assert (stats[0].batch_rows, stats[0].index_entries) == (48, 48)
+    assert jobs == 14

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from docetl_spark.cdc import create_cdc_table, read_state
 from docetl_spark.functions.incr_dedup import dedup_ingest, greedy_first_kept
+from tests.test_cdc_merge import _jobs_in
 
 
 def test_greedy_first_kept_is_not_component_min(spark):
@@ -475,3 +476,36 @@ def test_dedup_ingest_reserved_columns_refused(spark, tmp_path):
     bad = spark.createDataFrame([(1, "some text", 5)], "doc_id long, text string, lsn long")
     with pytest.raises(ValueError, match="reserved"):
         dedup_ingest(spark, t, bad, 0, id_col="doc_id", text_col="text")
+
+
+def test_unknown_mode_is_refused_before_any_spark_job(spark, tmp_path, corpus):
+    # a bad mode used to surface only in the corpus merge, after the index
+    # had committed the batch: index fence 1, corpus fence 0
+    from docetl_spark.functions.incr_dedup import band_index_path
+    from docetl_spark.lake.table import LakeTable
+
+    table = create_cdc_table(str(tmp_path / "t"), ["doc_id"], num_buckets=4,
+                             key_types={"doc_id": "int"})
+    dedup_ingest(spark, table, corpus.filter("doc_id < 3"), 0, "doc_id", "text", threshold=0.6)
+    idx = LakeTable(band_index_path(table))
+    fences = (table.snapshot().properties, idx.snapshot().properties)
+    with pytest.raises(ValueError, match=r'"cow" or "mor".*MOR'):
+        _jobs_in(spark, "dedup_bad_mode", lambda: dedup_ingest(
+            spark, table, corpus.filter("doc_id >= 3"), 1, "doc_id", "text", mode="MOR"))
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup("dedup_bad_mode")) == 0
+    assert (table.snapshot().properties, idx.snapshot().properties) == fences
+
+
+def test_stored_corpus_batch_job_count(spark, tmp_path, corpus):
+    # a minhash batch blocked against a stored corpus: index probe read,
+    # candidate point lookup, verify, greedy, index append, corpus merge
+    table = create_cdc_table(str(tmp_path / "t"), ["doc_id"], num_buckets=4,
+                             key_types={"doc_id": "int"})
+    dedup_ingest(spark, table, corpus.filter(F.col("doc_id").isin(0, 2, 4)), 0,
+                 "doc_id", "text", threshold=0.6)
+    stats = []
+    jobs = _jobs_in(spark, "dedup_stored", lambda: stats.append(dedup_ingest(
+        spark, table, corpus.filter(F.col("doc_id").isin(1, 3, 5)), 1,
+        "doc_id", "text", threshold=0.6)))
+    assert (stats[0].dropped_cross, stats[0].kept, stats[0].index_entries) == (2, 1, 16)
+    assert jobs == 39

@@ -5,6 +5,7 @@ Mirrors the reference's checkpoint-reuse semantics (docetl/runner.py:546-591)
 recast as stream-resume assertions per the north rule.
 """
 
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -20,6 +21,12 @@ KEYS = ["repo", "path", "commit"]
 def df_rows(df, *cols):
     sel = df.select(*cols) if cols else df
     return sorted(tuple(r) for r in sel.collect())
+
+
+def _metrics_records(path):
+    """The metrics JSONL a stream face appended, one dict per batch."""
+    with open(path) as f:
+        return [json.loads(line) for line in f]
 
 
 def _segments(spark, n_events, seg_rows, out_dir, start=0):
@@ -177,6 +184,14 @@ def test_stream_dedup_ingest_drains_and_dedups(spark, tmp_path):
     # 1 near-dups 0 (within seg0); 3 == 1's text (cross vs stored 0);
     # 5 == base (cross); 2 and 4 unique
     assert kept == [0, 2, 4]
+    recs = _metrics_records(tmp_path / "m.jsonl")
+    assert [list(r) for r in recs] == [[
+        "batch_id", "batch_docs", "dropped_cross", "dropped_within", "kept", "index_entries",
+        "skipped", "snapshot_version",
+    ]] * 2
+    # 16 bands per kept doc
+    assert [(r["kept"], r["index_entries"], r["skipped"]) for r in recs] == [
+        (2, 32, False), (1, 16, False)]
     v = table.snapshot().version
 
     # restart on same checkpoint: nothing new -> no re-application
@@ -220,6 +235,11 @@ def test_stream_ivf_ingest_maintains_index_and_fence(spark, tmp_path):
     q.awaitTermination(300)
 
     assert read_state(spark, table).count() == 96
+    recs = _metrics_records(tmp_path / "m.jsonl")
+    assert [list(r) for r in recs] == [[
+        "batch_id", "batch_rows", "index_entries", "skipped", "snapshot_version"]] * 2
+    assert [(r["batch_rows"], r["index_entries"], r["skipped"]) for r in recs] == [
+        (48, 48, False), (48, 48, False)]
     idx = LakeTable(band_index_path(table, IVF_SUBDIR))
     assert idx.exists()
     # one index entry per corpus row (each vector lands in exactly 1 cell)
