@@ -296,7 +296,6 @@ def q_cdc_feed_source_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = (
         spark.read.format("lakefeed")
         .option("path", table.path)
-        .option("pushdown", "true")
         .load()
         .filter(F.col("lsn") >= 4000)
     )
@@ -754,11 +753,11 @@ def q_doc_chunking_macro(spark: SparkSession, sf_dir: str) -> DataFrame:
     the composed plan. The chunk map measures the GATHERED rendering
     (so the oracle proves the full composition, not just split), the
     reduce recombines per source document."""
-    from docetl_spark.plans.macros import rewrite_chunked_maps
+    from docetl_spark.plans.macros import expand_macros
     from docetl_spark.plans.pipeline import _apply_op
 
     docs = _t(spark, sf_dir, "documents")
-    ops_list = rewrite_chunked_maps([{
+    ops_list = expand_macros([{
         "op": "chunked_map", "name": "kw",
         "split_key": "text", "method": "delimiter",
         "delimiter": " ", "num_splits_to_group": 40,

@@ -76,6 +76,7 @@ from docetl_spark.cdc.merge import (
     _unsupported_upcast_paths,
 )
 from docetl_spark.lake.table import LakeTable
+from docetl_spark.schema import sql_str
 
 CHANGE_TYPE_COL = "_change_type"  # 'upsert' | 'delete'
 COMMIT_VERSION_COL = "_commit_version"
@@ -234,7 +235,7 @@ def _scan_slices(
     names = list(version_of)
     scan = table.scan(spark, read_schema, paths)
     pos = F.array_position(
-        F.expr(_sql_array([_sql_str(n) for n in names])),
+        F.expr(_sql_array([sql_str(n) for n in names])),
         scan.metadataColumn("_metadata").getField("file_name"),
     ).cast("int")
 
@@ -251,10 +252,6 @@ def _scan_slices(
         COMMIT_VERSION_COL: lookup([version_of[n].version for n in names]),
         COMMIT_TS_COL: lookup([version_of[n].timestamp_ms for n in names]),
     })
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _sql_array(items: list[str]) -> str:

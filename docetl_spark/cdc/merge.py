@@ -39,10 +39,8 @@ The reference's analogue is in-memory ``{**item, **output}`` row merging
 
 from __future__ import annotations
 
-import glob
 import os
 import time
-import uuid
 import warnings
 from dataclasses import dataclass, field, asdict
 from typing import Callable, Iterable
@@ -92,6 +90,11 @@ BROADCAST_KEY_LIMIT = 500_000
 # CAS attempts of ``commit_prepared_merge`` against unrelated commits
 # (compaction, a concurrent stream) before it hands the batch back.
 PREPARED_COMMIT_RETRIES = 5
+
+# Re-runs of a maintenance rewrite (``replay.compact_state``, the
+# sidecar-index prune/rebuild) after it loses the version race to a
+# concurrent commit; each re-run starts from the fresh snapshot.
+MAINTENANCE_RETRIES = 3
 
 
 def reject_reserved_columns(df: DataFrame, caller: str) -> None:
@@ -173,18 +176,9 @@ def _widen_rewrite(spark: SparkSession, table, snap, evolved: T.StructType):
     Carries MOR deltas/tombstones verbatim (rows are cast, never
     collapsed). No fence change: a crash after this commit leaves a
     correct, merely-rewritten table."""
-    df = _align(table.read(spark), evolved)
-    new_spec = Snapshot(**{**snap.__dict__, "schema": evolved})
-    df = df.withColumn("_bucket", table.bucket_expr(new_spec))
-    tag = f"widen{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
-    new_files = table.write_bucket_files(df, new_spec, tag, repartition=False)
-    return table.commit(
-        new_files,
-        replaced_buckets=set(snap.files),
-        schema=evolved,
-        summary={"operation": "widen-rewrite"},
-        expected_version=snap.version,
-    )
+    spec = Snapshot(**{**snap.__dict__, "schema": evolved})
+    return table.rewrite(_align(table.read(spark, snap.version), evolved), snap, snap.files,
+                         "widen-rewrite", spec=spec, repartition=False)
 
 
 def _align(df: DataFrame, schema: T.StructType) -> DataFrame:
@@ -465,8 +459,7 @@ def _prepare(table: LakeTable, batch: DataFrame, batch_id: int, snap: Snapshot, 
                                   winner_stages, evolved, single_phase=True)
         combined = winners.withColumn("_bucket", table.bucket_expr(snap)).repartition("_bucket")
         t_w = time.time()
-        tag = f"mor{batch_id:08d}-{uuid.uuid4().hex[:8]}"
-        prep.new_files = table.write_bucket_files(combined, snap, tag, repartition=False)
+        prep.new_files = table.write_bucket_files(combined, snap, "mor", repartition=False)
         metrics.write_sec = time.time() - t_w
     metrics.duration_sec = time.time() - t0
     return prep
@@ -633,10 +626,10 @@ def _merge_apply_once(
       files; no current-state read, no survivors, no rewrite: a batch
       costs O(batch) regardless of table size. LWW resolves at read time
       (``read_state`` dedups when the table carries deltas) and
-      ``LakeTable.compact(dedup_keys=...)`` folds deltas back to one
-      version per key. This is the Iceberg-v2 MOR shape — the right mode
-      for sustained high-rate ingest; out-of-order and late batches are
-      safe automatically because read-time LWW compares LSNs globally.
+      ``cdc.replay.compact_state`` folds deltas back to one version per
+      key. This is the Iceberg-v2 MOR shape — the right mode for
+      sustained high-rate ingest; out-of-order and late batches are safe
+      automatically because read-time LWW compares LSNs globally.
       The body is ``prepare_mor_merge``'s, run against the live snapshot
       and published with one CAS at that snapshot's version.
 
@@ -772,15 +765,9 @@ def _merge_apply_once(
             # changes from this rewrite commit. Orphaned sidecars (a losing
             # commit race) are unreferenced and reclaimed by vacuum.
             if changelog:
-                chdir = os.path.join(table.data_dir, f"chlog{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}")
-                winners.write.parquet(chdir)
-                chlog_files = sorted(
-                    os.path.relpath(p, table.path) for p in glob.glob(os.path.join(chdir, "*.parquet"))
-                )
+                chlog_files = table.write_files(winners, snap, "chlog")
                 if chlog_files:
-                    winners = spark.read.schema(evolved).parquet(
-                        *[os.path.join(table.path, f) for f in chlog_files]
-                    )
+                    winners = table.scan(spark, evolved, [os.path.join(table.path, f) for f in chlog_files])
 
             # One write job. Default shape: the survivors branch (if any)
             # streams file-aligned (no shuffle), only the winners branch
@@ -800,9 +787,8 @@ def _merge_apply_once(
                 combined = winners.withColumn("_bucket", bexpr).repartition("_bucket")
                 if survivors is not None:
                     combined = survivors.withColumn("_bucket", bexpr).unionByName(combined)
-        tag = f"snap{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
         t_w = time.time()
-        new_files = table.write_bucket_files(combined, snap_for_bucket, tag, repartition=False)
+        new_files = table.write_bucket_files(combined, snap_for_bucket, "snap", repartition=False)
         metrics.write_sec = time.time() - t_w
         return _commit_or_skip(
             table, metrics, snap.version, new_files, set(affected), evolved, mode,

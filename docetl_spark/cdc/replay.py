@@ -154,8 +154,7 @@ def read_keys_frame(spark: SparkSession, table: LakeTable, keys: DataFrame,
     return _live_rows(df.join(F.broadcast(keys), on=snap.key_cols, how="left_semi"), snap)
 
 
-def compact_state(spark: SparkSession, table: LakeTable, min_files: int = 2,
-                  conflict_retries: int = 3):
+def compact_state(spark: SparkSession, table: LakeTable, min_files: int = 2):
     """Fold MOR delta files: per bucket, keep one LWW-winning row per key
     (tombstones kept — they must still block late lower-LSN arrivals) and
     clear the read-dedup flag. The write-amplification that CoW pays per
@@ -163,8 +162,8 @@ def compact_state(spark: SparkSession, table: LakeTable, min_files: int = 2,
 
     A maintenance job racing the ingest loses the version race benignly:
     on CommitConflict the whole compact re-runs against the fresh snapshot
-    (up to ``conflict_retries`` times) so newly-appended deltas are folded
-    too — never silently dropped.
+    (up to ``merge.MAINTENANCE_RETRIES`` times) so newly-appended deltas
+    are folded too — never silently dropped.
 
     When deltas exist, EVERY bucket compacts (min_files=1): after a
     CoW-mode batch on a delta-carrying table, even a single bucket file
@@ -173,7 +172,8 @@ def compact_state(spark: SparkSession, table: LakeTable, min_files: int = 2,
     dedup pass."""
     from docetl_spark.lake.table import CommitConflict
 
-    for attempt in range(conflict_retries + 1):
+    retries = merge_mod.MAINTENANCE_RETRIES
+    for attempt in range(retries + 1):
         snap = table.snapshot()
         has_deltas = snap.properties.get(DELTA_PROP) == "true"
         transform = (lambda df: dedup_last_writer(df, snap.key_cols)) if has_deltas else None
@@ -181,15 +181,15 @@ def compact_state(spark: SparkSession, table: LakeTable, min_files: int = 2,
             new_snap = table.compact(spark, min_files=1 if has_deltas else min_files, transform=transform,
                                      properties={DELTA_PROP: "false"} if has_deltas else None)
             if new_snap is None and has_deltas:
-                # nothing to rewrite (every bucket already single-file =>
-                # unique keys), but the flag still needs an atomic
-                # metadata-only clear
+                # nothing to rewrite (with deltas min_files=1, so the
+                # table holds no files), but the flag still needs an
+                # atomic metadata-only clear
                 new_snap = table.commit({}, set(), properties={DELTA_PROP: "false"},
                                         summary={"operation": "compact", "noop": True},
                                         expected_version=snap.version)
             return new_snap
         except CommitConflict:
-            if attempt >= conflict_retries:
+            if attempt >= retries:
                 raise
 
 

@@ -250,17 +250,15 @@ def ivf_stored_recall_at_k(
     return _recall_against_brute(c, q, k, pairs, q_rows=_collect_queries(q))
 
 
-def prune_ivf_orphans(spark: SparkSession, table: LakeTable, conflict_retries: int = 3):
+def prune_ivf_orphans(spark: SparkSession, table: LakeTable):
     """Drop IVF index entries for ids no longer live in the corpus —
     the same filtered compaction as the dedup index's
     ``incr_dedup.prune_index_orphans`` (orphans are read-harmless but
     bloat candidate sets without bound on delete-heavy corpora)."""
-    return prune_index_orphans(spark, table, subdir=IVF_SUBDIR,
-                               conflict_retries=conflict_retries)
+    return prune_index_orphans(spark, table, subdir=IVF_SUBDIR)
 
 
-def rebuild_ivf_index(spark: SparkSession, table: LakeTable, vec_col: str,
-                      conflict_retries: int = 3):
+def rebuild_ivf_index(spark: SparkSession, table: LakeTable, vec_col: str):
     """PIN-PRESERVING full reindex: atomically replace the IVF sidecar's
     contents with fresh (cell, id) entries for every live corpus row,
     assigned under the EXISTING pinned centroids. Reclaims stale-cell
@@ -274,5 +272,4 @@ def rebuild_ivf_index(spark: SparkSession, table: LakeTable, vec_col: str,
     params = _params(centroids, int(props["ivf.n-centroids"]), int(props["ivf.seed"]))
     cell_fn = _cell_expr_fn(centroids, vec_col, n_probe=1)
     return rebuild_band_index(spark, table, cell_fn, subdir=IVF_SUBDIR,
-                              conflict_retries=conflict_retries,
                               expected_params=params, value_cols=[vec_col])

@@ -46,6 +46,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+import docetl_spark.cdc.merge as merge_mod
 from docetl_spark.cdc.merge import (
     DELETED_COL,
     DELTA_PROP,
@@ -536,7 +537,7 @@ def _live_corpus(spark: SparkSession, table: LakeTable, snap, value_cols=None) -
     return _live_rows(df, snap)
 
 
-def _index_maintenance(spark, table, subdir, make_entries, conflict_retries, op):
+def _index_maintenance(spark, table, subdir, make_entries, op):
     """Shared race-safe protocol for index maintenance that REMOVES or
     REPLACES entries. The hazard: ingest commits index-first, so an id
     can be indexed while its corpus row is still in flight (or pending
@@ -550,28 +551,27 @@ def _index_maintenance(spark, table, subdir, make_entries, conflict_retries, op)
     2. Refuse while index_fence > corpus_fence — an ingest is mid-flight
        or a crashed batch awaits redelivery; its ids are not yet live
        and MUST NOT be pruned. Retried (the corpus commit usually lands
-       within the retry budget); raises if persistently ahead, telling
-       the operator to redeliver the crashed batch first. (index_fence
-       < corpus_fence is NORMAL: corpus-only commits — deletes — never
-       touch the index.)
+       within ``merge.MAINTENANCE_RETRIES`` re-runs); raises if
+       persistently ahead, telling the operator to redeliver the crashed
+       batch first. (index_fence < corpus_fence is NORMAL: corpus-only
+       commits — deletes — never touch the index.)
     3. Compute live ids pinned to that corpus snapshot, build the
        replacement entries, commit against the PINNED index version:
        any ingest that committed to the index meanwhile (always before
        its corpus commit) raises CommitConflict and the whole attempt —
        including the live-id set — recomputes.
     """
-    import uuid
-
     idx = LakeTable(band_index_path(table, subdir))
     if not idx.exists():
         return None
-    for attempt in range(conflict_retries + 1):
+    retries = merge_mod.MAINTENANCE_RETRIES
+    for attempt in range(retries + 1):
         isnap = idx.snapshot()  # pin FIRST (step 1)
         snap = table.snapshot()
         idx_fence = int(isnap.properties.get(FENCE_PROP, "-1"))
         corpus_fence = int(snap.properties.get(FENCE_PROP, "-1"))
         if idx_fence > corpus_fence:  # step 2
-            if attempt >= conflict_retries:
+            if attempt >= retries:
                 raise RuntimeError(
                     f"{op}: index fence {idx_fence} is ahead of corpus fence "
                     f"{corpus_fence} — an ingest batch is in flight or crashed "
@@ -587,18 +587,11 @@ def _index_maintenance(spark, table, subdir, make_entries, conflict_retries, op)
         live = _live_corpus(spark, table, snap, []).select(
             F.col(snap.key_cols[0]).alias("_sid")).distinct()
         entries = make_entries(idx, isnap, snap, live)
-        tag = f"{op}{isnap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
-        new_files = idx.write_bucket_files(entries, isnap, tag, repartition=True)
-        try:
-            return idx.commit(  # step 3: pinned to OUR isnap
-                new_files,
-                replaced_buckets=set(range(isnap.num_buckets)),
-                properties={DELTA_PROP: "false"},
-                summary={"operation": op, "buckets": isnap.num_buckets},
-                expected_version=isnap.version,
-            )
+        try:  # step 3: pinned to OUR isnap
+            return idx.rewrite(entries, isnap, range(isnap.num_buckets), op,
+                               properties={DELTA_PROP: "false"}, summary={"buckets": isnap.num_buckets})
         except CommitConflict:
-            if attempt >= conflict_retries:
+            if attempt >= retries:
                 raise
 
 
@@ -606,7 +599,6 @@ def prune_index_orphans(
     spark: SparkSession,
     table: LakeTable,
     subdir: str = IDX_SUBDIR,
-    conflict_retries: int = 3,
 ):
     """Maintenance: rewrite the banded index dropping entries whose doc id
     is no longer LIVE in the corpus (tombstoned deletes).
@@ -642,8 +634,7 @@ def prune_index_orphans(
             cur = dedup_last_writer(cur, isnap.key_cols)
         return cur.join(live, "_sid", "left_semi")
 
-    return _index_maintenance(spark, table, subdir, make_entries,
-                              conflict_retries, op="prune")
+    return _index_maintenance(spark, table, subdir, make_entries, op="prune")
 
 
 def rebuild_band_index(
@@ -651,7 +642,6 @@ def rebuild_band_index(
     table: LakeTable,
     band_expr_fn,
     subdir: str = IDX_SUBDIR,
-    conflict_retries: int = 3,
     expected_params: dict | None = None,
     value_cols: list[str] | None = None,
 ):
@@ -703,15 +693,13 @@ def rebuild_band_index(
             )
         )
 
-    return _index_maintenance(spark, table, subdir, make_entries,
-                              conflict_retries, op="reindex")
+    return _index_maintenance(spark, table, subdir, make_entries, op="reindex")
 
 
 def rebuild_dedup_index(
     spark: SparkSession,
     table: LakeTable,
     embedding_col: str | None = None,
-    conflict_retries: int = 3,
 ):
     """``rebuild_band_index`` with everything derived from the index's
     OWN pinned parameters — the misuse-proof face. The band function
@@ -742,5 +730,4 @@ def rebuild_dedup_index(
         cols = [embedding_col]
     else:
         raise ValueError(f"unknown pinned dedup.method {method!r} at {idx.path}")
-    return rebuild_band_index(spark, table, band_fn, conflict_retries=conflict_retries,
-                              expected_params=params, value_cols=cols)
+    return rebuild_band_index(spark, table, band_fn, expected_params=params, value_cols=cols)

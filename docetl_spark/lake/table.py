@@ -333,9 +333,16 @@ class LakeTable:
         cols = snap.bucket_cols or snap.key_cols
         return F.pmod(F.xxhash64(*[F.col(k) for k in cols]), F.lit(snap.num_buckets)).cast("int")
 
-    def write_bucket_files(self, df: DataFrame, snap: Snapshot, tag: str, repartition: bool = True) -> dict[int, list[str]]:
+    def _new_data_dir(self, snap: Snapshot, op: str) -> str:
+        """THE data-directory naming rule: ``op`` + the version the write
+        will commit as + a random suffix (concurrent writers of the same
+        version never share a directory)."""
+        return os.path.join(self.data_dir, f"{op}{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}")
+
+    def write_bucket_files(self, df: DataFrame, snap: Snapshot, op: str, repartition: bool = True) -> dict[int, list[str]]:
         """Write ``df`` (already conforming to table schema) partitioned by
-        bucket under ``data/<tag>/``; returns bucket -> new relative paths.
+        bucket under a new ``data/<op><version>-<suffix>/``; returns
+        bucket -> new relative paths.
 
         ``repartition=False`` keeps the incoming partitioning (e.g. rows
         streaming straight out of bucket-aligned file scans) instead of
@@ -347,7 +354,7 @@ class LakeTable:
         letting callers fuse differently-partitioned branches (e.g. an
         unshuffled survivors scan unioned with shuffled winners) into one
         write job."""
-        out_dir = os.path.join(self.data_dir, tag)
+        out_dir = self._new_data_dir(snap, op)
         bucketed = df if "_bucket" in df.columns else df.withColumn("_bucket", self.bucket_expr(snap))
         if repartition:
             bucketed = bucketed.repartition("_bucket")
@@ -361,6 +368,35 @@ class LakeTable:
             b = int(p.split("_bucket=")[1].split(os.sep)[0])
             files.setdefault(b, []).append(os.path.relpath(p, self.path))
         return files
+
+    def write_files(self, df: DataFrame, snap: Snapshot, op: str) -> list[str]:
+        """Write ``df`` unbucketed under a new data directory (a commit's
+        changelog sidecar); returns the sorted relative paths. The files
+        are live only once a commit references them."""
+        out_dir = self._new_data_dir(snap, op)
+        df.write.parquet(out_dir)
+        return sorted(os.path.relpath(p, self.path) for p in glob.glob(os.path.join(out_dir, "*.parquet")))
+
+    def rewrite(self, df: DataFrame, snap: Snapshot, buckets, op: str, spec: Snapshot | None = None,
+                repartition: bool = True, properties: dict[str, str] | None = None,
+                summary: dict | None = None) -> Snapshot:
+        """THE whole-bucket rewrite: write ``df`` as the new files of
+        ``buckets`` and publish them at ``snap.version`` (CommitConflict
+        if another writer committed since; the written files then stay
+        unreferenced until ``vacuum``). ``spec`` buckets the rows under a
+        new schema or bucket count (same version as ``snap``), and the
+        commit adopts both. Compaction, rebucket, the long->double widen
+        rewrite and sidecar-index maintenance all publish through here."""
+        spec = spec or snap
+        return self.commit(
+            self.write_bucket_files(df, spec, op, repartition),
+            replaced_buckets=set(buckets),
+            schema=spec.schema,
+            properties=properties,
+            summary={"operation": op, **(summary or {})},
+            expected_version=snap.version,
+            num_buckets=spec.num_buckets,
+        )
 
     def commit(
         self,
@@ -480,15 +516,8 @@ class LakeTable:
         df = self.scan(spark, snap.schema, paths)
         if transform is not None:
             df = transform(df)
-        tag = f"compact{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
-        new_files = self.write_bucket_files(df, snap, tag, repartition=True)
-        return self.commit(
-            new_files,
-            replaced_buckets=set(todo),
-            properties=properties,
-            summary={"operation": "compact", "buckets": len(todo), "files_in": len(paths)},
-            expected_version=snap.version,
-        )
+        return self.rewrite(df, snap, todo, "compact", properties=properties,
+                            summary={"buckets": len(todo), "files_in": len(paths)})
 
     def rebucket(self, spark: SparkSession, new_num_buckets: int) -> "Snapshot | None":
         """Bucket-spec evolution (the Iceberg partition-spec-evolution
@@ -507,17 +536,10 @@ class LakeTable:
         snap = self.snapshot()
         if new_num_buckets == snap.num_buckets:
             return None
-        df = self.read(spark)  # every live row: winners, deltas, tombstones
         new_spec = Snapshot(**{**snap.__dict__, "num_buckets": new_num_buckets})
-        tag = f"rebucket{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
-        new_files = self.write_bucket_files(df, new_spec, tag, repartition=True)
-        return self.commit(
-            new_files,
-            replaced_buckets=set(snap.files),
-            num_buckets=new_num_buckets,
-            summary={"operation": "rebucket", "from": snap.num_buckets, "to": new_num_buckets},
-            expected_version=snap.version,
-        )
+        # every live row of the snapshot read: winners, deltas, tombstones
+        return self.rewrite(self.read(spark, snap.version), snap, snap.files, "rebucket", spec=new_spec,
+                            summary={"from": snap.num_buckets, "to": new_num_buckets})
 
     def vacuum(self, keep_versions: int = 1) -> int:
         """Delete data files unreferenced by the newest ``keep_versions``

@@ -11,9 +11,10 @@ and docetl/operations/gather.py (peripheral-context re-rendering).
   window frames over the document's chunks for the common config, a
   grouped pandas apply for the rest.
 
-Both build their expressions as SQL text (``_ident`` / ``_lit`` quote
-names and literals): a Python-lambda Column tree costs one py4j round
-trip per node, which made plan construction the bulk of a short leaf.
+Both build their expressions as SQL text (``schema.sql_ident`` /
+``schema.sql_str`` quote names and literals): a Python-lambda Column
+tree costs one py4j round trip per node, which made plan construction
+the bulk of a short leaf.
 """
 
 from __future__ import annotations
@@ -26,22 +27,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from docetl_spark.schema import sql_ident, sql_str
+
 _TOKEN_RE = re.compile(r"\S+\s*")
-
-
-def _ident(name: str) -> str:
-    """A column name as a backtick-quoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _lit(text: str) -> str:
-    """A Python string as a SQL string literal. The SQL parser unescapes
-    backslash sequences inside literals, so backslashes and quotes are
-    escaped; every other character (newlines included) stands as is."""
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-_NEWLINE = _lit("\n")
+_NEWLINE = sql_str("\n")
 
 
 def _lambda_vars(columns: list[str], *names: str) -> list[str]:
@@ -102,19 +91,19 @@ def split(
     # per node, and on short reads plan construction sets the latency.
     cols = df.columns
     (i,) = _lambda_vars(cols, "i")
-    c = f"coalesce({_ident(split_key)}, '')"
+    c = f"coalesce({sql_ident(split_key)}, '')"
     if method == "token_count":
-        toks = f"regexp_extract_all({c}, {_lit(_TOKEN_RE.pattern)}, 0)"
+        toks = f"regexp_extract_all({c}, {sql_str(_TOKEN_RE.pattern)}, 0)"
         group, joiner = int(num_tokens), ""
     elif method == "delimiter":
-        toks = f"split({c}, {_lit(re.escape(delimiter))}, -1)"
+        toks = f"split({c}, {sql_str(re.escape(delimiter))}, -1)"
         group, joiner = int(num_splits_to_group), delimiter
     else:
         raise ValueError(f"unknown split method {method!r}")
     chunk_expr = (
         f"CASE WHEN size({toks}) = 0 THEN array('') ELSE transform("
         f"sequence(0, CAST(floor((size({toks}) - 1) / {group}) AS INT)), "
-        f"{i} -> array_join(slice({toks}, {i} * {group} + 1, {group}), {_lit(joiner)})) END"
+        f"{i} -> array_join(slice({toks}, {i} * {group} + 1, {group}), {sql_str(joiner)})) END"
     )
 
     # id over ALL columns, not just the split text: two different source
@@ -134,7 +123,7 @@ def split(
     # repo) requires a DETERMINISTIC input plan: a non-deterministic
     # upstream (unseeded sample, F.rand filter) can disagree between the
     # probe and the anti/semi passes — checkpoint such inputs first.
-    quoted = [_ident(c) for c in cols]
+    quoted = [sql_ident(c) for c in cols]
     base_json = f"to_json(struct({', '.join(quoted)}))"
     doc_id = f"sha2({base_json}, 256)"
     if not assume_distinct:
@@ -159,11 +148,11 @@ def split(
                 f"CASE WHEN `_salt` = 1 THEN {doc_id} "
                 f"ELSE sha2(concat({base_json}, '#', CAST(`_salt` AS STRING)), 256) END"
             )
-    id_col, chunk_col = _ident(f"{name}_id"), _ident(f"{split_key}_chunk")
+    id_col, chunk_col = sql_ident(f"{name}_id"), sql_ident(f"{split_key}_chunk")
     return (
         df.selectExpr("*", f"{doc_id} AS {id_col}", f"{chunk_expr} AS `_chunks`")
         .selectExpr(*quoted, id_col, f"posexplode(`_chunks`) AS (`_pos`, {chunk_col})")
-        .selectExpr(*quoted, id_col, chunk_col, f"CAST(`_pos` + 1 AS INT) AS {_ident(f'{name}_chunk_num')}")
+        .selectExpr(*quoted, id_col, chunk_col, f"CAST(`_pos` + 1 AS INT) AS {sql_ident(f'{name}_chunk_num')}")
     )
 
 
@@ -319,12 +308,12 @@ def gather(
     if simple:
         # built as SQL text: one parse instead of a py4j round trip per
         # Column node (see split)
-        doc = _ident(doc_id_key)
-        w = f"PARTITION BY {doc} ORDER BY {_ident(order_key)}"
-        c = f"coalesce({_ident(content_key)}, '')"
+        doc = sql_ident(doc_id_key)
+        w = f"PARTITION BY {doc} ORDER BY {sql_ident(order_key)}"
+        c = f"coalesce({sql_ident(content_key)}, '')"
         parts: list[str] = []
         if doc_header_key and not hierarchical:
-            hdr = _ident(doc_header_key)
+            hdr = sql_ident(doc_header_key)
             parts.append(f"CASE WHEN {hdr} IS NOT NULL THEN CAST({hdr} AS STRING) END")
         if prev_cfg:
             p = int(prev_cfg["tail"].get("count", 0))
@@ -340,9 +329,9 @@ def gather(
                 f"CASE WHEN {prev_cnt} > 0 THEN '--- End Previous Context ---' END",
             ]
         if hierarchical:
-            cur = f"coalesce({_ident(doc_header_key)}, CAST(array() AS {hdr_type.simpleString()}))"
+            cur = f"coalesce({sql_ident(doc_header_key)}, CAST(array() AS {hdr_type.simpleString()}))"
             parts.append(_hierarchy_header_expr(cur, w, df.columns))
-        parts += [_lit(main_chunk_start), c, _lit(main_chunk_end)]
+        parts += [sql_str(main_chunk_start), c, sql_str(main_chunk_end)]
         if next_cfg:
             n = int(next_cfg["head"].get("count", 0))
             next_cnt = f"(count(1) OVER (PARTITION BY {doc}) - row_number() OVER ({w}))"

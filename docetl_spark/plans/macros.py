@@ -319,9 +319,3 @@ def expand_macros(operations: list[dict]) -> list[dict]:
         default = "map" if cfg.get("op") == "chunked_map" else "op"
         out.extend(fn(cfg.get("name", default), **kwargs))
     return out
-
-
-def rewrite_chunked_maps(operations: list[dict]) -> list[dict]:
-    """Back-compat alias of :func:`expand_macros` (pre-r5 name, when
-    ``chunked_map`` was the only macro)."""
-    return expand_macros(operations)

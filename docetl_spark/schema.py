@@ -28,6 +28,18 @@ class SchemaError(ValueError):
     pass
 
 
+def sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(text: str) -> str:
+    """A Python string as a SQL string literal. The SQL parser unescapes
+    backslash sequences inside literals, so backslashes and quotes are
+    escaped; every other character (newlines included) stands as is."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def parse_type(spec: str) -> T.DataType:
     """Parse one DSL type string into a Spark DataType.
 

@@ -57,9 +57,9 @@ def get_spark(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         # Python data source pushdown (lakefeed's version/stats pruning).
         # Spark REFUSES a reader that implements pushFilters while this is
-        # off, so the engine session enables it; foreign sessions use
-        # lakefeed without .option("pushdown", "true") and lose only the
-        # driver-side pruning, never correctness.
+        # off (DATA_SOURCE_PUSHDOWN_DISABLED), so the engine session
+        # enables it; a foreign session must set it before a lakefeed
+        # batch read.
         .config("spark.sql.python.filterPushdown.enabled", "true")
     )
     for k, v in (extra_conf or {}).items():

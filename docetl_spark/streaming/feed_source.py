@@ -153,7 +153,7 @@ def _plan_file_partitions(path: str, since: int, to: int,
 class LakeFeedStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict, schema: T.StructType):
         self._path = options["path"]
-        self._starting = int(options.get("startingVersion", options.get("startingversion", 1)))
+        self._starting = int(options.get("startingVersion", 1))
         self._schema = schema
 
     def initialOffset(self) -> dict:
@@ -175,11 +175,25 @@ class LakeFeedStreamReader(DataSourceStreamReader):
 
 
 class LakeFeedBatchReader(DataSourceReader):
+    """Batch reader with Catalyst filter pushdown: range/equality
+    predicates on ``_commit_version`` narrow the version walk, and
+    predicates on stats-tracked columns (e.g. ``lsn``) skip files via the
+    snapshot's per-file bounds. EVERY filter is also returned as
+    residual, so Spark re-applies it row-level — pruning is purely a scan
+    reduction, never a semantics change. Spark refuses a reader that
+    implements ``pushFilters`` while
+    ``spark.sql.python.filterPushdown.enabled`` is off (error
+    ``DATA_SOURCE_PUSHDOWN_DISABLED``, naming the setting); the engine's
+    ``get_spark`` turns it on.
+
+    Options come in Spark's case-insensitive dict, so one spelling of
+    each name is looked up."""
+
     def __init__(self, options: dict, schema: T.StructType):
         self._path = options["path"]
         table = LakeTable(self._path)
-        self._since = int(options.get("sinceVersion", options.get("sinceversion", 1)))
-        to = options.get("toVersion", options.get("toversion"))
+        self._since = int(options.get("sinceVersion", 1))
+        to = options.get("toVersion")
         self._to = int(to) if to is not None else table.current_version()
         self._schema = schema
         self._col_bounds: dict = {}
@@ -204,19 +218,6 @@ class LakeFeedBatchReader(DataSourceReader):
         if not isinstance(partition, _FilePartition):
             return iter(())  # empty range
         return _read_file_partition(partition, self._schema)
-
-
-class LakeFeedPushdownBatchReader(LakeFeedBatchReader):
-    """Batch reader with Catalyst filter pushdown (opt-in via
-    ``.option("pushdown", "true")``): range/equality predicates on
-    ``_commit_version`` narrow the version walk, and predicates on
-    stats-tracked columns (e.g. ``lsn``) skip files via the snapshot's
-    per-file bounds. EVERY filter is also returned as residual, so Spark
-    re-applies it row-level — pruning is purely a scan reduction, never a
-    semantics change. Split out as a subclass because Spark refuses any
-    reader implementing ``pushFilters`` while
-    ``spark.sql.python.filterPushdown.enabled`` is off (the engine's
-    ``get_spark`` turns it on)."""
 
     def pushFilters(self, filters):
         from pyspark.sql.datasource import (
@@ -275,8 +276,6 @@ class LakeFeedDataSource(DataSource):
         return LakeFeedStreamReader(self.options, schema)
 
     def reader(self, schema: T.StructType) -> LakeFeedBatchReader:
-        if str(self.options.get("pushdown", "")).lower() in ("true", "1", "yes"):
-            return LakeFeedPushdownBatchReader(self.options, schema)
         return LakeFeedBatchReader(self.options, schema)
 
 

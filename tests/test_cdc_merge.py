@@ -327,6 +327,52 @@ def test_rebucket_with_mor_deltas_then_compact(spark, tmp_path, events):
     assert state_hashes(read_state(spark, table)) == want
 
 
+def test_rebucket_loses_race_to_a_slipped_commit(spark, tmp_path, events):
+    """A merge that commits between rebucket's snapshot read and its
+    publish makes ``LakeTable.rewrite`` refuse: rebucket raises
+    CommitConflict, the live state is the racing merge's, and the
+    rebucket files are unreferenced orphans that vacuum reclaims."""
+    from docetl_spark.lake.table import CommitConflict
+
+    table = create_cdc_table(str(tmp_path / "t"), KEYS, num_buckets=4)
+    replay_events(spark, table, events.filter("batch_id < 2"))
+    real_write = table.write_bucket_files
+    orphans = []
+
+    def write_then_race(df, snap, op, repartition=True):
+        files = real_write(df, snap, op, repartition)
+        if op == "rebucket":
+            orphans.extend(f for fl in files.values() for f in fl)
+            merge_apply(spark, table, events.filter("batch_id = 2"), 2)
+        return files
+
+    table.write_bucket_files = write_then_race
+    with pytest.raises(CommitConflict):
+        table.rebucket(spark, 8)
+    del table.write_bucket_files
+
+    snap = table.snapshot()
+    assert snap.num_buckets == 4 and snap.properties[FENCE_PROP] == "2"
+    live = state_hashes(read_state(spark, table))
+    assert live == state_hashes(final_state_oracle(events.filter("batch_id < 3")))
+    assert orphans and not set(orphans) & set(snap.all_files)
+    assert table.vacuum(keep_versions=1) >= len(orphans)
+    assert not any(os.path.exists(os.path.join(table.path, f)) for f in orphans)
+    assert state_hashes(read_state(spark, table)) == live
+
+
+def test_rewrite_job_counts(spark, tmp_path, events):
+    """Rebucket and a MOR ``compact_state`` publish through
+    ``LakeTable.rewrite`` with the Spark jobs of their former hand-written
+    bodies (measured before the move): rebucket 2, compact_state 3."""
+    from docetl_spark.cdc import compact_state
+
+    table = create_cdc_table(str(tmp_path / "t"), KEYS, num_buckets=4)
+    replay_events(spark, table, events, mode="mor")
+    assert _jobs_in(spark, "rebucket_mor", lambda: table.rebucket(spark, 8)) == 2
+    assert _jobs_in(spark, "compact_mor", lambda: compact_state(spark, table)) == 3
+
+
 def _lookup_probe(spark, events):
     """Probe keys covering every lookup case, duplicates included:
     tombstoned keys, keys whose newest version sits in a later batch (a

@@ -132,8 +132,7 @@ def test_streaming_replication_lake_to_lake(spark, tmp_path, events, mor_table):
 
 def test_pushdown_prunes_versions_and_files(spark, mor_table):
     base = (
-        spark.read.format("lakefeed").option("path", mor_table.path)
-        .option("pushdown", "true").load()
+        spark.read.format("lakefeed").option("path", mor_table.path).load()
     )
     # pushed version predicate == explicit range read
     got = base.filter(F.col(COMMIT_VERSION_COL) == 3)
@@ -146,13 +145,13 @@ def test_pushdown_prunes_versions_and_files(spark, mor_table):
     # whitebox: the reader really skips partitions, not just rows
     from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual
 
-    from docetl_spark.streaming.feed_source import LakeFeedPushdownBatchReader
+    from docetl_spark.streaming.feed_source import LakeFeedBatchReader
 
-    n_all = len(LakeFeedPushdownBatchReader({"path": mor_table.path}, base.schema).partitions())
-    r = LakeFeedPushdownBatchReader({"path": mor_table.path}, base.schema)
+    n_all = len(LakeFeedBatchReader({"path": mor_table.path}, base.schema).partitions())
+    r = LakeFeedBatchReader({"path": mor_table.path}, base.schema)
     r.pushFilters([GreaterThanOrEqual(("lsn",), 1500)])
     assert 0 < len(r.partitions()) < n_all  # old batches' files skipped
-    rv = LakeFeedPushdownBatchReader({"path": mor_table.path}, base.schema)
+    rv = LakeFeedBatchReader({"path": mor_table.path}, base.schema)
     rv.pushFilters([EqualTo((COMMIT_VERSION_COL,), 3)])
     assert {p.version for p in rv.partitions()} == {3}
 

@@ -412,6 +412,7 @@ def test_maintenance_refuses_during_crash_window(spark, tmp_path, corpus, monkey
     the redelivered index merge is fenced out, so the entries would
     never come back. The index-fence-ahead refusal blocks exactly this
     window; after redelivery the prune proceeds."""
+    import docetl_spark.cdc.merge as merge_mod
     import docetl_spark.functions.incr_dedup as mod
     from docetl_spark.functions.incr_dedup import (
         band_index_path, prune_index_orphans,
@@ -439,8 +440,9 @@ def test_maintenance_refuses_during_crash_window(spark, tmp_path, corpus, monkey
     # crash window: index fence 1 > corpus fence 0 -> maintenance refuses
     idx = LakeTable(band_index_path(tbl))
     phantom = idx.read(spark).select("_sid").distinct().count()
+    monkeypatch.setattr(merge_mod, "MAINTENANCE_RETRIES", 1)
     with pytest.raises(RuntimeError, match="ahead of corpus fence"):
-        prune_index_orphans(spark, tbl, conflict_retries=1)
+        prune_index_orphans(spark, tbl)
     assert idx.read(spark).select("_sid").distinct().count() == phantom  # untouched
 
     # redeliver, then maintenance is allowed and index matches live ids
