@@ -108,20 +108,29 @@ WHERE event_type <> 'error'
 """
 
 
+def _mor_feed_table(spark: SparkSession, sf_dir: str, prefix: str):
+    """The events table replayed MOR into a fresh 16-bucket table, one
+    commit per 2000-LSN batch: the table the MOR feed and pruned-read
+    queries read."""
+    from docetl_spark.cdc import create_cdc_table, replay_events
+
+    path = tempfile.mkdtemp(prefix=prefix)
+    shutil.rmtree(path, ignore_errors=True)
+    table = create_cdc_table(path, ["user_id"], num_buckets=16)
+    events = _t(spark, sf_dir, "events")
+    replay_events(spark, table, _events_as_changes(events, batch_size=2000), mode="mor")
+    return table
+
+
 def q_cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change-data-feed read of a MOR ingest (``cdc/changes.py``): each
     commit's delta files ARE the feed, so incremental consumers read
     O(changes) bytes — never the table. One commit per 2000-LSN batch;
     the feed's per-commit winners are checked row-for-row against the
     per-batch LWW recomputed closed-form in DuckDB."""
-    from docetl_spark.cdc import create_cdc_table, read_changes, replay_events
+    from docetl_spark.cdc import read_changes
 
-    events = _t(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="cdc_feed_")
-    shutil.rmtree(path, ignore_errors=True)
-    table = create_cdc_table(path, ["user_id"], num_buckets=16)
-    replay_events(spark, table, _events_as_changes(events, batch_size=2000), mode="mor")
-
+    table = _mor_feed_table(spark, sf_dir, "cdc_feed_")
     feed = read_changes(spark, table, since_version=1)
     vmap = [
         (h["version"], int(h["summary"]["batch_id"]))
@@ -163,15 +172,10 @@ def q_cdc_feed_net_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     of batch 1 and batch 3, LWW-collapsed per key with deletes still
     visible — the 'what changed while I was away' query a lagging
     downstream runs before applying."""
-    from docetl_spark.cdc import create_cdc_table, dedup_last_writer, read_changes, replay_events
+    from docetl_spark.cdc import dedup_last_writer, read_changes
     from docetl_spark.cdc.changes import CHANGE_TYPE_COL, COMMIT_TS_COL, COMMIT_VERSION_COL
 
-    events = _t(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="cdc_feed_slice_")
-    shutil.rmtree(path, ignore_errors=True)
-    table = create_cdc_table(path, ["user_id"], num_buckets=16)
-    replay_events(spark, table, _events_as_changes(events, batch_size=2000), mode="mor")
-
+    table = _mor_feed_table(spark, sf_dir, "cdc_feed_slice_")
     v_by_batch = {
         int(h["summary"]["batch_id"]): h["version"]
         for h in table.history()
@@ -246,13 +250,9 @@ def q_cdc_state_since_lsn(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose footer-recorded lsn bounds reach X (here the last of five batches) — lower-bounded pruning
     commutes with read-time LWW (see read_state docstring), so the result
     is exact while old delta files are never opened."""
-    from docetl_spark.cdc import create_cdc_table, read_state, replay_events
+    from docetl_spark.cdc import read_state
 
-    events = _t(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="cdc_since_")
-    shutil.rmtree(path, ignore_errors=True)
-    table = create_cdc_table(path, ["user_id"], num_buckets=16)
-    replay_events(spark, table, _events_as_changes(events, batch_size=2000), mode="mor")
+    table = _mor_feed_table(spark, sf_dir, "cdc_since_")
     state = read_state(spark, table, lsn_min=9900)
     return state.select(
         F.col("user_id").cast("long").alias("user_id"),
@@ -282,15 +282,9 @@ def q_cdc_feed_source_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     files via the snapshot's per-file bounds before any task is
     scheduled, and Spark re-applies it row-level (pruning never changes
     semantics). Same per-batch-winner contract as ``cdc_change_feed``."""
-    from docetl_spark.cdc import create_cdc_table, replay_events
     from docetl_spark.streaming import register_lakefeed
 
-    events = _t(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="cdc_feed_src_")
-    shutil.rmtree(path, ignore_errors=True)
-    table = create_cdc_table(path, ["user_id"], num_buckets=16)
-    replay_events(spark, table, _events_as_changes(events, batch_size=2000), mode="mor")
-
+    table = _mor_feed_table(spark, sf_dir, "cdc_feed_src_")
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     register_lakefeed(spark)
     feed = (
@@ -408,25 +402,6 @@ SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
 FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
 JOIN nation ON s_nationkey = n_nationkey
 GROUP BY n_name
-"""
-
-
-def q_events_props_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg("value"), 4).alias("avg_value"),
-        # cast to double on BOTH sides: DuckDB sum(BIGINT) yields HUGEINT
-        # (fetched as float64), Spark sum(long) yields long — the driver
-        # hashes 99111 vs 99111.0 as different values otherwise
-        F.sum(F.get_json_object("props", "$.k").cast("long")).cast("double").alias("sum_k"),
-    )
-
-
-ORACLE_PROPS = """
-SELECT event_type, count(*) AS n, round(avg(value), 4) AS avg_value,
-       CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS DOUBLE) AS sum_k
-FROM events GROUP BY event_type
 """
 
 
@@ -553,55 +528,6 @@ FROM events GROUP BY event_type
 # joins & entity resolution
 # ---------------------------------------------------------------------------
 
-def q_value_sample_first_n(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """reduce value_sampling method=first_n (reference reduce.py:299-322):
-    per group, the reduce sees only the first 20 events by lsn; the
-    downstream aggregate is computed over exactly that sample."""
-    from docetl_spark.operators.reduce_ops import value_sample
-
-    ev = _t(spark, sf_dir, "events").select("event_type", F.col("event_id").alias("lsn"), "value")
-    sampled = value_sample(ev, "event_type", method="first_n", sample_size=20, order_col="lsn")
-    return sampled.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_sampled"),
-        F.round(F.sum("value"), 3).alias("sum_sampled"),
-        F.max("lsn").alias("max_lsn_sampled"),
-    )
-
-
-ORACLE_VALUE_SAMPLE = """
-SELECT event_type, count(*) AS n_sampled, round(sum(value), 3) AS sum_sampled,
-       max(event_id) AS max_lsn_sampled
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY event_id) AS rn
-  FROM events
-) WHERE rn <= 20 GROUP BY event_type
-"""
-
-
-def q_parallel_map_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """parallel_map (reference docetl/operations/map.py ParallelMapOperation):
-    independent prompt branches compute disjoint output keys over the same
-    row; here two deterministic branches over documents."""
-    from docetl_spark.operators import parallel_map
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    out = parallel_map(docs, [
-        {"n_tokens": F.size(F.split(F.trim("text"), r"\s+"))},
-        {"chars_sq": (F.col("n_chars").cast("long") * F.col("n_chars")).cast("long"),
-         "head": F.substring("text", 1, 12)},
-    ])
-    return out.select("doc_id", "n_tokens", "chars_sq", "head")
-
-
-ORACLE_PARALLEL_MAP = """
-SELECT doc_id,
-       len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
-       CAST(n_chars AS BIGINT) * n_chars AS chars_sq,
-       substr(text, 1, 12) AS head
-FROM documents
-"""
-
-
 _SEM_SIM_QVEC = [1.0, -0.5, 0.25] + [0.0] * 61  # fixed 64-dim probe direction
 
 
@@ -681,22 +607,6 @@ FROM customer c JOIN (
 # ---------------------------------------------------------------------------
 # restructuring: split / gather / unnest / extract
 # ---------------------------------------------------------------------------
-
-def q_split_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from docetl_spark.operators import split
-
-    docs = _t(spark, sf_dir, "documents")
-    out = split(docs, "text", method="delimiter", delimiter=" ", num_splits_to_group=50, name="sp")
-    return out.select("doc_id", F.col("sp_chunk_num").alias("chunk_num"), F.col("text_chunk").alias("chunk"))
-
-
-ORACLE_SPLIT = """
-WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-SELECT doc_id, CAST(gs AS INT) AS chunk_num,
-       array_to_string(toks[(gs-1)*50+1 : gs*50], ' ') AS chunk
-FROM (SELECT doc_id, toks, unnest(range(1, CAST(ceil(len(toks)/50.0) AS BIGINT)+1)) AS gs FROM t)
-"""
-
 
 def q_gather_rendered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docetl_spark.operators import gather, split
@@ -1079,66 +989,6 @@ FROM documents WHERE doc_id < 20
 """
 
 
-def q_extract_regex_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from docetl_spark.operators import extract_regex
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    out = extract_regex(docs, ["text"], r"(table|stream|spark)", name="kw")
-    return out.select("doc_id", F.col("text_extracted_kw").alias("keywords"))
-
-
-ORACLE_EXTRACT = """
-SELECT doc_id, coalesce(array_to_string(regexp_extract_all(text, '(table|stream|spark)', 0), chr(10)), '') AS keywords
-FROM documents WHERE doc_id < 100
-"""
-
-
-# ---------------------------------------------------------------------------
-# sampling / topk
-# ---------------------------------------------------------------------------
-
-def q_extract_lines_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """extract(line_number) — reference extract.py:119: slice 1-based
-    inclusive line ranges out of a line-numbered document. Documents are
-    single-line, so each is first reshaped into 8-word lines (same chunk
-    arithmetic as the split oracle); ranges [(1,2), (4,5)] slice them."""
-    from docetl_spark.operators.extract_ops import extract_lines
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 30)
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != "")
-    idx = F.sequence(F.lit(0), F.floor((F.size(toks) - 1) / 8).cast("int"))
-    lines_arr = F.transform(idx, lambda i: F.array_join(F.slice(toks, i * 8 + 1, 8), " "))
-    df = docs.select(
-        "doc_id", F.array_join(lines_arr, "\n").alias("body")
-    ).withColumn(
-        "rng",
-        F.array(
-            F.struct(F.lit(1).alias("start"), F.lit(2).alias("end")),
-            F.struct(F.lit(4).alias("start"), F.lit(5).alias("end")),
-        ),
-    )
-    out = extract_lines(df, "body", "rng", name="ln")
-    return out.select("doc_id", F.col("body_extracted_ln").alias("extracted"))
-
-
-ORACLE_EXTRACT_LINES = """
-WITH t AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS toks
-  FROM documents WHERE doc_id < 30
-),
-lines AS (
-  SELECT doc_id, list_transform(
-           range(1, CAST(ceil(len(toks) / 8.0) AS BIGINT) + 1),
-           g -> array_to_string(toks[(g - 1) * 8 + 1 : g * 8], ' ')) AS ls
-  FROM t
-)
-SELECT doc_id,
-       array_to_string([coalesce(array_to_string(ls[1 : 2], chr(10)), ''),
-                        coalesce(array_to_string(ls[4 : 5], chr(10)), '')], chr(10) || chr(10)) AS extracted
-FROM lines
-"""
-
-
 def q_extract_reformat_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line-numbered reformat CERTIFICATE (reference extract.py:66-117):
     greedy word-wrap is fully characterized by three properties, checked
@@ -1239,18 +1089,9 @@ FROM (SELECT doc_id, lang, toks, unnest(range(0, greatest(len(toks), 1), 10)) AS
 """
 
 
-def q_sample_custom_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from docetl_spark.operators import sample
-
-    docs = _t(spark, sf_dir, "documents")
-    keys = [{"doc_id": i} for i in (1, 3, 5, 7, 11, 400)]
-    return sample(docs, "custom", samples=keys).select("doc_id", "lang", "n_chars")
-
-
-ORACLE_SAMPLE_CUSTOM = """
-SELECT doc_id, lang, n_chars FROM documents WHERE doc_id IN (1, 3, 5, 7, 11, 400)
-"""
-
+# ---------------------------------------------------------------------------
+# sampling / topk
+# ---------------------------------------------------------------------------
 
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sample(uniform, int count, stratify_key): per-stratum quota is
@@ -1342,37 +1183,6 @@ SELECT doc_id, lang, n_chars FROM (
 """
 
 
-def q_near_dup_unigram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.col("doc_id"),
-        F.array_distinct(F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda x: x != "")).alias("toks"),
-    )
-    a = toks.select(F.col("doc_id").alias("id1"), F.col("toks").alias("t1"))
-    b = toks.select(F.col("doc_id").alias("id2"), F.col("toks").alias("t2"))
-    jac = F.size(F.array_intersect("t1", "t2")) / F.size(F.array_union("t1", "t2"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id1") < F.col("id2"))
-        .withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= 0.8)
-        .select("id1", "id2", "jaccard")
-    )
-
-
-ORACLE_JACCARD = """
-WITH t AS (
-  SELECT doc_id, list_distinct(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '')) AS toks
-  FROM documents
-)
-SELECT a.doc_id AS id1, b.doc_id AS id2,
-       round(len(list_intersect(a.toks, b.toks)) * 1.0 / len(list_distinct(list_concat(a.toks, b.toks))), 6) AS jaccard
-FROM t a, t b
-WHERE a.doc_id < b.doc_id
-  AND round(len(list_intersect(a.toks, b.toks)) * 1.0 / len(list_distinct(list_concat(a.toks, b.toks))), 6) >= 0.8
-"""
-
-
 def q_near_dup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup with exact-jaccard verify — the RECALL
     CONTRACT: LSH banding (32 hashes / 16 bands) only BLOCKS; candidates
@@ -1382,7 +1192,7 @@ def q_near_dup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unless LSH drops a true pair (P(band miss) = (1-0.8^2)^16 ~
     8e-8). A hash mismatch here IS a recall failure. Trigram shingles keep
     the near-dup set sparse (unigram jaccard is degenerate on a shared
-    vocabulary — see near_dup_unigram_jaccard for that brute baseline)."""
+    vocabulary)."""
     from docetl_spark.functions.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
 
     docs = _t(spark, sf_dir, "documents")
@@ -1640,31 +1450,6 @@ FROM (SELECT doc_id FROM documents WHERE doc_id < 100) d LEFT JOIN sig s USING (
 """
 
 
-def q_near_dup_embedding_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact all-pairs cosine baseline via the broadcast-matrix kernel
-    (functions/dedup.embedding_pairs_brute): corpus vectors cross the
-    Arrow boundary ONCE instead of twice per pair — the crossJoin form
-    measured ~4GB of Arrow traffic / 15s at sf0.1 for the same result."""
-    from docetl_spark.functions.dedup import embedding_pairs_brute
-
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    pairs = embedding_pairs_brute(emb, "vec_id", "v", threshold=0.3499)
-    return (
-        pairs.withColumn("cos", F.round(F.col("cosine"), 6))
-        .filter(F.col("cos") >= 0.35)
-        .select(F.col("_id1").alias("id1"), F.col("_id2").alias("id2"), "cos")
-    )
-
-
-ORACLE_EMB_EXACT = """
-SELECT a.vec_id AS id1, b.vec_id AS id2,
-       round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cos
-FROM embeddings a, embeddings b
-WHERE a.vec_id < b.vec_id
-  AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= 0.35
-"""
-
-
 def q_knn_cosine_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docetl_spark.functions.ann import knn_brute
 
@@ -1909,27 +1694,6 @@ ORACLE_MULTIMODAL = """
 SELECT doc_id, CAST(doc_id % 251 AS DOUBLE) AS feat_mean, 0.0 AS feat_std,
        CAST(192 AS BIGINT) AS n_values
 FROM documents WHERE doc_id < 40
-"""
-
-
-def q_sample_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sample(method='outliers') — reference docetl/operations/sample.py:
-    390-432: distance from the embedding centroid, cutoff mean + std*sd,
-    keep inside."""
-    from docetl_spark.operators import sample
-
-    emb = _t(spark, sf_dir, "embeddings")
-    kept = sample(emb, method="outliers", embedding_col="embedding", std=1.0, keep="inside")
-    return kept.select("vec_id")
-
-
-ORACLE_SAMPLE_OUTLIERS = """
-WITH u AS (SELECT vec_id, generate_subscripts(embedding, 1) AS d, unnest(embedding) AS x
-           FROM embeddings),
-c AS (SELECT d, avg(x) AS m FROM u GROUP BY d),
-dist AS (SELECT vec_id, sqrt(sum((x - m) * (x - m))) AS dist FROM u JOIN c USING (d) GROUP BY vec_id),
-s AS (SELECT avg(dist) + 1.0 * stddev_pop(dist) AS cutoff FROM dist)
-SELECT vec_id FROM dist, s WHERE dist <= cutoff
 """
 
 
@@ -2227,18 +1991,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_q1": q_tpch_q1,
         "tpch_q3_top10": q_tpch_q3_top10,
         "revenue_by_nation": q_revenue_by_nation,
-        "events_props_agg": q_events_props_agg,
         "top_events_per_user": q_top_events_per_user,
         "code_reduce_groups": q_code_reduce_groups,
         "reduce_lineage_docs": q_reduce_lineage_docs,
         "fold_events_per_user": q_fold_events_per_user,
         "reduce_merge_salted": q_reduce_merge_salted,
-        "parallel_map_docs": q_parallel_map_docs,
-        "value_sample_first_n": q_value_sample_first_n,
         "value_sample_sem_sim": q_value_sample_sem_sim,
         "equijoin_verify": q_equijoin_verify,
         "resolve_majority_canon": q_resolve_majority_canon,
-        "split_chunks": q_split_chunks,
         "gather_rendered": q_gather_rendered,
         "doc_chunking_macro": q_doc_chunking_macro,
         "doc_chunking_topk_macro": q_doc_chunking_topk_macro,
@@ -2246,22 +2006,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hierarchical_reduce_events": q_hierarchical_reduce_events,
         "gather_hierarchy_docs": q_gather_hierarchy_docs,
         "unnest_doc_tokens": q_unnest_doc_tokens,
-        "extract_regex_docs": q_extract_regex_docs,
-        "extract_lines_docs": q_extract_lines_docs,
         "extract_reformat_cert": q_extract_reformat_cert,
         "extract_pointer_docs": q_extract_pointer_docs,
         "parsing_fanout_docs": q_parsing_fanout_docs,
-        "sample_custom_keys": q_sample_custom_keys,
         "sample_stratified": q_sample_stratified,
         "topk_fts_docs": q_topk_fts_docs,
         "dedup_exact_docs": q_dedup_exact_docs,
-        "near_dup_unigram_jaccard": q_near_dup_unigram_jaccard,
         "near_dup_minhash_lsh": q_near_dup_minhash_lsh,
         "dedup_by_pairs_docs": q_dedup_by_pairs_docs,
         "incremental_dedup_docs": q_incremental_dedup_docs,
         "incremental_dedup_embedding": q_incremental_dedup_embedding,
         "simhash_docs": q_simhash_docs,
-        "near_dup_embedding_exact": q_near_dup_embedding_exact,
         "knn_cosine_top5": q_knn_cosine_top5,
         "knn_lsh_top5": q_knn_lsh_top5,
         "knn_ivf_top5": q_knn_ivf_top5,
@@ -2269,7 +2024,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality": q_text_quality,
         "lang_id_docs": q_lang_id_docs,
         "multimodal_features": q_multimodal_features,
-        "sample_outliers": q_sample_outliers,
         "equijoin_embedding": q_equijoin_embedding,
         "rank_docs": q_rank_docs,
         "rank_likert_docs": q_rank_likert_docs,
@@ -2292,18 +2046,14 @@ def oracle_sql() -> dict[str, str]:
         "tpch_q1": ORACLE_Q1,
         "tpch_q3_top10": ORACLE_Q3,
         "revenue_by_nation": ORACLE_NATION,
-        "events_props_agg": ORACLE_PROPS,
         "top_events_per_user": ORACLE_TOP_EVENTS,
         "code_reduce_groups": ORACLE_CODE_REDUCE,
         "reduce_lineage_docs": ORACLE_REDUCE_LINEAGE,
         "fold_events_per_user": ORACLE_FOLD,
         "reduce_merge_salted": ORACLE_MERGE_SALTED,
-        "parallel_map_docs": ORACLE_PARALLEL_MAP,
-        "value_sample_first_n": ORACLE_VALUE_SAMPLE,
         "value_sample_sem_sim": ORACLE_VALUE_SAMPLE_SEM,
         "equijoin_verify": ORACLE_EQUIJOIN,
         "resolve_majority_canon": ORACLE_RESOLVE,
-        "split_chunks": ORACLE_SPLIT,
         "gather_rendered": ORACLE_GATHER,
         "doc_chunking_macro": ORACLE_DOC_CHUNKING,
         "doc_chunking_topk_macro": ORACLE_DOC_CHUNKING_TOPK,
@@ -2311,22 +2061,17 @@ def oracle_sql() -> dict[str, str]:
         "hierarchical_reduce_events": ORACLE_HIER_REDUCE,
         "gather_hierarchy_docs": ORACLE_GATHER_HIER,
         "unnest_doc_tokens": ORACLE_UNNEST,
-        "extract_regex_docs": ORACLE_EXTRACT,
-        "extract_lines_docs": ORACLE_EXTRACT_LINES,
         "extract_reformat_cert": ORACLE_EXTRACT_REFORMAT,
         "extract_pointer_docs": ORACLE_EXTRACT_POINTER,
         "parsing_fanout_docs": ORACLE_PARSING,
-        "sample_custom_keys": ORACLE_SAMPLE_CUSTOM,
         "sample_stratified": ORACLE_SAMPLE_STRATIFIED,
         "topk_fts_docs": ORACLE_TOPK_FTS,
         "dedup_exact_docs": ORACLE_DEDUP_EXACT,
-        "near_dup_unigram_jaccard": ORACLE_JACCARD,
         "near_dup_minhash_lsh": ORACLE_MINHASH_LSH,
         "dedup_by_pairs_docs": ORACLE_DEDUP_PAIRS,
         "incremental_dedup_docs": ORACLE_INCR_DEDUP,
         "incremental_dedup_embedding": ORACLE_INCR_DEDUP_EMB,
         "simhash_docs": ORACLE_SIMHASH,
-        "near_dup_embedding_exact": ORACLE_EMB_EXACT,
         "knn_cosine_top5": ORACLE_KNN,
         "knn_lsh_top5": ORACLE_KNN_LSH,
         "knn_ivf_top5": ORACLE_KNN_IVF,
@@ -2334,7 +2079,6 @@ def oracle_sql() -> dict[str, str]:
         "text_quality": ORACLE_TEXT_QUALITY,
         "lang_id_docs": ORACLE_LANG_ID,
         "multimodal_features": ORACLE_MULTIMODAL,
-        "sample_outliers": ORACLE_SAMPLE_OUTLIERS,
         "equijoin_embedding": ORACLE_EQUIJOIN_EMB,
         "rank_docs": ORACLE_RANK,
         "rank_likert_docs": ORACLE_RANK_LIKERT,

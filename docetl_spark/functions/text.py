@@ -54,11 +54,6 @@ def bpe_ish_token_count(text: Column | str) -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"), F.lit(0)))
 
 
-def _marker_hits(toks: Column, words: list[str]) -> Column:
-    wordset = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(toks, lambda t: F.array_contains(wordset, F.lower(t))))
-
-
 # Java/Spark `\s` is the ASCII whitespace class; re.ASCII pins Python to
 # the same set so kernel tokenization can never diverge from the Column
 # forms (tokens()/fts_tokens) on non-ASCII separators.

@@ -58,22 +58,3 @@ def salted_agg(
 
     partials = salted.groupBy(*key_cols, SALT_COL).applyInPandas(run_partial, schema=output_schema)
     return partials.groupBy(*key_cols).applyInPandas(lambda pdf: merge_fn(pdf), schema=output_schema)
-
-
-def hot_keys(df: DataFrame, key_cols: list[str], threshold_fraction: float = 0.01, max_keys: int = 100):
-    """Per-batch hot-key histogram: keys holding more than
-    ``threshold_fraction`` of rows (used to decide salting before the
-    merge-apply shuffle). One cheap aggregate pass."""
-    total = df.count()
-    if total == 0:
-        return []
-    cutoff = max(1, int(total * threshold_fraction))
-    rows = (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= cutoff)
-        .orderBy(F.desc("n"))
-        .limit(max_keys)
-        .collect()
-    )
-    return [(tuple(r[k] for k in key_cols), r["n"]) for r in rows]

@@ -213,7 +213,9 @@ def test_sample_methods(spark):
     assert sample(df, "uniform", samples=10, seed=1).count() == 10
     assert sample(df, "uniform", samples=10, seed=1).collect() == sample(df, "uniform", samples=10, seed=1).collect()
     assert sample(df, "first", samples=5).count() == 5
-    assert sample(df, "custom", samples=[{"id": 3}, {"id": 7}]).count() == 2
+    # a key with no matching row selects nothing
+    custom = sample(df, "custom", samples=[{"id": 3}, {"id": 7}, {"id": 400}])
+    assert sorted(r["id"] for r in custom.collect()) == [3, 7]
     per_group = sample(df, "uniform", stratify_key="g", samples_per_group=4)
     assert per_group.groupBy("g").count().collect()[0]["count"] == 4
 
@@ -223,6 +225,16 @@ def test_sample_outliers(spark):
     df = spark.createDataFrame(rows, "id long, emb array<double>")
     out = sample(df, "outliers", embedding_col="emb", std=1.0, keep="outside")
     assert [r["id"] for r in out.collect()] == [99]
+
+    # distances 2, 1, 0, 1, 2 from the centroid: mean 1.2, population
+    # stddev 0.748, sample stddev 0.837. The cutoff is mean + 1 population
+    # stddev (1.948), so the two points at distance 2 fall outside it; a
+    # sample-stddev cutoff (2.037) would keep them.
+    line = spark.createDataFrame(
+        [(i, [float(i), 0.0]) for i in (-2, -1, 0, 1, 2)], "id long, emb array<double>"
+    )
+    inside = sample(line, "outliers", embedding_col="emb", std=1.0, keep="inside")
+    assert sorted(r["id"] for r in inside.collect()) == [-1, 0, 1]
 
 
 def test_topk_score_embedding_fts(spark):
@@ -511,6 +523,20 @@ def test_rank_score_fn_batch_scorer(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="exactly one"):
         rank(df)
+
+
+def test_value_sample_first_n(spark):
+    from docetl_spark.operators.reduce_ops import value_sample
+
+    # rows arrive out of lsn order; each group keeps its sample_size
+    # smallest lsns, and a group smaller than sample_size passes through
+    lsns = {"a": [7, 2, 9, 4, 1, 8], "b": [5]}
+    rows = [(g, lsn, float(lsn) / 2) for g, ls in lsns.items() for lsn in ls]
+    df = spark.createDataFrame(rows, "g string, lsn long, value double")
+    out = value_sample(df, "g", method="first_n", sample_size=3, order_col="lsn")
+    assert sorted((r["g"], r["lsn"], r["value"]) for r in out.collect()) == [
+        ("a", 1, 0.5), ("a", 2, 1.0), ("a", 4, 2.0), ("b", 5, 2.5),
+    ]
 
 
 def test_value_sample_cluster_degenerate_group_no_duplicates(spark):

@@ -70,7 +70,7 @@ def main() -> int:
     ap.add_argument("--master", default="local[8]")
     ap.add_argument("--shuffle", type=int, default=8)
     ap.add_argument("queries", nargs="*")
-    args = ap.parse_args()
+    args = ap.parse_intermixed_args()
 
     import __spark_entry__ as entrymod
     from docetl_spark.session import get_spark

@@ -38,16 +38,13 @@ GLOBAL_ORDER_OK = {
 }
 # Queries whose core is a deliberate pairwise candidate generation or a
 # documented brute-force baseline (the scale path is the LSH variant):
-# brute kNN = broadcast nested loop of a handful of query vectors, exact
-# near-dup = pairwise verify baselines oracled against DuckDB.
+# brute kNN = broadcast nested loop of a handful of query vectors.
 CROSS_OK = {
     "link_resolve_repair",
     "knn_cosine_top5",
     # the recall certificate scores one shared brute frame (broadcast
     # nested loop of 5 query vectors) that both rankings derive from
     "knn_lsh_top5",
-    "near_dup_embedding_exact",
-    "near_dup_unigram_jaccard",
     # exact cosine blocking = the reference's own brute blocking phase
     # (equijoin.py:300-405), kept as the oracle-matched baseline; the LSH
     # bucketed scale path (lsh_planes>0) is pytest-covered
