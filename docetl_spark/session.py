@@ -17,6 +17,27 @@ from pyspark.sql import SparkSession
 DEFAULT_ARROW_BATCH = 10_000
 
 
+def _local_worker_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
+    """Python-worker settings of a ``local[...]`` master; none for others.
+
+    Local workers fork from ``docetl_spark.pydaemon``, which stops every
+    task from re-reading ``pyspark.zip`` (≈ 0.2 s per task). The daemon is
+    started as ``python -m docetl_spark.pydaemon`` from the driver's
+    working directory, so the engine's parent directory goes first on the
+    workers' ``PYTHONPATH``, ahead of any caller value. A daemon module the
+    caller names is kept. Other masters keep the stock daemon:
+    ``--py-files`` reach their executors only per task, after the daemon
+    has started."""
+    if master != "local" and not master.startswith("local["):
+        return {}
+    engine_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = (engine_parent, extra_conf.get("spark.executorEnv.PYTHONPATH"))
+    return {
+        "spark.python.daemon.module": extra_conf.get("spark.python.daemon.module", "docetl_spark.pydaemon"),
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(p for p in paths if p),
+    }
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "docetl_spark",
@@ -61,8 +82,14 @@ def get_spark(
         # enables it; a foreign session must set it before a lakefeed
         # batch read.
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # Above this many paths a parquet read lists its inputs with a
+        # Spark job, one task per path. Lake-table scans name snapshot-known
+        # files, so the driver lists them with a stat per file instead: a
+        # 640-file scan planned in 2.5 s with the job, 0.08 s without.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in {**extra_conf, **_local_worker_conf(master, extra_conf)}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
