@@ -221,10 +221,8 @@ def _scan_slices(
     default) that failure contract is also what keeps both columns
     non-null, as ``feed_schema`` declares them."""
     version_of: dict[str, ChangeSlice] = {}
-    paths: list[str] = []
     for sl in slices:
         for f in sl.files:
-            paths.append(os.path.join(table.path, f))
             prev = version_of.setdefault(os.path.basename(f), sl)
             if prev.version != sl.version:
                 raise ValueError(
@@ -233,7 +231,7 @@ def _scan_slices(
                     "lookup cannot attribute its rows"
                 )
     names = list(version_of)
-    scan = table.scan(spark, read_schema, paths)
+    scan = table.scan(spark, read_schema, [f for sl in slices for f in sl.files])
     pos = F.array_position(
         F.expr(_sql_array([sql_str(n) for n in names])),
         scan.metadataColumn("_metadata").getField("file_name"),

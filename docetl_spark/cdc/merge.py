@@ -39,9 +39,7 @@ The reference's analogue is in-memory ``{**item, **output}`` row merging
 
 from __future__ import annotations
 
-import os
 import time
-import warnings
 from dataclasses import dataclass, field, asdict
 from typing import Callable, Iterable
 
@@ -63,9 +61,11 @@ TransformStage = Callable[[DataFrame], DataFrame]
 # -- engine constants, read at call time so a test can monkeypatch one
 # (e.g. to force the other side of a size gate) ----------------------------
 
-# CoW merges whose affected buckets hold at most this many bytes shuffle
-# the (small) survivors together with the winners so every rewritten
-# bucket lands in exactly ONE file, and take the fused small-merge path.
+# CoW merges whose affected buckets hold at most this many bytes (the
+# file sizes the snapshot records; a file with no recorded size counts as
+# over) shuffle the (small) survivors together with the winners so every
+# rewritten bucket lands in exactly ONE file, and take the fused
+# small-merge path.
 # Without it, file-aligned survivor writes fragment each bucket by ~one
 # file per batch, and the per-merge driver cost (file listing, footer
 # stats, scan planning) grows linearly with batch count — measured
@@ -95,6 +95,11 @@ PREPARED_COMMIT_RETRIES = 5
 # sidecar-index prune/rebuild) after it loses the version race to a
 # concurrent commit; each re-run starts from the fresh snapshot.
 MAINTENANCE_RETRIES = 3
+
+# Re-runs of a whole ``merge_apply`` after a CONCURRENT writer (another
+# stream, a maintenance compact/rebucket) wins the version race. 0 = the
+# CommitConflict surfaces to the caller.
+CONFLICT_RETRIES = 0
 
 
 def reject_reserved_columns(df: DataFrame, caller: str) -> None:
@@ -544,7 +549,6 @@ def merge_apply(
     stages: Iterable[TransformStage] = (),
     winner_stages: Iterable[TransformStage] = (),
     mode: str = "cow",
-    conflict_retries: int = 0,
     precomputed: PrecomputedStats | None = None,
     changelog: bool = False,
 ) -> MergeMetrics:
@@ -560,12 +564,11 @@ def merge_apply(
     cost is one extra O(batch) write, never a re-derivation. MOR commits
     ignore the flag: their delta files already ARE the changelog.
 
-    ``conflict_retries``: when a CONCURRENT writer (another stream, a
-    maintenance compact/rebucket) wins the version race, re-run the whole
-    merge against the fresh snapshot up to N times. Safe by construction:
-    the fence check runs first on every attempt (a duplicate-delivery race
-    already returns a skip), and a losing attempt's files were never
-    referenced (vacuum reclaims them).
+    A lost version race re-runs the whole merge against the fresh snapshot
+    up to ``CONFLICT_RETRIES`` times. Safe by construction: the fence
+    check runs first on every attempt (a duplicate-delivery race already
+    returns a skip), and a losing attempt's files were never referenced
+    (vacuum reclaims them).
     """
     check_mode(mode)
     winner_stages = tuple(winner_stages)
@@ -577,30 +580,21 @@ def merge_apply(
                 mode=mode, precomputed=precomputed, changelog=changelog,
             )
         except CommitConflict:
-            if attempt >= conflict_retries:
+            if attempt >= CONFLICT_RETRIES:
                 raise
             attempt += 1
             precomputed = None  # stale after a concurrent commit
 
 
-def _small_state(table: LakeTable, snap: Snapshot, affected: list[int]) -> bool:
-    """Small-state byte gate (``COW_CONSOLIDATE_BYTES``): decides both
-    the consolidating write and the fused small-merge path. Files that
-    cannot be statted locally (object storage) keep the no-shuffle path,
-    and say so."""
-    try:
-        affected_bytes = sum(
-            os.path.getsize(os.path.join(table.path, f)) for b in affected for f in snap.files.get(b, [])
-        )
-    except OSError as exc:
-        warnings.warn(
-            f"CoW merge into {table.path}: cannot stat the affected bucket files "
-            f"({type(exc).__name__}: {exc}); the fused small-merge path and the "
-            "consolidating write are off for this merge",
-            RuntimeWarning, stacklevel=4,
-        )
-        return False
-    return affected_bytes <= COW_CONSOLIDATE_BYTES
+def _small_state(snap: Snapshot, affected: list[int]) -> bool:
+    """Small-state byte gate (``COW_CONSOLIDATE_BYTES``) over the file
+    sizes ``snap`` records: decides both the consolidating write and the
+    fused small-merge path. A file with no recorded size (metadata written
+    before sizes were recorded) counts as over the gate, so the merge
+    keeps the no-shuffle path, which is always correct; the bucket's
+    rewrite records the size for the next merge."""
+    sizes = [snap.file_bytes.get(f) for b in affected for f in snap.files.get(b, [])]
+    return None not in sizes and sum(sizes) <= COW_CONSOLIDATE_BYTES
 
 
 def _merge_apply_once(
@@ -688,7 +682,7 @@ def _merge_apply_once(
     # space) need none of the current-vs-batch machinery — and the
     # broadcast builds it would trigger are pure waste on initial load.
     has_current = any(snap.files.get(b) for b in affected)
-    consolidate = has_current and _small_state(table, snap, affected)
+    consolidate = has_current and _small_state(snap, affected)
     bexpr = table.bucket_expr(snap_for_bucket)
     chlog_files: list[str] | None = None
     persisted = []
@@ -767,7 +761,7 @@ def _merge_apply_once(
             if changelog:
                 chlog_files = table.write_files(winners, snap, "chlog")
                 if chlog_files:
-                    winners = table.scan(spark, evolved, [os.path.join(table.path, f) for f in chlog_files])
+                    winners = table.scan(spark, evolved, chlog_files)
 
             # One write job. Default shape: the survivors branch (if any)
             # streams file-aligned (no shuffle), only the winners branch

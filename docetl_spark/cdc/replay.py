@@ -36,7 +36,6 @@ from docetl_spark.lake.table import LakeTable
 def create_cdc_table(
     path: str, key_cols: list[str], num_buckets: int = 16,
     key_types: dict[str, str] | None = None,
-    stats_cols: tuple[str, ...] | None = ("lsn",),
 ) -> LakeTable:
     """Create an empty CDC target table: key columns + LWW system columns.
 
@@ -47,9 +46,9 @@ def create_cdc_table(
     non-string keys — key types do NOT evolve (widening a key would change
     its hash and therefore its bucket).
 
-    ``stats_cols`` (default: lsn) records per-file column bounds at every
-    commit, enabling the file-skipping read of ``read_state(lsn_min=...)``
-    — "keys touched since LSN X" scans O(recent files), not the table.
+    Every commit records per-file ``lsn`` bounds, enabling the
+    file-skipping read of ``read_state(lsn_min=...)`` — "keys touched
+    since LSN X" scans O(recent files), not the table.
     """
     from docetl_spark.schema import parse_type
 
@@ -59,7 +58,7 @@ def create_cdc_table(
     ]
     fields += [T.StructField("lsn", T.LongType(), True), T.StructField(DELETED_COL, T.BooleanType(), True)]
     return LakeTable.create(path, T.StructType(fields), key_cols, num_buckets=num_buckets,
-                            stats_cols=list(stats_cols) if stats_cols else None)
+                            stats_cols=["lsn"])
 
 
 def read_state(spark: SparkSession, table: LakeTable, version: int | None = None,

@@ -237,28 +237,6 @@ def simhash(text: Column | str) -> Column:
     return _simhash64(c)
 
 
-def simhash_pairs(df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3, blocks: int = 4) -> DataFrame:
-    """Near-dup pairs by SimHash: block-permutation blocking (split the 64
-    bits into ``blocks`` chunks; dups within ``max_hamming`` agree on at
-    least one chunk when max_hamming < blocks) + exact popcount verify."""
-    width = 64 // blocks
-    sh = df.select(F.col(id_col).alias("_id"), simhash(text_col).alias("_sh"))
-    chunk_cols = [
-        F.xxhash64(F.shiftrightunsigned(F.col("_sh"), b * width).bitwiseAND(F.lit((1 << width) - 1)), F.lit(b)).alias("_bucket")
-        for b in range(blocks)
-    ]
-    banded = sh.select("_id", "_sh", F.explode(F.array(*chunk_cols)).alias("_bucket"))
-    cands = (
-        banded.alias("a").join(banded.alias("b"), "_bucket")
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("_id1"), F.col("a._sh").alias("_sh1"),
-                F.col("b._id").alias("_id2"), F.col("b._sh").alias("_sh2"))
-        .distinct()
-    )
-    ham = F.bit_count(F.col("_sh1").bitwiseXOR(F.col("_sh2")))
-    return cands.withColumn("hamming", ham).filter(F.col("hamming") <= max_hamming).select("_id1", "_id2", "hamming")
-
-
 # -- exact jaccard over candidate pairs --------------------------------------
 
 # Candidate pairs up to which ngram_jaccard_pairs broadcasts the candidate-id

@@ -4,7 +4,7 @@ batches.
 
 Containerless-codec formats decode FOR REAL with the stdlib: WAV (PCM
 8/16/32-bit via ``wave`` + numpy) and uncompressed 24-bit BMP (``struct``)
-— decode, feature-extract, resize, re-encode all run distributed. Codec
+— decode and feature extraction run distributed. Codec
 formats (png/jpeg/mp3/mp4) stay behind ``set_decoder`` (tests install a
 deterministic fake; production installs a real codec), mirroring the
 reference's parsing-tool fan-out (docetl/dataset.py:250-315,
@@ -22,7 +22,6 @@ from typing import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_META = T.StructType(
@@ -62,20 +61,6 @@ def decode_wav(blob: bytes) -> np.ndarray:
     return arr.reshape(-1, ch) if ch > 1 else arr
 
 
-def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
-    """float samples in [-1, 1] -> 16-bit PCM WAV bytes."""
-    arr = np.asarray(samples, dtype="float64")
-    ch = 1 if arr.ndim == 1 else arr.shape[1]
-    pcm = np.clip(arr * 32767.0, -32768, 32767).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(ch)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(pcm.tobytes())
-    return buf.getvalue()
-
-
 def decode_bmp(blob: bytes) -> np.ndarray:
     """Uncompressed 24-bit BMP -> uint8 (H, W, 3) RGB."""
     if blob[:2] != b"BM":
@@ -104,15 +89,6 @@ def encode_bmp(img: np.ndarray) -> bytes:
     header = b"BM" + struct.pack("<IHHI", 54 + len(body_b), 0, 0, 54)
     header += struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body_b), 2835, 2835, 0, 0)
     return header + body_b
-
-
-def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize, pure numpy — the deterministic stand-in
-    for a real resampling kernel."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return img[ys][:, xs]
 
 
 def decode_media(blob: bytes, fmt: str, decoder: Callable | None = None) -> np.ndarray:
@@ -170,47 +146,3 @@ def extract_features(df: DataFrame, binary_col: str, meta_col: str, out_prefix: 
             yield pdf
 
     return df.mapInPandas(run, schema=out_schema)
-
-
-def resize_images(
-    df: DataFrame, binary_col: str, meta_col: str, out_h: int, out_w: int,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Distributed decode -> nearest-neighbor resize -> re-encode round
-    trip for natively-decodable images (BMP). Output column carries the
-    resized BMP bytes; ``{meta_col}`` width/height update to match. The
-    image never leaves the executor — one Python call per Arrow batch."""
-    out_col = out_col or binary_col
-    out_schema = T.StructType(
-        [f if f.name != out_col else T.StructField(out_col, T.BinaryType(), True) for f in df.schema.fields]
-        + ([T.StructField(out_col, T.BinaryType(), True)] if out_col not in df.columns else [])
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for blob in pdf[binary_col]:
-                img = decode_bmp(bytes(blob))
-                out.append(encode_bmp(resize_nearest(img, out_h, out_w)))
-            pdf = pdf.copy()
-            pdf[out_col] = out
-            yield pdf[[f.name for f in out_schema.fields]]
-
-    res = df.mapInPandas(run, schema=out_schema)
-    return res.withColumn(
-        meta_col,
-        F.col(meta_col).withField("width", F.lit(out_w)).withField("height", F.lit(out_h)),
-    )
-
-
-def frame_sample(df: DataFrame, binary_col: str, meta_col: str, every_ms: int = 1000) -> DataFrame:
-    """Video -> one row per sampled frame timestamp (plumbing: the 1->N
-    fan-out shape; frame decode itself is behind the stub)."""
-    n_frames = F.greatest(
-        (F.col(f"{meta_col}.duration_ms") / F.lit(every_ms)).cast("int"), F.lit(1)
-    )
-    return (
-        df.withColumn("_frame_idx", F.explode(F.sequence(F.lit(0), n_frames - 1)))
-        .withColumn("frame_ts_ms", F.col("_frame_idx") * F.lit(every_ms))
-        .drop("_frame_idx")
-    )

@@ -25,6 +25,11 @@ from scratch, on parquet + atomic metadata commits:
   (``cdc/merge.py _widen_rewrite``).
 * **Snapshot properties** — arbitrary key/values (e.g. the CDC
   ``last-batch-id`` fence) committed atomically with the data change.
+* **The snapshot is the file index** — besides each bucket's files, every
+  commit records each live file's byte size (and, for tables declaring
+  ``stats_cols``, its footer column bounds), as Iceberg manifests carry
+  ``file_size_in_bytes``. Callers size and prune from metadata alone, and
+  only ``LakeTable`` turns a table-relative file name into a path.
 
 Design informed by the public Iceberg spec (iceberg.apache.org/spec) —
 no Iceberg code is used. Plays the role of the reference's JSON
@@ -98,6 +103,10 @@ class Snapshot:
     # are never pruned (older files stay safe after enabling stats).
     stats_cols: list[str] | None = None
     file_stats: dict = field(default_factory=dict)
+    # {relpath: bytes} for every live file, recorded at commit time.
+    # Metadata written before sizes were recorded has none: readers treat
+    # a missing size as unknown, never as 0.
+    file_bytes: dict = field(default_factory=dict)
 
     @property
     def all_files(self) -> list[str]:
@@ -128,14 +137,14 @@ class LakeTable:
         t = cls(path)
         if t.exists():
             raise FileExistsError(f"table already exists at {path}")
-        os.makedirs(t.meta_dir, exist_ok=True)
-        os.makedirs(t.data_dir, exist_ok=True)
         for k in key_cols:
             if k not in schema.fieldNames():
                 raise ValueError(f"key column {k!r} not in schema")
         if bucket_cols is not None:
             if not bucket_cols or any(c not in key_cols for c in bucket_cols):
                 raise ValueError("bucket_cols must be a non-empty subset of key_cols")
+        os.makedirs(t.meta_dir, exist_ok=True)
+        os.makedirs(t.data_dir, exist_ok=True)
         t._write_meta(
             version=1,
             schema=schema,
@@ -185,6 +194,7 @@ class LakeTable:
             bucket_cols=m.get("bucket_cols"),
             stats_cols=m.get("stats_cols"),
             file_stats=m.get("file_stats", {}),
+            file_bytes=m.get("file_bytes", {}),
         )
 
     # -- read ----------------------------------------------------------------
@@ -197,11 +207,10 @@ class LakeTable:
         long/double are upcast by the parquet vectorized reader.
         """
         snap = self.snapshot(version)
-        return self.scan(spark, snap.schema, [os.path.join(self.path, f) for f in snap.all_files])
+        return self.scan(spark, snap.schema, snap.all_files)
 
     def read_buckets(self, spark: SparkSession, buckets: list[int], snap: Snapshot) -> DataFrame:
-        paths = [os.path.join(self.path, f) for b in buckets for f in snap.files.get(b, [])]
-        return self.scan(spark, snap.schema, paths)
+        return self.scan(spark, snap.schema, [f for b in buckets for f in snap.files.get(b, [])])
 
     def read_probed_buckets(self, spark: SparkSession, probe: DataFrame, snap: Snapshot) -> DataFrame:
         """The buckets ``probe``'s rows hash into, scanned: its distinct
@@ -211,17 +220,18 @@ class LakeTable:
         rows = probe.select(self.bucket_expr(snap).alias("_b")).distinct().collect()
         return self.read_buckets(spark, sorted(r["_b"] for r in rows), snap)
 
-    @staticmethod
-    def scan(spark: SparkSession, schema: T.StructType, paths: list[str]) -> DataFrame:
-        """One parquet scan of ``paths`` (absolute) through ``schema``; an
-        empty frame of ``schema`` when there are no files.
+    def scan(self, spark: SparkSession, schema: T.StructType, files: list[str]) -> DataFrame:
+        """One parquet scan of this table's ``files`` (table-relative
+        names, as snapshots and commit summaries hold them) through
+        ``schema``; an empty frame of ``schema`` when there are no files.
 
         The path list crosses to the JVM as ONE newline-joined string split
         there: ``DataFrameReader.parquet(*paths)`` converts the list with
         one py4j round trip per path (an 8-commit, 64-file change feed spent
         90 of its 216 planning round trips on them)."""
-        if not paths:
+        if not files:
             return spark.createDataFrame([], schema)
+        paths = [os.path.join(self.path, f) for f in files]
         jvm = spark._jvm
         jpaths = jvm.java.util.regex.Pattern.compile("\n").splitAsStream("\n".join(paths)).toList()
         seq = jvm.PythonUtils.toSeq(jpaths)
@@ -264,7 +274,7 @@ class LakeTable:
         which passes ``lower_only`` and filters after LWW)."""
         snap = snap or self.snapshot()
         keep, _ = self.pruned_files(snap, ranges, lower_only=lower_only)
-        df = self.scan(spark, snap.schema, [os.path.join(self.path, f) for f in keep])
+        df = self.scan(spark, snap.schema, keep)
         if not lower_only:
             for c, (lo, hi) in ranges.items():
                 if lo is not None:
@@ -273,8 +283,10 @@ class LakeTable:
                     df = df.filter(F.col(c) <= hi)
         return df
 
-    def _collect_file_stats(self, rel_paths: list[str], stats_cols: list[str]) -> dict:
-        """Per-file column bounds from parquet FOOTERS (metadata-only read,
+    def _collect_file_stats(self, rel_paths: list[str], stats_cols: list[str] | None) -> tuple[dict, dict]:
+        """Per-file manifest entries of new files: ``({relpath: bytes},
+        {relpath: {col: [min, max]}})``. Every file is sized; bounds of
+        ``stats_cols`` come from parquet FOOTERS (metadata-only read,
         ~ms/file at commit time — the cost every lake format's manifest
         write pays). Values must round-trip JSON: ints, floats and strings
         are recorded; anything else (or a missing/untyped stat) leaves the
@@ -284,7 +296,11 @@ class LakeTable:
         import pyarrow.parquet as pq
 
         def one(rel: str):
-            md = pq.ParquetFile(os.path.join(self.path, rel)).metadata
+            path = os.path.join(self.path, rel)
+            size = os.path.getsize(path)
+            if not stats_cols:
+                return rel, size, {}
+            md = pq.ParquetFile(path).metadata
             bounds: dict = {}
             for ci in range(md.num_columns):
                 name = md.row_group(0).column(ci).path_in_schema if md.num_row_groups else None
@@ -305,19 +321,18 @@ class LakeTable:
                     mx = hi if mx is None else max(mx, hi)
                 if ok and mn is not None:
                     bounds[name] = [mn, mx]
-            return rel, bounds
+            return rel, size, bounds
 
-        if not rel_paths:
-            return {}
         # footer reads are independent ~ms I/O calls: a small thread pool
         # makes a many-file commit pay ~max, not ~sum, of footer latencies
-        # (VERDICT r5 nit (a)); a single file skips the pool entirely.
-        if len(rel_paths) == 1:
-            results = [one(rel_paths[0])]
+        # (VERDICT r5 nit (a)); a single file, or sizes alone, skip it.
+        if len(rel_paths) <= 1 or not stats_cols:
+            results = [one(rel) for rel in rel_paths]
         else:
             with ThreadPoolExecutor(max_workers=min(16, len(rel_paths))) as pool:
                 results = list(pool.map(one, rel_paths))
-        return {rel: bounds for rel, bounds in results if bounds}
+        return ({rel: size for rel, size, _ in results},
+                {rel: bounds for rel, _, bounds in results if bounds})
 
     # -- write ---------------------------------------------------------------
 
@@ -425,15 +440,14 @@ class LakeTable:
             files[b] = fl if b in replaced_buckets else files[b] + fl
         props = dict(cur.properties)
         props.update(properties or {})
-        # file-skipping stats: carry bounds of surviving files, footer-read
+        # manifest entries: carry sizes and bounds of surviving files, read
         # the new ones (centralized here so every writer — merge, compact,
-        # rebucket, index maintenance — gets manifest stats for free)
-        file_stats: dict = {}
-        if cur.stats_cols:
-            live = {f for fl in files.values() for f in fl}
-            file_stats = {f: s for f, s in cur.file_stats.items() if f in live}
-            new_paths = [f for fl in new_files_by_bucket.values() for f in fl]
-            file_stats.update(self._collect_file_stats(new_paths, cur.stats_cols))
+        # rebucket, index maintenance — records them for free)
+        live = {f for fl in files.values() for f in fl}
+        new_bytes, new_stats = self._collect_file_stats(
+            [f for fl in new_files_by_bucket.values() for f in fl], cur.stats_cols)
+        file_bytes = {f: n for f, n in cur.file_bytes.items() if f in live} | new_bytes
+        file_stats = {f: st for f, st in cur.file_stats.items() if f in live} | new_stats
         self._write_meta(
             version=cur.version + 1,
             schema=schema or cur.schema,
@@ -445,11 +459,12 @@ class LakeTable:
             bucket_cols=cur.bucket_cols,
             stats_cols=cur.stats_cols,
             file_stats=file_stats,
+            file_bytes=file_bytes,
         )
         return self.snapshot()
 
     def _write_meta(self, version, schema, num_buckets, key_cols, files, properties, summary,
-                    bucket_cols=None, stats_cols=None, file_stats=None):
+                    bucket_cols=None, stats_cols=None, file_stats=None, file_bytes=None):
         meta = {
             "version": version,
             "schema": schema.jsonValue(),
@@ -459,6 +474,7 @@ class LakeTable:
             "properties": properties,
             "summary": summary,
             "timestamp_ms": int(time.time() * 1000),
+            "file_bytes": file_bytes or {},
         }
         if bucket_cols:
             meta["bucket_cols"] = list(bucket_cols)
@@ -512,12 +528,12 @@ class LakeTable:
         todo = {b: fl for b, fl in snap.files.items() if len(fl) >= min_files}
         if not todo:
             return None
-        paths = [os.path.join(self.path, f) for fl in todo.values() for f in fl]
-        df = self.scan(spark, snap.schema, paths)
+        files = [f for fl in todo.values() for f in fl]
+        df = self.scan(spark, snap.schema, files)
         if transform is not None:
             df = transform(df)
         return self.rewrite(df, snap, todo, "compact", properties=properties,
-                            summary={"buckets": len(todo), "files_in": len(paths)})
+                            summary={"buckets": len(todo), "files_in": len(files)})
 
     def rebucket(self, spark: SparkSession, new_num_buckets: int) -> "Snapshot | None":
         """Bucket-spec evolution (the Iceberg partition-spec-evolution

@@ -175,7 +175,7 @@ def extract_pointer(
     line numbers -> pointer emits ranges -> slice + strip -> dedup/join.
     ``pointer_pattern`` drives the deterministic regex pointer; swap
     ``point_lines_regex`` for an LLM-backed stage (through
-    cdc.middleware) without touching the rest of the pipeline."""
+    operators.middleware) without touching the rest of the pipeline."""
     for key in document_keys:
         fmt = reformat_with_line_numbers(key, line_width)
         df = df.withColumn(f"_fmt_{key}", fmt)

@@ -5,7 +5,7 @@ The reference produces a total LLM-judged ordering in two phases:
 1. an initial ordering (``embedding`` / ``likert`` / ``calibrated_embedding``
    — all scoring passes, rank.py:700-737); here the deterministic analogue
    is a vectorized ``score`` expression (pluggable, so an LLM-backed batch
-   scorer slots in through the middleware stack);
+   scorer slots in through the ``operators.middleware`` stack);
 2. a budgeted sliding "picky window" refinement (rank.py:744-870): exactly
    ``rerank_call_budget`` windows slide from the bottom of the top-k slice
    upward with ``overlap_fraction`` overlap; each call picks the
@@ -151,7 +151,7 @@ def rank(
     or ``score_fn`` (Arrow-batched pandas scorer — the plug point for the
     reference's likert / calibrated_embedding raters, rank.py:498,:988: an
     LLM-backed per-doc rating slots in here, composable with
-    ``middleware.cached``/``rate_limited``/``validated``).
+    ``operators.middleware.cached``/``rate_limited``/``validated``).
 
     With ``k``, only the top-k are returned (TakeOrderedAndProject — no
     global sort). Without ``k``, ranks come from range-partitioned
@@ -243,7 +243,7 @@ def likert_score_fn(
     input-order batches of ``batch_size``; out-of-range / missing ratings
     fall back to the neutral 4 (rank.py:646-649). ``rater(batch_pdf,
     context_pdf) -> list[int]`` is the pluggable LLM stand-in — an
-    LLM-backed rater slots in through ``cdc.middleware.cached`` /
+    LLM-backed rater slots in through ``operators.middleware.cached`` /
     ``validated`` exactly like any other batch transform. ``context`` is
     the calibration sample the reference renders into every prompt
     (rank.py:524-537).

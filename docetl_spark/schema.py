@@ -72,7 +72,8 @@ def parse_type(spec: str) -> T.DataType:
 
 
 def enum_values(spec: str) -> list[str] | None:
-    """Return allowed values if ``spec`` is an enum type, else None."""
+    """Return allowed values if ``spec`` is an enum type, else None: the
+    reference's ``enum[a, b, c]`` output type (validation.py:139-142)."""
     m = _ENUM_RE.match(spec.strip().lower())
     if not m:
         return None

@@ -34,7 +34,9 @@ def stateful_fold(
     order_col: str = "lsn",
     init_state: dict | None = None,
 ) -> DataFrame:
-    """Fold a streaming DataFrame per key with carried scratchpad state.
+    """Fold a streaming DataFrame per key with carried scratchpad state:
+    the reference's ordered reduce fold with ``updated_scratchpad``
+    (reduce.py:631-699), one microbatch at a time.
 
     Output schema: group keys + the state fields. Works on a streaming
     ``changes`` frame; each trigger emits the post-fold state for every

@@ -1,6 +1,9 @@
 """Training-data pipeline toolkit: dedup, similarity search, text analysis,
 multimodal plumbing."""
 
+import io
+import wave
+
 import numpy as np
 import pytest
 from pyspark.sql import Row
@@ -14,7 +17,6 @@ from docetl_spark.functions.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash,
-    simhash_pairs,
 )
 from docetl_spark.functions.text import (
     bpe_ish_token_count,
@@ -68,8 +70,6 @@ def test_simhash_near_dup_and_determinism(spark, docs):
     ham01 = bin(vals[0] ^ vals[1]).count("1")
     ham03 = bin(vals[0] ^ vals[3]).count("1")
     assert ham01 == 0 and ham03 > 10
-    pairs = simhash_pairs(docs, "id", "text", max_hamming=3)
-    assert (0, 1) in {(r["_id1"], r["_id2"]) for r in pairs.collect()}
 
 
 def test_ngram_jaccard(spark, docs):
@@ -272,10 +272,6 @@ def test_multimodal_stub_and_plumbing(spark):
     finally:
         multimodal.set_decoder(None)
 
-    frames = multimodal.frame_sample(df.filter("id = 2"), "blob", "meta", every_ms=1000)
-    assert frames.count() == 3
-    assert [r["frame_ts_ms"] for r in frames.orderBy("frame_ts_ms").collect()] == [0, 1000, 2000]
-
 
 def test_knn_lsh_recall_vs_brute(spark):
     """Quantified quality bound for the approximate path on CLUSTERED
@@ -317,30 +313,39 @@ def test_minhash_lsh_recall_vs_exact_jaccard(spark, docs):
     assert recall >= 0.7, f"minhash recall {recall:.2f} below bound"
 
 
+def _encode_wav(samples, sample_rate):
+    """float samples in [-1, 1] -> 16-bit PCM WAV bytes (test input)."""
+    arr = np.asarray(samples, dtype="float64")
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1 if arr.ndim == 1 else arr.shape[1])
+        w.setsampwidth(2)
+        w.setframerate(sample_rate)
+        w.writeframes(np.clip(arr * 32767.0, -32768, 32767).astype("<i2").tobytes())
+    return buf.getvalue()
+
+
 def test_wav_bmp_native_decode_roundtrip():
     # WAV: 16-bit PCM round trip within quantization error
     t = np.linspace(0, 1, 1600, endpoint=False)
     sig = 0.5 * np.sin(2 * np.pi * 440 * t)
-    blob = multimodal.encode_wav(sig, sample_rate=1600)
+    blob = _encode_wav(sig, sample_rate=1600)
     back = multimodal.decode_wav(blob)
     assert back.shape == (1600,)
     assert np.abs(back - sig).max() < 1e-3
     # stereo shape
-    st = multimodal.decode_wav(multimodal.encode_wav(np.stack([sig, -sig], axis=1), 1600))
+    st = multimodal.decode_wav(_encode_wav(np.stack([sig, -sig], axis=1), 1600))
     assert st.shape == (1600, 2)
 
     # BMP: exact byte-level round trip incl. row padding (odd width)
     img = (np.arange(5 * 3 * 3, dtype=np.uint8)).reshape(5, 3, 3)
     blob = multimodal.encode_bmp(img)
     assert np.array_equal(multimodal.decode_bmp(blob), img)
-    # nearest resize halves deterministically
-    big = np.repeat(np.repeat(img, 2, axis=0), 2, axis=1)
-    assert np.array_equal(multimodal.resize_nearest(big, 5, 3), img)
 
 
 def test_multimodal_native_formats_through_spark(spark):
     t = np.linspace(0, 1, 800, endpoint=False)
-    wav_blob = multimodal.encode_wav(0.25 * np.sin(2 * np.pi * 5 * t), 800)
+    wav_blob = _encode_wav(0.25 * np.sin(2 * np.pi * 5 * t), 800)
     img = np.full((4, 6, 3), 100, dtype=np.uint8)
     bmp_blob = multimodal.encode_bmp(img)
     schema = multimodal.T.StructType([
@@ -362,15 +367,8 @@ def test_multimodal_native_formats_through_spark(spark):
     assert abs(out[1]["feat_std"] - 0.25 / np.sqrt(2)) < 1e-2
     assert out[2]["feat_mean"] == 100.0 and out[2]["feat_n"] == 4 * 6 * 3
 
-    # distributed decode -> resize -> re-encode round trip
-    resized = multimodal.resize_images(df.filter("id = 2"), "blob", "meta", 2, 3)
-    r = resized.collect()[0]
-    assert r["meta"]["width"] == 3 and r["meta"]["height"] == 2
-    back = multimodal.decode_bmp(bytes(r["blob"]))
-    assert back.shape == (2, 3, 3) and (back == 100).all()
-
     # codec formats still route to the pluggable decoder / raise without one
-    jdf = df.withColumn("meta", multimodal.F.col("meta").withField("format", multimodal.F.lit("jpeg")))
+    jdf = df.withColumn("meta", F.col("meta").withField("format", F.lit("jpeg")))
     with pytest.raises(Exception) as ei:
         multimodal.extract_features(jdf, "blob", "meta").collect()
     assert "NotImplementedError" in str(ei.value) or "codec" in str(ei.value)

@@ -6,7 +6,7 @@ import time
 
 import pandas as pd
 
-from docetl_spark.cdc.middleware import as_stage, cached, rate_limited
+from docetl_spark.operators.middleware import as_stage, cached, rate_limited
 
 # defined per-test as local closures so cloudpickle ships them by value
 # to executors (a module-level fn in a test file isn't importable there)
@@ -63,7 +63,7 @@ def test_validated_retries_until_pass():
         out["val"] = pdf["doc_id"].where(attempt.to_numpy() >= 1, -1)
         return out
 
-    from docetl_spark.cdc.middleware import validated
+    from docetl_spark.operators.middleware import validated
 
     wrapped = validated(fn, rule=lambda out: out["val"] >= 0, num_retries=2)
     got = wrapped(pd.DataFrame({"doc_id": [1, 2, 3]}))
@@ -71,7 +71,7 @@ def test_validated_retries_until_pass():
 
 
 def test_validated_round_cap_and_on_fail():
-    from docetl_spark.cdc.middleware import validated
+    from docetl_spark.operators.middleware import validated
 
     calls = {"n": 0}
 
@@ -95,7 +95,7 @@ def test_validated_round_cap_and_on_fail():
 
 
 def test_validated_only_failing_rows_retry():
-    from docetl_spark.cdc.middleware import validated
+    from docetl_spark.operators.middleware import validated
 
     seen = []
 
@@ -114,7 +114,7 @@ def test_validated_only_failing_rows_retry():
 
 
 def test_gleaned_refine_rounds_and_early_exit():
-    from docetl_spark.cdc.middleware import gleaned
+    from docetl_spark.operators.middleware import gleaned
 
     rounds_seen = []
 
@@ -139,7 +139,7 @@ def test_gleaned_refine_rounds_and_early_exit():
 
 
 def test_gleaned_composes_with_cache(tmp_path):
-    from docetl_spark.cdc.middleware import cached, gleaned
+    from docetl_spark.operators.middleware import cached, gleaned
 
     work = {"fn": 0, "refine": 0}
 
@@ -165,7 +165,7 @@ def test_gleaned_composes_with_cache(tmp_path):
 
 
 def test_validated_through_spark_stage(spark):
-    from docetl_spark.cdc.middleware import as_stage, validated
+    from docetl_spark.operators.middleware import as_stage, validated
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         attempt = pdf["_retry_attempt"] if "_retry_attempt" in pdf.columns else pd.Series(0, index=pdf.index)
@@ -190,7 +190,7 @@ def test_validated_retry_preserves_dtypes_and_rejects_column_drift():
             "s": ["ok" if attempt else "bad"] * len(pdf),
         })
 
-    wrapped = __import__("docetl_spark.cdc.middleware", fromlist=["validated"]).validated(
+    wrapped = __import__("docetl_spark.operators.middleware", fromlist=["validated"]).validated(
         fn, rule=lambda out: out["s"] == "ok", num_retries=2
     )
     out = wrapped(pd.DataFrame({"x": [1, 2, 3]}))
@@ -203,7 +203,7 @@ def test_validated_retry_preserves_dtypes_and_rejects_column_drift():
             return pd.DataFrame({"n": pdf["x"], "extra": pdf["x"]})
         return pd.DataFrame({"n": pdf["x"], "s": ["bad"] * len(pdf)})
 
-    wrapped2 = __import__("docetl_spark.cdc.middleware", fromlist=["validated"]).validated(
+    wrapped2 = __import__("docetl_spark.operators.middleware", fromlist=["validated"]).validated(
         drifting, rule=lambda out: out["s"] == "ok", num_retries=1
     )
     with pytest.raises(ValueError, match="changed the output columns"):
@@ -212,7 +212,7 @@ def test_validated_retry_preserves_dtypes_and_rejects_column_drift():
 
 def test_calibrate_improves_config_then_converges():
     # reference map.py:182-253: sample -> improve config -> rebuilt fn
-    from docetl_spark.cdc.middleware import calibrate
+    from docetl_spark.operators.middleware import calibrate
 
     def make_fn(cfg):
         def fn(pdf):
@@ -237,7 +237,7 @@ def test_observed_system_column(spark):
     provenance from the middleware stack, linking rows to the cache key."""
     import json
 
-    from docetl_spark.cdc.middleware import _batch_key, as_stage, observed
+    from docetl_spark.operators.middleware import _batch_key, as_stage, observed
 
     def fn(pdf):
         out = pdf.copy()

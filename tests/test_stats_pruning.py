@@ -88,7 +88,13 @@ def test_read_pruned_two_sided_on_single_version_table(spark, tmp_path, events):
 
 
 def test_stats_disabled_still_correct(spark, tmp_path, events):
-    t = create_cdc_table(str(tmp_path / "t"), KEYS, num_buckets=8, stats_cols=None)
+    # a CDC-shaped table created without stats_cols (create_cdc_table
+    # always tracks lsn)
+    schema = T.StructType(
+        [T.StructField(k, T.StringType(), False) for k in KEYS]
+        + [T.StructField("lsn", T.LongType(), True), T.StructField("_deleted", T.BooleanType(), True)]
+    )
+    t = LakeTable.create(str(tmp_path / "t"), schema, KEYS, num_buckets=8)
     replay_events(spark, t, events, mode="mor")
     snap = t.snapshot()
     assert snap.stats_cols is None and snap.file_stats == {}

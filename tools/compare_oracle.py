@@ -3,6 +3,10 @@ its DuckDB oracle at a given sf dir and reports rows/schema/value matches
 (a local stand-in for the driver's CORRECTNESS_r{N}.json gate).
 
 Usage: python tools/compare_oracle.py [sf_dir] [query ...]
+
+Each result line carries the wall seconds of both sides: first the Spark
+query's build + ``toPandas``, then ``duckdb=`` the oracle SQL's execute +
+fetch.
 """
 
 from __future__ import annotations
@@ -79,6 +83,7 @@ def main():
             if len(got) == 0:
                 print(f"  WARNING: zero rows")
             continue
+        t1 = time.time()
         try:
             want = con.execute(oracles[name]).fetchdf()
         except Exception as e:
@@ -89,7 +94,8 @@ def main():
         status = "OK   " if ok else "FAIL "
         if not ok:
             failures.append(name)
-        print(f"{status} {name}: spark={len(got)} oracle={len(want)} {dt:.1f}s {'' if ok else why}")
+        print(f"{status} {name}: spark={len(got)} oracle={len(want)} "
+              f"{dt:.1f}s duckdb={time.time() - t1:.1f}s {'' if ok else why}")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
 
